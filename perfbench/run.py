@@ -1,6 +1,6 @@
 """Benchmark entry point: one run of one workload.
 
-    python3 perfbench/run.py --workload batch_exact --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload batch_exact --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. The run's work happens in a child
 process (perfbench/worker.py) started in a session of its own, with
@@ -95,6 +95,9 @@ def _host_env(work: str) -> dict:
         cpus = len(os.sched_getaffinity(0))
     except AttributeError:
         pass
+    # a Spark task keeps a JVM thread and a Python worker busy at once:
+    # local[nproc] would run more threads than CPUs and time the scheduler
+    cpus = max(1, cpus // 2)
     with open("/proc/meminfo") as f:
         mem_kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     driver_gib = max(1, min(4, mem_kib // (1024 * 1024) // 6))

@@ -36,10 +36,10 @@ DIGESTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "digests.json
 
 #: per-workload input sizes (README.md explains the choice)
 SIZES = {
-    "batch_exact": {"targets": 3000, "queries": 100, "warm_ops": 3},
+    "batch_exact": {"targets": 3000, "queries": 100, "warm_ops": 4},
     "multidb_default": {"targets": 900, "sets": 3, "queries": 20, "warm_ops": 2},
     "interactive_mixed": {"targets": 1000, "probe_pool": 16, "delta": 100, "deltas": 6,
-                          "num_shards": 16, "warm_probes": 1, "probes_per_append": 4},
+                          "num_shards": 16, "warm_probes": 2, "probes_per_append": 5},
 }
 #: the first Spark work of a process runs 2-3x slower than the same work
 #: warm; a setup's index build is timed after building one of this many
@@ -103,7 +103,8 @@ class Run:
         self.sizes = SIZES[args.workload]
         self.tracer = Tracer() if args.trace else None
         self.corpus = gen.Corpus(args.seed)
-        self.ops: list[dict] = []  # {"kind", "s", "queries", "jobs", "tasks", ...}
+        self.ops: list[dict] = []  # {"kind", "cycle", "s", "queries", "jobs", "tasks", ...}
+        self.cycle = 0
         self.traced_s: list[float] = []
         self.attempted = 0
         self.failed = 0
@@ -170,8 +171,8 @@ class Run:
             for sid in info.stageIds if info else ():
                 st = tracker.getStageInfo(sid)
                 tasks += st.numCompletedTasks if st else 0
-        self.ops.append({"kind": kind, "s": dt, "queries": queries, "jobs": len(new),
-                         "tasks": tasks, "steal_s": steal, "cpu_s": cpu})
+        self.ops.append({"kind": kind, "cycle": self.cycle, "s": dt, "queries": queries,
+                         "jobs": len(new), "tasks": tasks, "steal_s": steal, "cpu_s": cpu})
         print(f"perfbench: {kind} {dt:.3f} s, {len(new)} jobs, {tasks} tasks,"
               f" steal {steal:.2f} s, cpu {cpu:.2f} s", file=sys.stderr)
         self.clear()
@@ -641,6 +642,18 @@ def _tail(values: list[float]) -> tuple[float | None, int | None]:
     return statistics.quantiles(values, n=100)[pct - 1], pct
 
 
+def _cycle_rate(ops: list[dict]) -> float:
+    """Median over cycles of queries searched per second of the cycle's
+    timed ops: the closed loop's rate, appends taking their share of the
+    time. A median, so that a cycle slowed by the host does not set it."""
+    queries: dict[int, int] = {}
+    secs: dict[int, float] = {}
+    for o in ops:
+        queries[o["cycle"]] = queries.get(o["cycle"], 0) + o["queries"]
+        secs[o["cycle"]] = secs.get(o["cycle"], 0.0) + o["s"]
+    return statistics.median(queries[c] / secs[c] for c in secs)
+
+
 def align_sample(r: Run, reps: int = 3) -> dict:
     """Time the pure alignment kernels in-process on the pair sample
     recorded from the last staged op: find_anchor_diag per pair, then
@@ -757,11 +770,15 @@ def main(argv=None) -> int:
     t1 = time.perf_counter()
     _log("set up", t0)
 
-    n = 0
+    # whole cycles, as many as end nearest the deadline: a cycle of
+    # interactive_mixed is an append and several probes
+    n, now = 0, t1
     deadline = t1 + args.seconds
-    while n == 0 or time.perf_counter() < deadline:
+    while n == 0 or now + (now - t1) / (2 * n) < deadline:
         n += 1
+        r.cycle = n
         w.cycle(bool(args.trace), n)
+        now = time.perf_counter()
     _log("measured", t0)
     w.final_check()
     _log("checked", t0)
@@ -776,8 +793,7 @@ def main(argv=None) -> int:
         "problems": r.problems,
         "e2e": {
             "setup_s": t1 - t0,
-            # the closed loop's rate: appends take their share of the time
-            "queries_per_s": sum(o["queries"] for o in searches) / sum(o["s"] for o in r.ops),
+            "queries_per_s": _cycle_rate(r.ops),
             "search_p50_s": statistics.median(lat),
         },
         "extra": {
