@@ -155,6 +155,19 @@ def banded_sw(
 
 
 _NEG = np.int32(-(10 ** 9))
+_OFF_QUERY = -2  # query code of a band cell outside the query
+
+
+def band_rows(qlen, tlen, anchors, band: int = DEFAULT_BAND):
+    """Per pair, the target rows where the band around ``anchors`` meets
+    the query: ``(r_lo, span)``, rows ``[r_lo, r_lo + span)``. Row i has a
+    valid band cell only if ``-d_lo - band <= i < qlen - d_lo`` (d_lo =
+    anchor - band//2 is the query column of slot 0 at row 0); every other
+    row scores 0 everywhere. Works on ints and on numpy arrays."""
+    d_lo = np.asarray(anchors, dtype=np.int64) - band // 2
+    r_lo = np.maximum(0, -d_lo - band)
+    span = np.maximum(0, np.minimum(tlen, qlen - d_lo) - r_lo)
+    return r_lo, span
 
 
 def banded_sw_batch(
@@ -176,9 +189,20 @@ def banded_sw_batch(
     (E[b] depends on H[b-1] which depends on E[b-1]) is solved lazily:
     compute H without E, derive all E by one prefix-max scan, raise H,
     repeat until fixpoint (≥1 pass, ~always ≤2 — same trick as striped SW's
-    lazy-F loop). Traceback needs only a uint8 pointer byte per cell
-    (2 bits H-source, 1 bit E-extend, 1 bit F-extend), so memory stays
-    P × max_tlen × (band+1) bytes.
+    lazy-F loop).
+
+    Only the rows where a pair's band meets the query are computed
+    (:func:`band_rows`): pair p runs its own rows ``[r_lo, r_lo + span)``
+    as local rows ``0..span-1``. Pairs are sorted by span, longest first,
+    so local row i runs on the live PREFIX of pairs whose span exceeds i —
+    the prefix shrinks as short pairs finish. This is exact: outside the
+    span every band cell is invalid, so H is 0 there and never beats the
+    running best (strict ``>``); F stays at -gap_open through such rows,
+    which is what the first computed row derives from H=0, F=-inf; and the
+    traceback, which stops at the first H=0 cell, never needs a row before
+    the span (it ends the walk on reaching local row -1). Traceback
+    needs only a uint8 pointer byte per cell (2 bits H-source, 1 bit
+    E-extend, 1 bit F-extend), so memory is P × max span × (band+1) bytes.
 
     ``xdrop``: the reference's frontier rule (BlockAligner.cpp:60-93) —
     a pair stops extending at the first target row whose best band cell
@@ -186,47 +210,58 @@ def banded_sw_batch(
     is the best cell seen before termination. None (engine default, see
     DEFAULT_XDROP) = full banded Gotoh, never less sensitive.
 
-    Returns a list (len P) of None / dict with raw score, 0-based
-    [qstart,qend) / [tstart,tend), backtrace (M = aligned pair, I = query
-    residue vs target gap, D = target residue vs query gap), and P7 stats.
+    Returns a list (len P, input order) of None / dict with raw score,
+    0-based [qstart,qend) / [tstart,tend), backtrace (M = aligned pair,
+    I = query residue vs target gap, D = target residue vs query gap), and
+    P7 stats.
     """
     P = len(qcs)
-    half = band // 2
     B = band + 1
     qlen = np.fromiter((len(q) for q in qcs), dtype=np.int64, count=P)
     tlen = np.fromiter((len(t) for t in tcs), dtype=np.int64, count=P)
-    d_lo = np.asarray(anchors, dtype=np.int64) - half
-    nqm, ntm = max(1, int(qlen.max())), max(1, int(tlen.max()))
-    qpad = np.full((P, nqm), -1, dtype=np.int64)
-    tpad = np.full((P, ntm), -1, dtype=np.int64)
-    for p in range(P):
-        qpad[p, : qlen[p]] = qcs[p]
-        tpad[p, : tlen[p]] = tcs[p]
+    anchors = np.asarray(anchors, dtype=np.int64)
+    r_lo, span = band_rows(qlen, tlen, anchors, band)
+    order = np.argsort(-span, kind="stable")
+    qlen, span, r_lo = qlen[order], span[order], r_lo[order]
+    d_lo = anchors[order] - band // 2
+    nqm, nrows = max(1, int(qlen.max(initial=0))), int(span.max(initial=0))
+    # query codes padded by `band` columns of _OFF_QUERY on each side: in
+    # a span, band slot b of local row i reads query column
+    # j = d_lo + r_lo + i + b, and -band <= j < qlen + band there
+    qpad = np.full((P, nqm + 2 * band), _OFF_QUERY, dtype=np.int64)
+    tpad = np.full((P, nrows), -1, dtype=np.int64)
+    for k, p in enumerate(order):
+        qpad[k, band : band + qlen[k]] = qcs[p]
+        tpad[k, : span[k]] = tcs[p][r_lo[k] : r_lo[k] + span[k]]
+    qwin = np.lib.stride_tricks.sliding_window_view(qpad, B, axis=1)
+    q0 = band + d_lo + r_lo  # window of local row 0
+    # live[i] = number of pairs whose span exceeds local row i
+    live = np.searchsorted(-span, -np.arange(nrows), side="left")
 
     bidx = np.arange(B, dtype=np.int64)
     ext_ramp = (bidx * gap_extend).astype(np.int32)
     e_offset = (gap_open + (bidx - 1) * gap_extend).astype(np.int32)
-    base_j = d_lo[:, None] + bidx[None, :]  # query index at row 0, (P, B)
-    mat32 = matrix.astype(np.int32)
+    # substitution scores with two extra codes, -1 (invalid residue) and
+    # _OFF_QUERY, both scoring -1
+    mat32 = np.full((len(matrix) + 2, len(matrix) + 2), -1, dtype=np.int32)
+    mat32[: len(matrix), : len(matrix)] = matrix
 
     H_prev = np.zeros((P, B), dtype=np.int32)
     F_prev = np.full((P, B), _NEG, dtype=np.int32)
-    ptr = np.zeros((P, ntm, B), dtype=np.uint8)
+    ptr = np.zeros((P, nrows, B), dtype=np.uint8)
     best = np.zeros(P, dtype=np.int32)
     best_i = np.zeros(P, dtype=np.int64)
     best_b = np.zeros(P, dtype=np.int64)
     prange = np.arange(P)
     active = np.ones(P, dtype=bool)  # pairs still extending (x-drop mode)
 
-    for i in range(ntm):
-        j = base_j + i
-        valid = (j >= 0) & (j < qlen[:, None]) & (i < tlen)[:, None]
-        qcodes = np.take_along_axis(qpad, np.clip(j, 0, nqm - 1), axis=1)
-        tcode = tpad[:, i]
-        ok = valid & (qcodes >= 0) & (tcode >= 0)[:, None]
-        sub = np.where(
-            ok, mat32[np.clip(tcode, 0, None)[:, None], np.clip(qcodes, 0, None)], -1
-        ).astype(np.int32)
+    for i in range(nrows):
+        n = int(live[i])
+        H_prev, F_prev = H_prev[:n], F_prev[:n]
+        qcodes = qwin[prange[:n], q0[:n] + i]
+        valid = qcodes != _OFF_QUERY
+        invalid = ~valid
+        sub = mat32[tpad[:n, i, None], qcodes]
         # F: previous row, band slot b+1 (same query column)
         f_open = np.empty_like(H_prev)
         f_ext = np.empty_like(F_prev)
@@ -238,13 +273,13 @@ def banded_sw_batch(
         fext_bit = f_ext > f_open
         diag_sc = H_prev + sub
         H_row = np.maximum(0, np.maximum(diag_sc, F_row)).astype(np.int32)
-        H_row[~valid] = 0
+        H_row[invalid] = 0
         # E via prefix-max scan, iterated to fixpoint (lazy-E)
         while True:
             run = np.maximum.accumulate(H_row + ext_ramp, axis=1)
-            E_row = np.full((P, B), _NEG, dtype=np.int32)
+            E_row = np.full((n, B), _NEG, dtype=np.int32)
             E_row[:, 1:] = run[:, :-1] - e_offset[1:]
-            E_row[~valid] = _NEG
+            E_row[invalid] = _NEG
             improved = (E_row > H_row) & valid
             if not improved.any():
                 break
@@ -254,42 +289,39 @@ def banded_sw_batch(
         hsrc = np.where(
             H_row <= 0, 0, np.where(H_row == diag_sc, 1, np.where(H_row == E_row, 2, 3))
         ).astype(np.uint8)
-        eext_bit = np.zeros((P, B), dtype=bool)
+        eext_bit = np.zeros((n, B), dtype=bool)
         eext_bit[:, 1:] = (E_row[:, :-1] - gap_extend) > (H_row[:, :-1] - gap_open)
-        ptr[:, i, :] = hsrc | (eext_bit.astype(np.uint8) << 2) | (fext_bit.astype(np.uint8) << 3)
+        ptr[:n, i, :] = hsrc | (eext_bit.astype(np.uint8) << 2) | (fext_bit.astype(np.uint8) << 3)
         rb = H_row.argmax(axis=1)
-        rm = H_row[prange, rb]
-        upd = rm > best  # strict: earliest row, then lowest slot, wins ties
+        rm = H_row[prange[:n], rb]
+        upd = rm > best[:n]  # strict: earliest row, then lowest slot, wins ties
         if xdrop is not None:
-            upd &= active
-        best[upd] = rm[upd]
-        best_i[upd] = i
-        best_b[upd] = rb[upd]
+            upd &= active[:n]
+        best[:n][upd] = rm[upd]
+        best_i[:n][upd] = i
+        best_b[:n][upd] = rb[upd]
         if xdrop is not None:
             # frontier rule AFTER the best update (the reference raises
             # best, then tests the drop) — terminated pairs keep their
             # recorded best cell and never update again
-            active &= ~(rm < best - xdrop)
-            if not active.any():
+            active[:n] &= ~(rm < best[:n] - xdrop)
+            if not active[:n].any():
                 break
         H_prev, F_prev = H_row, F_row
 
-    out = []
-    for p in range(P):
-        if best[p] <= 0:
-            out.append(None)
-            continue
-        out.append(
-            _traceback(
-                ptr[p], int(best[p]), int(best_i[p]), int(best_b[p]), int(d_lo[p]),
-                qcs[p], tcs[p],
+    out = [None] * P
+    for k, p in enumerate(order):
+        if best[k] > 0:
+            out[p] = _traceback(
+                ptr[k], int(best[k]), int(best_i[k]), int(best_b[k]), int(r_lo[k]),
+                int(d_lo[k]), qcs[p], tcs[p],
             )
-        )
     return out
 
 
-def _traceback(ptr_p, best, end_i, end_b, d_lo, qc, tc):
-    """Walk the pointer bytes from the best cell; compute P7 stats."""
+def _traceback(ptr_p, best, end_i, end_b, row0, d_lo, qc, tc):
+    """Walk the pointer bytes from the best cell; compute P7 stats.
+    ``ptr_p`` row i is target row ``row0 + i``."""
     i, b = end_i, end_b
     B = ptr_p.shape[1]
     bt: list[str] = []
@@ -319,8 +351,8 @@ def _traceback(ptr_p, best, end_i, end_b, d_lo, qc, tc):
     bt.reverse()
     if not bt:
         return None
-    qend = end_i + d_lo + end_b + 1
-    tend = end_i + 1
+    qend = row0 + end_i + d_lo + end_b + 1
+    tend = row0 + end_i + 1
     n_m = bt.count("M")
     n_i = bt.count("I")
     n_d = bt.count("D")
@@ -588,7 +620,14 @@ def align_pairs(
     batch-constant scalar, and ``set_col`` names the DB tag so the
     target-sequence fetch joins on (target_id, set) — two sets may
     legitimately carry the same target_id. Requires pre-grouped input
-    (prefilter_grouped)."""
+    (prefilter_grouped). ``set_col`` without ``db_residues_col`` or
+    ``db_residues`` raises: the lazy default would sum the residues of
+    ALL sets and give every DB's e-values the wrong search space."""
+    if set_col is not None and db_residues is None and db_residues_col is None:
+        raise ValueError(
+            "align_pairs: set_col needs a Karlin-Altschul total — pass"
+            " db_residues_col (per-set totals) or db_residues"
+        )
     # db_residues (the Karlin-Altschul search-space total) defaults to a
     # LAZY broadcast 1-row aggregate instead of an eager .collect()
     # (round-10 optimization, guide §5/§2.6): the collect was a blocking
@@ -660,7 +699,7 @@ def align_pairs(
         .sortWithinPartitions(F.length("tseq"), "target_id")
     )
 
-    # batch memory budget for the traceback pointer array (P × tlen × band+1)
+    # batch memory budget for the traceback pointer array (P × max span × band+1)
     PTR_BUDGET = 64 * 1024 * 1024
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -710,14 +749,19 @@ def align_pairs(
                 if anchor is not None:
                     todo.append((r, qc, cached[0], anchor, dbr_r))
             # stage 2: gapped alignment, vectorized across pairs
+            _, spans = band_rows(
+                np.array([len(c[1]) for c in todo], dtype=np.int64),
+                np.array([len(c[2]) for c in todo], dtype=np.int64),
+                [c[3] for c in todo], band,
+            )
             out = []
             lo = 0
             while lo < len(todo):
                 hi = lo
-                cells = 0
+                rows = 0  # the chunk's longest span: ptr is P × rows × (band+1)
                 while hi < len(todo):
-                    cells += len(todo[hi][2]) * (band + 1)
-                    if hi > lo and cells > PTR_BUDGET:
+                    rows = max(rows, int(spans[hi]))
+                    if hi > lo and (hi - lo + 1) * rows * (band + 1) > PTR_BUDGET:
                         break
                     hi += 1
                 chunk = todo[lo:hi]

@@ -149,16 +149,8 @@ def search(
     xdrop: int | None = None,
     query_kmers: DataFrame | None = None,
     db_residues: int | None = None,
-    ordered: bool = True,
 ) -> DataFrame:
     """queries/targets: sequences(seq_id, accession, header, sequence).
-
-    ``ordered=False`` skips the final O6 sort (and per-call ``max_seqs``)
-    and returns the raw alignments — for callers that rank the UNION of
-    several searches themselves (search_multi_target with a global
-    max_seqs): each branch's sort would be discarded by the global
-    window anyway, and its range exchange re-executes the branch's
-    alignment kernel for RangePartitioner sampling (functions/ordering.py).
 
     ``expand_similar=True`` turns on T2 similar-k-mer expansion (the
     reference's default sensitivity mode, --exact-kmer-matching 0);
@@ -201,8 +193,6 @@ def search(
         alphabet=alpha, matrix=matrix, ka_ungapped=ka_u, ka_gapped=ka_g,
         xdrop=xdrop, db_residues=db_residues,
     )
-    if not ordered:
-        return alignments
     return _rank_and_order(alignments, max_seqs)
 
 
@@ -302,7 +292,18 @@ def search_sharded_layout(
 def search_multi_target(
     queries: DataFrame,
     target_sets: list[DataFrame],
-    **kwargs,
+    k: int = DEFAULT_K,
+    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
+    max_evalue: float = DEFAULT_EVALUE,
+    expand_similar: bool = False,
+    kmer_threshold: int | None = None,
+    kmer_max_per_pos: int | None = None,
+    mask: bool = False,
+    compo_bias: bool = False,
+    alphabet: str = "amino",
+    max_seqs: int | None = None,
+    xdrop: int | None = None,
+    db_residues: int | None = None,
 ) -> DataFrame:
     """J5: search each target set, UNION ALL the results (§2.7) — the
     reference's per-DB shell-job fan-out + cat (petasearch.sh:42-65).
@@ -339,24 +340,21 @@ def search_multi_target(
     "my k best hits anywhere"), not within each set. Capping per set
     would return up to ``len(target_sets) * max_seqs`` rows per query
     and, worse, a weak hit from a sparse DB would survive while a
-    stronger hit ranked (max_seqs+1)-th in a dense DB was dropped."""
+    stronger hit ranked (max_seqs+1)-th in a dense DB was dropped.
+
+    The knobs are ``search()``'s, minus the single-DB ``target_index`` and
+    ``query_kmers``; any other keyword raises TypeError rather than
+    running the defaults with exit 0."""
     from petasearch_spark.operators.kmer_index import (
         aggregate_kmer_index,
         extract_kmers_arrow,
     )
 
-    max_seqs = kwargs.pop("max_seqs", None)
-    k = kwargs.get("k", DEFAULT_K)
-    req = kwargs.get("req_kmer_matches", DEFAULT_REQ_KMER_MATCHES)
-    max_evalue = kwargs.get("max_evalue", DEFAULT_EVALUE)
-    alphabet = kwargs.get("alphabet", "amino")
-    xdrop = kwargs.get("xdrop")
-    db_residues = kwargs.get("db_residues")
     alpha, matrix, ka_u, ka_g = _alphabet_params(alphabet)
-    qk_keys = ("k", "expand_similar", "kmer_threshold", "kmer_max_per_pos",
-               "mask", "compo_bias", "alphabet")
     qk = build_query_kmers(
-        queries, **{kw: kwargs[kw] for kw in qk_keys if kw in kwargs}
+        queries, k=k, expand_similar=expand_similar,
+        kmer_threshold=kmer_threshold, kmer_max_per_pos=kmer_max_per_pos,
+        mask=mask, compo_bias=compo_bias, alphabet=alphabet,
     ).persist()
     # project early (§2.3) — only the columns the cascade touches ride
     # the tagged union
@@ -368,7 +366,9 @@ def search_multi_target(
         tagged = ti if tagged is None else tagged.unionByName(ti)
         tagged_kmers = ki if tagged_kmers is None else tagged_kmers.unionByName(ki)
     idx = aggregate_kmer_index(tagged_kmers, extra_keys=("_set",))
-    pairs = prefilter_grouped(qk, idx, req_kmer_matches=req, extra_keys=("_set",))
+    pairs = prefilter_grouped(
+        qk, idx, req_kmer_matches=req_kmer_matches, extra_keys=("_set",)
+    )
     if db_residues is not None:
         pairs = pairs.withColumn("_dbr", F.lit(int(db_residues)).cast("long"))
     else:

@@ -14,7 +14,10 @@ from petasearch_spark.operators.align import (
     _encode,
     _kmer_positions,
     align_pair_kernel,
+    align_pairs,
+    band_rows,
     banded_sw,
+    banded_sw_batch,
     ungapped_score,
 )
 
@@ -161,7 +164,8 @@ def banded_xdrop_score(qc, tc, anchor_diag, x=10, band=32, gap_open=11, gap_exte
     """Reference-shaped x-drop termination on the same band: identical
     recurrences to the engine kernel, but extension stops at the first
     row whose best cell is more than `x` below the global best so far
-    (the BLAST/block-aligner frontier rule). Independent scalar code."""
+    (the BLAST/block-aligner frontier rule). Independent scalar code;
+    ``x=None`` never stops — plain banded Gotoh over every target row."""
     NEG = -(10**9)
     half = band // 2
     B = band + 1
@@ -187,7 +191,7 @@ def banded_xdrop_score(qc, tc, anchor_diag, x=10, band=32, gap_open=11, gap_exte
             F_prev[b] = f  # reuse as F of current row for next iteration
             row_best = max(row_best, h)
         best = max(best, row_best)
-        if row_best < best - x:
+        if x is not None and row_best < best - x:
             break  # x-drop termination
         H_prev = H_row
     return best
@@ -254,8 +258,6 @@ def test_xdrop_kernel_option_matches_reference_on_random_pairs():
     """Kernel xdrop vs the independent scalar x-drop on seeded random
     pairs, including batches mixing terminated and surviving pairs (the
     per-pair active mask must not bleed across the batch)."""
-    from petasearch_spark.operators.align import banded_sw_batch
-
     rng = random.Random(7)
     qcs, tcs = [], []
     for _ in range(40):
@@ -274,3 +276,85 @@ def test_xdrop_kernel_option_matches_reference_on_random_pairs():
         expected = banded_xdrop_score(qc, tc, anchor_diag=0, x=10)
         got = res["score"] if res else 0
         assert got == expected
+
+
+# --- band-trimmed rows -------------------------------------------------
+#
+# banded_sw_batch computes only the target rows where a pair's band meets
+# the query (align.band_rows) and runs the batch sorted by that span. Short
+# queries against long targets put the band outside the query for most
+# rows; the scalar reference above still walks every target row.
+
+
+def rescore_backtrace(res, qc, tc, gap_open=11, gap_extend=1) -> int:
+    """Score of a reported alignment recomputed from its coordinates and
+    backtrace — pins the row offset the trimmed kernel adds back."""
+    qi, ti, score, prev = res["qstart"], res["tstart"], 0, "M"
+    for op in res["backtrace"]:
+        if op == "M":
+            ok = qc[qi] >= 0 and tc[ti] >= 0
+            score += int(BLOSUM62[tc[ti], qc[qi]]) if ok else -1
+            qi, ti = qi + 1, ti + 1
+        else:
+            score -= gap_extend if op == prev else gap_open
+            qi, ti = (qi + 1, ti) if op == "I" else (qi, ti + 1)
+        prev = op
+    assert (qi, ti) == (res["qend"], res["tend"])
+    return score
+
+
+def trimmed_rows_batch(seed: int = 31):
+    """Short queries embedded (mutated) deep inside long targets, anchored
+    on their true diagonal (large negative), at 0, at large positive
+    diagonals whose band only clips the query's tail, and half a band off
+    the true diagonal so the hit runs along the band's edge through the
+    span's first or last row; one long query stretches the batch's spans
+    to ~500."""
+    rng = random.Random(seed)
+    qcs, tcs, anchors = [], [], []
+    for n in range(24):
+        qlen = 484 if n == 5 else rng.randrange(12, 60)
+        q = rand_seq(rng, qlen)
+        off = rng.randrange(0, 400)
+        edge = n % 4 == 3  # exact copy: the hit stays on the band's edge
+        t = rand_seq(rng, off) + (q if edge else mutate(rng, q, n_sub=2, n_indel=1))
+        t += rand_seq(rng, rng.randrange(0, 300))
+        anchor = (-off, 0, qlen + 6 - n, -off + (16 if n % 8 == 3 else -16))[n % 4]
+        qcs.append(_encode(q))
+        tcs.append(_encode(t))
+        anchors.append(anchor)
+    return qcs, tcs, anchors
+
+
+@pytest.mark.parametrize("xdrop", [None, 10])
+def test_trimmed_rows_match_per_pair_and_scalar_reference(xdrop):
+    qcs, tcs, anchors = trimmed_rows_batch()
+    _, span = band_rows(
+        np.array([len(q) for q in qcs]), np.array([len(t) for t in tcs]), anchors
+    )
+    assert span.min() <= 12 and span.max() >= 480  # the batch mixes ~10..500
+    batch = banded_sw_batch(qcs, tcs, anchors, xdrop=xdrop)
+    assert batch == [banded_sw(q, t, a, xdrop=xdrop) for q, t, a in zip(qcs, tcs, anchors)]
+    for qc, tc, a, res in zip(qcs, tcs, anchors, batch):
+        assert (res["score"] if res else 0) == banded_xdrop_score(qc, tc, a, x=xdrop)
+        if res:
+            assert rescore_backtrace(res, qc, tc) == res["score"]
+    assert sum(r is not None for r in batch) >= 12  # the embedded hits align
+
+
+def test_trimmed_rows_empty_batches():
+    assert banded_sw_batch([], [], []) == []
+    # band past the query's end, band past the target's end, empty target
+    q, t = _encode("ACDEFGHIKLMNPQRSTVWY"), _encode("ACDEFGHIKLMNPQRSTVWY" * 5)
+    qcs, tcs, anchors = [q, q, q], [t, t, _encode("")], [20 + 17, -(100 + 17), 0]
+    _, span = band_rows(np.array([20, 20, 20]), np.array([100, 100, 0]), anchors)
+    assert span.tolist() == [0, 0, 0]
+    for xdrop in (None, 10):
+        assert banded_sw_batch(qcs, tcs, anchors, xdrop=xdrop) == [None, None, None]
+
+
+def test_set_col_without_ka_total_raises():
+    """Per-DB e-values need a per-set Karlin-Altschul total: set_col with
+    neither db_residues_col nor db_residues is refused up front."""
+    with pytest.raises(ValueError, match="set_col"):
+        align_pairs(None, None, None, set_col="_set")

@@ -53,10 +53,11 @@ PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
 CUT_NODES = ("Exchange", "BroadcastExchange", "InMemoryTableScan")
 
 
-def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
-    """Python-kernel nodes reachable from an Exchange(rangepartitioning)
-    without crossing a shuffle/broadcast/cache boundary — i.e. kernels the
-    sort's RangePartitioner sampling job would re-execute."""
+def _parse_plan(formatted_plan: str) -> tuple[set[int], list[tuple[int, str, int]]]:
+    """``explain("formatted")`` -> (ids of the range Exchanges, tree as
+    (indent_depth, node_name, node_id) rows). An empty tree means the
+    format drifted away from these regexes: fail, rather than let every
+    query pass the guard vacuously."""
     import re
 
     lines = formatted_plan.splitlines()
@@ -70,14 +71,24 @@ def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
             cur_id = None
         if cur_id is not None and "rangepartitioning" in ln:
             range_ids.add(cur_id)
-    # tree section: (indent_depth, node_name, node_id)
+    # tree section: (indent_depth, node_name, node_id); whole-stage-codegen
+    # nodes print as "* Name (n)" after the tree glyphs
     tree = []
     for ln in lines:
-        m = re.search(r"^([+\-:|\s]*)(\w+)[^(]*\((\d+)\)\s*$", ln)
+        m = re.search(r"^([+\-:|\s]*)(?:\* )?(\w+)[^(]*\((\d+)\)\s*$", ln)
         if m:
             tree.append((len(m.group(1)), m.group(2), int(m.group(3))))
         elif tree and ln.strip() == "":
             break
+    assert tree, "explain('formatted') output no longer parses as a plan tree"
+    return range_ids, tree
+
+
+def _kernels_resampled_by_sort(formatted_plan: str) -> list[str]:
+    """Python-kernel nodes reachable from an Exchange(rangepartitioning)
+    without crossing a shuffle/broadcast/cache boundary — i.e. kernels the
+    sort's RangePartitioner sampling job would re-execute."""
+    range_ids, tree = _parse_plan(formatted_plan)
     hits = []
     for i, (ind, name, nid) in enumerate(tree):
         if nid not in range_ids:
@@ -109,15 +120,33 @@ def _formatted(df) -> str:
     return buf.getvalue()
 
 
+@pytest.fixture(scope="module")
+def formatted_plan(spark):
+    """name -> formatted plan of the registry query, built once per module."""
+    plans: dict[str, str] = {}
+
+    def get(name: str) -> str:
+        if name not in plans:
+            plans[name] = _formatted(REGISTRY[name][0](spark, SF_DIR))
+        return plans[name]
+
+    return get
+
+
 @pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_no_kernel_resampled_by_global_sort(spark, name):
-    df = REGISTRY[name][0](spark, SF_DIR)
-    hits = _kernels_resampled_by_sort(_formatted(df))
+def test_no_kernel_resampled_by_global_sort(formatted_plan, name):
+    hits = _kernels_resampled_by_sort(formatted_plan(name))
     assert not hits, (
         f"{name}: the final sort's RangePartitioner sampling job re-executes"
         f" a Python kernel: {hits} — sort via functions.ordering."
         "sort_via_exchange so the sampling reads a shuffle instead"
     )
+
+
+def test_global_sort_guard_sees_range_exchanges(formatted_plan):
+    """The guard above only bites where it finds a range Exchange: if no
+    registry plan parses to one, it checks nothing."""
+    assert any(_parse_plan(formatted_plan(name))[0] for name in BATCH_QUERIES)
 
 
 def test_sort_above_kernel_runs_kernel_once(spark, tmp_path):
@@ -156,11 +185,13 @@ def test_sort_above_kernel_runs_kernel_once(spark, tmp_path):
     bare = base.orderBy("g", "id")
     bare.write.format("noop").mode("overwrite").save()
     assert n_marks() == 2 * once, "bare orderBy no longer doubles the kernel"
+    assert _kernels_resampled_by_sort(_formatted(bare)), "the plan guard misses it"
 
     os.remove(mark)
     fixed = sort_via_exchange(base, "g", "id")
     fixed.write.format("noop").mode("overwrite").save()
     assert n_marks() == once, "sort_via_exchange must run the kernel once"
+    assert not _kernels_resampled_by_sort(_formatted(fixed))
 
     # and the helper is result-identical to the bare sort
     assert [tuple(r) for r in fixed.collect()] == [tuple(r) for r in bare.collect()]

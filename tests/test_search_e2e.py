@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
@@ -190,3 +192,10 @@ def test_multi_target_max_seqs_is_global_not_per_db(spark):
     assert got == want
     # per-DB capping would exceed 1 row for multi-DB-hit queries
     assert all(len(v) == 1 for v in got.values())
+
+
+@pytest.mark.parametrize("kw", [{"max_eval": 1e-3}, {"target_index": None}])
+def test_multi_target_rejects_unknown_kwargs(kw):
+    """A misspelled or single-DB-only knob must not run the defaults."""
+    with pytest.raises(TypeError):
+        search_multi_target(None, [], **kw)
