@@ -513,21 +513,14 @@ def ungapped_rescore_pairs(
     SQL oracle (doc_search.PROTEIN_UNGAPPED_SQL), which is what upgrades
     the alignment cascade from a rows-only check to a value-checked one.
 
-    Coordinates are 1-based inclusive [qstart, qend] in the query.
-    Uses the same kernels (_encode/_kmer_positions/ungapped_score) as the
-    full alignment path, so a green oracle row certifies those kernels.
+    ``prefilter_pairs`` are grouped pairs (prefilter.prefilter_grouped:
+    per-pair k-mer lists); diagonals are sorted below, so list order never
+    reaches the result. Coordinates are 1-based inclusive [qstart, qend]
+    in the query. Uses the same kernels (_encode/_kmer_positions/
+    ungapped_score) as the full alignment path, so a green oracle row
+    certifies those kernels.
     """
-
-    if "kmers" in prefilter_pairs.columns:
-        # pre-grouped input (prefilter.prefilter_grouped, round 11):
-        # lists + HAVING already computed in one aggregation; diags are
-        # sorted() below so list order never reaches the result
-        grouped = prefilter_pairs.select("query_id", "target_id", "kmers", "qpositions")
-    else:
-        grouped = prefilter_pairs.groupBy("query_id", "target_id").agg(
-            F.collect_list("kmer").alias("kmers"),
-            F.collect_list("pos").alias("qpositions"),
-        )
+    grouped = prefilter_pairs.select("query_id", "target_id", "kmers", "qpositions")
     q = queries.select(F.col("seq_id").alias("query_id"), F.col("sequence").alias("qseq"))
     t = targets.select(F.col("seq_id").alias("target_id"), F.col("sequence").alias("tseq"))
     # explicit repartition: the grouped pair set is small in bytes, so AQE
@@ -596,13 +589,25 @@ def align_pairs(
     db_residues_col: str | None = None,
     set_col: str | None = None,
 ) -> DataFrame:
-    """prefilter_pairs(target_id, query_id, kmer, pos) + sequence tables ->
-    alignments (FIXTURES.md §1 schema, 1-based coords, query-keyed).
+    """grouped pairs (query_id, target_id, kmers, qpositions — from
+    prefilter.prefilter_grouped) + sequence tables -> alignments
+    (FIXTURES.md §1 schema, 1-based coords, query-keyed).
 
-    Plan shape: one groupBy to collect each pair's matches, two joins to
-    fetch sequences (query side broadcast — it is the small side in the
-    reference's design too, comparekmertables.cpp:387-391), then a
+    Plan shape: two joins to fetch sequences (query side broadcast — it
+    is the small side in the reference's design too,
+    comparekmertables.cpp:387-391), one repartition by target_id, then a
     mapInPandas over independent rows. No other shuffle.
+
+    The Karlin-Altschul search-space total reaches the kernel as ONE
+    per-row BIGINT column, however it is passed: ``db_residues`` (a
+    literal), ``db_residues_col`` (a column the caller attached, used
+    as-is), or neither — the targets' residues summed lazily in the same
+    job (per ``set_col`` DB when given, else one corpus total).
+
+    ``set_col`` names a DB tag (the fused multi-target cascade): the
+    target fetch joins on (target_id, set) — two sets may legitimately
+    carry the same target_id — and the lazy total is summed per set, so
+    each DB's e-values use its own search space.
 
     ``kernel_parts``: upper bound on USEFUL kernel width known to the
     caller (the kernel stage partitions by target_id, so at most
@@ -610,36 +615,22 @@ def align_pairs(
     passes its candidate count: a 2-candidate probe then runs 2 kernel
     tasks instead of 2x-parallelism mostly-empty ones, while large
     batches saturate to the default — never narrower than the data,
-    never wider than the cluster.
-
-    ``db_residues_col``/``set_col`` (round 11, the fused multi-target
-    cascade): when one kernel stage aligns pairs from SEVERAL target
-    DBs, the Karlin-Altschul total differs per DB — ``db_residues_col``
-    names a per-row BIGINT column (pre-attached by the caller, e.g. a
-    broadcast join of per-set sums) read per pair instead of the
-    batch-constant scalar, and ``set_col`` names the DB tag so the
-    target-sequence fetch joins on (target_id, set) — two sets may
-    legitimately carry the same target_id. Requires pre-grouped input
-    (prefilter_grouped). ``set_col`` without ``db_residues_col`` or
-    ``db_residues`` raises: the lazy default would sum the residues of
-    ALL sets and give every DB's e-values the wrong search space."""
-    if set_col is not None and db_residues is None and db_residues_col is None:
-        raise ValueError(
-            "align_pairs: set_col needs a Karlin-Altschul total — pass"
-            " db_residues_col (per-set totals) or db_residues"
-        )
-    # db_residues (the Karlin-Altschul search-space total) defaults to a
-    # LAZY broadcast 1-row aggregate instead of an eager .collect()
-    # (round-10 optimization, guide §5/§2.6): the collect was a blocking
-    # driver job before the main query even launched — and
-    # search_multi_target paid it once per target set, serially. As a
-    # broadcast column it computes inside the same job, overlapped with
-    # every other stage; the 1-row crossJoin is the package's documented
-    # BroadcastNestedLoopJoin pattern (tests/test_plan_antipatterns.py).
-    # greatest(coalesce(sum,1),1) == the old `collect()[0][0] or 1`.
-    lazy_dbr = db_residues is None and db_residues_col is None
-    if lazy_dbr:
-        dbr_frame = targets.agg(
+    never wider than the cluster."""
+    if db_residues is not None and db_residues_col is not None:
+        raise ValueError("align_pairs: pass db_residues or db_residues_col, not both")
+    set_keys = [set_col] if set_col else []
+    grouped = prefilter_pairs.select(
+        "query_id", "target_id", "kmers", "qpositions", *set_keys,
+        *([F.col(db_residues_col).alias("_dbr")] if db_residues_col else []),
+    )
+    # the lazy total is a broadcast aggregate computed inside the same job
+    # instead of an eager .collect() (round-10 optimization, guide
+    # §5/§2.6): the collect was a blocking driver job before the main
+    # query even launched. greatest(coalesce(sum,1),1) == the old
+    # `collect()[0][0] or 1`.
+    lazy = db_residues is None and db_residues_col is None
+    if lazy:
+        totals = targets.groupBy(*set_keys).agg(
             F.greatest(
                 F.coalesce(
                     F.sum(F.length("sequence")), F.lit(1).cast("long")
@@ -647,25 +638,8 @@ def align_pairs(
                 F.lit(1).cast("long"),
             ).alias("_dbr")
         )
-
-    extra_cols = [c for c in (set_col, db_residues_col) if c]
-    if "kmers" in prefilter_pairs.columns:
-        # pre-grouped input (prefilter.prefilter_grouped, round 11): the
-        # HAVING-count and the list collection already happened in ONE
-        # aggregation — no second groupBy, no window sort upstream
-        grouped = prefilter_pairs.select(
-            "query_id", "target_id", "kmers", "qpositions", *extra_cols
-        )
-    else:
-        if extra_cols:
-            raise ValueError(
-                "align_pairs: db_residues_col/set_col require pre-grouped"
-                " input (prefilter_grouped with matching extra_keys)"
-            )
-        grouped = prefilter_pairs.groupBy("query_id", "target_id").agg(
-            F.collect_list("kmer").alias("kmers"),
-            F.collect_list("pos").alias("qpositions"),
-        )
+        if set_col:
+            grouped = grouped.join(F.broadcast(totals), set_col)
     q = queries.select(
         F.col("seq_id").alias("query_id"),
         F.col("accession").alias("query_accession"),
@@ -675,7 +649,7 @@ def align_pairs(
         F.col("seq_id").alias("target_id"),
         F.col("accession").alias("target_accession"),
         F.col("sequence").alias("tseq"),
-        *([set_col] if set_col else []),
+        *set_keys,
     )
     # Kernel rows are tiny relative to the cluster — AQE would coalesce the
     # post-join stage into very few tasks and serialize the Python kernel.
@@ -688,16 +662,18 @@ def align_pairs(
     n_parts = 2 * max(1, prefilter_pairs.sparkSession.sparkContext.defaultParallelism)
     if kernel_parts is not None:
         n_parts = min(n_parts, max(1, kernel_parts))
-    t_keys = ["target_id"] + ([set_col] if set_col else [])
-    rows = grouped.join(F.broadcast(q), "query_id").join(t, t_keys)
-    if lazy_dbr:
-        # ride the 8-byte corpus total into every kernel row (constant
-        # within a batch; read back in run() below)
-        rows = rows.crossJoin(F.broadcast(dbr_frame))
+    rows = grouped.join(F.broadcast(q), "query_id").join(t, ["target_id", *set_keys])
+    if lazy and not set_col:
+        # the 1-row corpus total: the package's documented
+        # BroadcastNestedLoopJoin pattern (tests/test_plan_antipatterns.py)
+        rows = rows.crossJoin(F.broadcast(totals))
     rows = (
         rows.repartition(n_parts, "target_id")
         .sortWithinPartitions(F.length("tseq"), "target_id")
     )
+    if db_residues is not None:
+        # a literal rides no shuffle: attached after the repartition
+        rows = rows.withColumn("_dbr", F.lit(int(db_residues)).cast("long"))
 
     # batch memory budget for the traceback pointer array (P × max span × band+1)
     PTR_BUDGET = 64 * 1024 * 1024
@@ -709,13 +685,6 @@ def align_pairs(
             "nident", "qstart", "qend", "qlen", "tstart", "tend", "tlen", "backtrace",
         ]
         for pdf in batches:
-            # the lazily-attached corpus total is constant per batch; with
-            # db_residues_col it varies per ROW (per target DB) instead
-            dbr = (
-                db_residues
-                if db_residues is not None
-                else (int(pdf["_dbr"].iloc[0]) if lazy_dbr and len(pdf) else 1)
-            )
             # Per-BATCH caches: same-target rows arrive adjacent (the
             # repartition/sort above), so a batch-lifetime cache captures
             # almost all reuse while executor memory stays bounded by the
@@ -728,7 +697,7 @@ def align_pairs(
             # itertuples renames underscore-prefixed columns (_set -> _N),
             # so the per-row set/dbr values come from positional arrays
             sets_arr = pdf[set_col].to_numpy() if set_col else None
-            dbr_arr = pdf[db_residues_col].to_numpy() if db_residues_col else None
+            dbr_arr = pdf["_dbr"].to_numpy()
             # stage 1 (cheap, per pair): J3 diagonals + F5 + F6 anchor
             todo = []  # (row, qc, tc, anchor, dbr)
             for j, r in enumerate(pdf.itertuples(index=False)):
@@ -741,7 +710,7 @@ def align_pairs(
                 qc = qcache.get(r.query_id)
                 if qc is None:
                     qc = qcache[r.query_id] = _encode(r.qseq, alphabet)
-                dbr_r = int(dbr_arr[j]) if dbr_arr is not None else dbr
+                dbr_r = int(dbr_arr[j])
                 anchor = find_anchor_diag(
                     qc, cached[0], cached[1], r.kmers, r.qpositions, dbr_r, max_evalue,
                     matrix=matrix, ka_ungapped=ka_ungapped,

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
 from typing import Iterator
 
 import numpy as np
@@ -256,8 +258,31 @@ def write_kmer_index_sharded(
 #: CONTENT identity (file names + sizes + mtime_ns, the staged_cache
 #: fingerprint convention) is exact: a rebuilt/compacted layout gets a
 #: new key, a missing sidecar still fails loudly through the uncached
-#: Spark read.
-_META_CACHE: dict[tuple, dict] = {}
+#: Spark read. Bounded LRU: every append or rebuild adds a key, so a
+#: long-lived service would otherwise grow it without limit; an evicted
+#: sidecar is simply re-read. The lock: concurrent streaming queries
+#: probe from their own threads.
+_META_CACHE: OrderedDict[tuple, dict] = OrderedDict()
+_META_CACHE_SIZE = 64
+_META_LOCK = threading.Lock()
+
+
+def _meta_cache_get(ck: tuple | None) -> dict | None:
+    with _META_LOCK:
+        if ck is None or ck not in _META_CACHE:
+            return None
+        _META_CACHE.move_to_end(ck)
+        return dict(_META_CACHE[ck])
+
+
+def _meta_cache_put(ck: tuple | None, d: dict) -> None:
+    if ck is None:
+        return
+    with _META_LOCK:
+        _META_CACHE[ck] = dict(d)
+        _META_CACHE.move_to_end(ck)
+        while len(_META_CACHE) > _META_CACHE_SIZE:
+            _META_CACHE.popitem(last=False)
 
 
 def _sidecar_cache_key(path: str) -> tuple | None:
@@ -280,14 +305,14 @@ def read_kmer_index_meta(spark, path: str) -> dict:
     for layouts written since round 10 — the k and alphabet the index
     was built with; None on older layouts)."""
     ck = _sidecar_cache_key(path)
-    if ck is not None and ck in _META_CACHE:
-        return dict(_META_CACHE[ck])
+    cached = _meta_cache_get(ck)
+    if cached is not None:
+        return cached
     row = spark.read.parquet(path + "/_ps_meta").head()
     d = row.asDict()
     d.setdefault("k", None)
     d.setdefault("alphabet", None)
-    if ck is not None:
-        _META_CACHE[ck] = dict(d)
+    _meta_cache_put(ck, d)
     return d
 
 
@@ -458,16 +483,16 @@ def read_sequence_store_meta(spark, path: str) -> dict:
     never a silent mis-prune. Cached in-process on the sidecar's content
     identity (see _META_CACHE)."""
     ck = _sidecar_cache_key(path)
-    if ck is not None and ck in _META_CACHE:
-        return dict(_META_CACHE[ck])
+    cached = _meta_cache_get(ck)
+    if cached is not None:
+        return cached
     row = spark.read.parquet(path + "/_ps_meta").head()
     d = row.asDict()
     d.setdefault("max_seq_id", None)
     out = {
         k: d[k] for k in ("num_shards", "db_residues", "schema_json", "max_seq_id")
     }
-    if ck is not None:
-        _META_CACHE[ck] = dict(out)
+    _meta_cache_put(ck, out)
     return out
 
 

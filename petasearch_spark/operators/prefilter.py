@@ -8,12 +8,16 @@ count(*) > req-kmer-matches (strict >, default 2; removeNotHitSequences
 because the aligner needs every (kmer, pos) match.
 
 Spark design: a plain inner join — Catalyst picks sort-merge or
-shuffled-hash; the group-count filter is a window count over the join keys so
-we keep the member rows without a second join. When the query side is small
-(the common interactive case; the reference replicates the query table per
-thread, comparekmertables.cpp:387-391) callers pass broadcast=True and the
-join becomes a broadcast-hash join with NO shuffle of the index at all —
-at 100 TB of index this is the difference between a full-index shuffle and a
+shuffled-hash — then ONE grouped aggregation per (query, target) with the
+HAVING count applied after it: map-side partial aggregation collapses the
+match rows to one row per pair per map partition before the shuffle, and
+nothing is sorted. Two forms share that join: ``prefilter_grouped`` keeps
+each pair's matched (kmer, pos) lists for the aligner, ``prefilter_counts``
+keeps only the count. When the query side is small (the common interactive
+case; the reference replicates the query table per thread,
+comparekmertables.cpp:387-391) the query k-mers are broadcast and the join
+is a broadcast-hash join with NO shuffle of the index at all — at 100 TB of
+index this is the difference between a full-index shuffle and a
 map-side-only pass.
 
 Skew: hot k-mers are bounded by construction — the index holds ONE row per
@@ -24,37 +28,21 @@ AQE skew-join (enabled in session.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: default --req-kmer-matches (strict >), /root/reference/src/commons/LocalParameters.h:144
 DEFAULT_REQ_KMER_MATCHES = 2
 
 
-def prefilter(
-    query_kmers: DataFrame,
-    target_index: DataFrame,
-    req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
-    broadcast_queries: bool = True,
+def _matches(
+    query_kmers: DataFrame, target_index: DataFrame, broadcast_queries: bool, *cols
 ) -> DataFrame:
-    """query_kmers(query_id, kmer, pos) ⋈ target_index(kmer, seq_id, seq_len)
-    -> prefilter_pairs(target_id, query_id, kmer, pos, target_len)
-    with every (query_id, target_id) group having > req_kmer_matches rows.
-    """
+    """query_kmers(query_id, kmer, pos) ⋈ target_index(kmer, seq_id, ...)
+    ON kmer -> (query_id, target_id, *cols): one row per k-mer match."""
     q = F.broadcast(query_kmers) if broadcast_queries else query_kmers
-    joined = q.join(target_index, "kmer", "inner").select(
-        F.col("seq_id").alias("target_id"),
-        "query_id",
-        "kmer",
-        "pos",
-        F.col("seq_len").alias("target_len"),
-    )
-    # A1/F4: HAVING count(*) > θ, keeping member rows (window, not groupBy).
-    w = Window.partitionBy("query_id", "target_id")
-    return (
-        joined.withColumn("match_cnt", F.count(F.lit(1)).over(w))
-        .filter(F.col("match_cnt") > req_kmer_matches)
-        .drop("match_cnt")
+    return q.join(target_index, "kmer", "inner").select(
+        F.col("seq_id").alias("target_id"), "query_id", *cols
     )
 
 
@@ -65,24 +53,14 @@ def prefilter_grouped(
     broadcast_queries: bool = True,
     extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fused prefilter + per-pair match collection for the ALIGN cascade
-    (round 11, guide §2.3/§2.4): ``prefilter()`` keeps member rows via a
-    count window — which SORTS every joined k-mer match row by
-    (query_id, target_id) inside one exchange — and the aligner then
-    immediately re-groups those same rows into per-pair k-mer lists.
-    When the consumer is the aligner, one hash aggregation does both:
-    collect the lists AND count the matches, filter on the count after.
-    The window sort over the cascade's most voluminous intermediate
-    disappears, and partial (map-side) aggregation collapses match rows
-    to one row per pair per map partition BEFORE the shuffle.
-
-    Result-identical to prefilter()+groupBy by construction: the same
-    (query, target) groups survive (same strict > threshold over the
-    same join), and the kernels sort diagonals internally
-    (align.find_anchor_diag / ungapped_rescore_pairs), so collect_list
-    order — nondeterministic in BOTH forms — never reaches a result.
-    Standalone prefilter QUERIES (protein_prefilter etc.) keep the
-    member-row window form: their output rows are the oracle contract.
+    """Prefilter + per-pair match collection for the ALIGN cascade
+    (round 11, guide §2.3/§2.4): one hash aggregation collects each
+    (query, target) group's matched k-mers and query positions AND counts
+    them; the strict > threshold filters on the count after. Exploding
+    the lists gives back the member rows of every surviving group. The
+    kernels sort diagonals internally (align.find_anchor_diag /
+    ungapped_rescore_pairs), so collect_list order — nondeterministic —
+    never reaches a result.
 
     ``extra_keys`` (round 11, fused multi-target): additional grouping
     columns carried on the TARGET INDEX side (e.g. the per-DB ``_set``
@@ -90,12 +68,9 @@ def prefilter_grouped(
     means (query, target, DB), exactly the per-DB prefilter relation.
 
     -> grouped_pairs(query_id, target_id, [*extra_keys,] kmers, qpositions)"""
-    q = F.broadcast(query_kmers) if broadcast_queries else query_kmers
-    joined = q.join(target_index, "kmer", "inner").select(
-        F.col("seq_id").alias("target_id"), "query_id", "kmer", "pos", *extra_keys
-    )
     return (
-        joined.groupBy("query_id", "target_id", *extra_keys)
+        _matches(query_kmers, target_index, broadcast_queries, "kmer", "pos", *extra_keys)
+        .groupBy("query_id", "target_id", *extra_keys)
         .agg(
             F.collect_list("kmer").alias("kmers"),
             F.collect_list("pos").alias("qpositions"),
@@ -112,27 +87,17 @@ def prefilter_counts(
     req_kmer_matches: int = DEFAULT_REQ_KMER_MATCHES,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Fused prefilter + pair-count for consumers that only need
-    ``(query_id, target_id, n_matches)`` (round 11, guide §2.3): the
-    ``prefilter()`` member-row form sorts every joined match row inside
-    its count window, and those consumers then immediately re-count the
-    same groups. One COUNT aggregation with the HAVING applied after is
-    the same relation — identical to the SQL oracles' GROUP BY/HAVING —
-    with partial (map-side) aggregation collapsing match rows to an
-    8-byte count per pair per map partition before the shuffle, and no
-    sort anywhere. Member-row consumers (the aligner's diagonals, the
-    funnel's row counters) keep prefilter()/prefilter_grouped."""
-    q = F.broadcast(query_kmers) if broadcast_queries else query_kmers
-    joined = q.join(target_index, "kmer", "inner").select(
-        "query_id", F.col("seq_id").alias("target_id")
-    )
+    """Prefilter + pair-count for consumers that only need
+    ``(query_id, target_id, n_matches)`` (round 11, guide §2.3): one COUNT
+    aggregation with the HAVING applied after — identical to the SQL
+    oracles' GROUP BY/HAVING — with partial (map-side) aggregation
+    collapsing match rows to an 8-byte count per pair per map partition
+    before the shuffle, and no sort anywhere. The aligner, which needs
+    the matches themselves, uses prefilter_grouped."""
     return (
-        joined.groupBy("query_id", "target_id")
+        _matches(query_kmers, target_index, broadcast_queries)
+        .groupBy("query_id", "target_id")
         .agg(F.count(F.lit(1)).alias("n_matches"))
         .filter(F.col("n_matches") > req_kmer_matches)
     )
 
-
-def prefilter_pair_counts(prefilter_pairs: DataFrame) -> DataFrame:
-    """A4-style funnel stat: surviving (query,target) pairs + match counts."""
-    return prefilter_pairs.groupBy("query_id", "target_id").agg(F.count(F.lit(1)).alias("n_kmer_matches"))

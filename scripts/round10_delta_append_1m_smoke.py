@@ -52,7 +52,7 @@ from petasearch_spark.operators.kmer_index import (
     read_layout_store_pruned,
     write_sharded_layout,
 )
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.session import get_spark
 
 NUM_SHARDS = 4096
@@ -63,7 +63,7 @@ def interactive_search(spark, root: str, queries, total_res: int):
     search_sharded_layout composes it (same library calls), minus the
     knob plumbing."""
     qk = extract_query_kmers(queries).persist()
-    pairs = prefilter(qk, read_layout_index_pruned(spark, root, qk)).persist()
+    pairs = prefilter_grouped(qk, read_layout_index_pruned(spark, root, qk)).persist()
     ids = [int(r["target_id"]) for r in pairs.select("target_id").distinct().collect()]
     targets, db_residues = read_layout_store_pruned(spark, root, ids)
     assert db_residues == total_res, "generation residue sum drifted from corpus total"

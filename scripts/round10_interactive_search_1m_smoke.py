@@ -50,7 +50,7 @@ from petasearch_spark.operators.kmer_index import (
     write_kmer_index_sharded,
     write_sequence_store_sharded,
 )
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.plans.search import search
 from petasearch_spark.session import get_spark
 
@@ -62,7 +62,7 @@ def interactive_search(spark, root: str, queries, db_residues: int):
     over the smoke layout (kept in sync by the equality assertion vs
     the full-scan search below)."""
     qk = extract_query_kmers(queries).persist()
-    pairs = prefilter(
+    pairs = prefilter_grouped(
         qk, read_kmer_index_pruned(spark, os.path.join(root, "index"), qk)
     ).persist()
     ids = [int(r["target_id"]) for r in pairs.select("target_id").distinct().collect()]

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET, encode_kmer_expr
 from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.plans.search import search
 from petasearch_spark.session import get_spark
 
@@ -126,8 +126,8 @@ def main() -> None:
     out["n_queries"] = nq
 
     t0 = time.time()
-    pairs = prefilter(extract_query_kmers(queries), index)
-    n_pairs = pairs.select("query_id", "target_id").distinct().count()
+    pairs = prefilter_grouped(extract_query_kmers(queries), index)
+    n_pairs = pairs.count()
     out["prefilter_pairs"] = n_pairs
     out["prefilter_s"] = round(time.time() - t0, 1)
     assert n_pairs <= nq * 50, (

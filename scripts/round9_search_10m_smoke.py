@@ -49,7 +49,7 @@ from petasearch_spark.operators.kmer_index import (
     extract_query_kmers,
     write_kmer_index_bucketed,
 )
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.plans.search import search
 from petasearch_spark.session import get_spark
 
@@ -93,8 +93,8 @@ def main() -> None:
     # --- steady-state per-batch cost: prefilter against the on-disk
     # bucketed table (includes the columnar re-scan)
     t0 = time.time()
-    pairs = prefilter(extract_query_kmers(queries), index)
-    n_pairs = pairs.select("query_id", "target_id").distinct().count()
+    pairs = prefilter_grouped(extract_query_kmers(queries), index)
+    n_pairs = pairs.count()
     out["prefilter_pairs"] = n_pairs
     out["prefilter_s"] = round(time.time() - t0, 1)
     assert n_pairs <= nq * 50, (

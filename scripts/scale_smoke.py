@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
 from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.operators.align import align_pairs
 from petasearch_spark.session import get_spark
 
@@ -94,8 +94,8 @@ def main() -> None:
 
     t0 = time.perf_counter()
     qk = extract_query_kmers(queries)
-    pairs = prefilter(qk, index)
-    n_pairs = pairs.select("query_id", "target_id").distinct().count()
+    pairs = prefilter_grouped(qk, index)
+    n_pairs = pairs.count()
     prefilter_s = time.perf_counter() - t0
 
     t0 = time.perf_counter()

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from petasearch_spark.operators.doc_search import derived_sequences
 from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-from petasearch_spark.operators.prefilter import prefilter
+from petasearch_spark.operators.prefilter import prefilter_grouped
 from petasearch_spark.plans.search import search
 from petasearch_spark.session import get_spark
 
@@ -74,8 +74,8 @@ def main() -> None:
     # keeps ONE representative per k-mer, so each query can pair with at
     # most  #distinct-matched-kmers  targets — not with all n_docs)
     t0 = time.time()
-    pairs = prefilter(extract_query_kmers(queries), index)
-    n_pair_groups = pairs.select("query_id", "target_id").distinct().count()
+    pairs = prefilter_grouped(extract_query_kmers(queries), index)
+    n_pair_groups = pairs.count()
     out["prefilter_pairs"] = n_pair_groups
     out["prefilter_s"] = round(time.time() - t0, 1)
     assert n_pair_groups <= n_queries * 50, (

@@ -353,8 +353,85 @@ def test_trimmed_rows_empty_batches():
         assert banded_sw_batch(qcs, tcs, anchors, xdrop=xdrop) == [None, None, None]
 
 
-def test_set_col_without_ka_total_raises():
-    """Per-DB e-values need a per-set Karlin-Altschul total: set_col with
-    neither db_residues_col nor db_residues is refused up front."""
-    with pytest.raises(ValueError, match="set_col"):
-        align_pairs(None, None, None, set_col="_set")
+def _ka_fixture(spark):
+    """Queries with planted hits in two target DBs of different sizes:
+    the same alignments score identically in both, but each DB's
+    Karlin-Altschul total (its residue count) differs. Target ids restart
+    at 0 in each DB, so the sets overlap on target_id."""
+    from petasearch_spark.sources.fasta import sequences_from_records
+
+    rng = random.Random(23)
+    cores = [rand_seq(rng, 70) for _ in range(3)]
+    queries = sequences_from_records(spark, [(f"q{i}", c) for i, c in enumerate(cores)])
+    hits = [(f"hit{i}", rand_seq(rng, 15) + c[5:65] + rand_seq(rng, 10))
+            for i, c in enumerate(cores)]
+    dbs = []
+    for n_noise in (4, 40):
+        recs = hits + [(f"noise{j}", rand_seq(rng, 90)) for j in range(n_noise)]
+        dbs.append((sequences_from_records(spark, recs), sum(len(r[1]) for r in recs)))
+    return queries, dbs
+
+
+def _rows(ali):
+    return sorted(
+        tuple(r) for r in ali.select("query_id", "target_id", "raw", "evalue",
+                                     "bits", "qstart", "tstart", "backtrace").collect()
+    )
+
+
+def test_ka_total_forms_give_identical_rows(spark):
+    """The Karlin-Altschul total reaches the kernel one way (a per-row
+    column), however it is passed: a literal, a caller's column, or the
+    lazy sum of the targets' residues must align identically."""
+    from pyspark.sql import functions as F
+
+    from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
+    from petasearch_spark.operators.prefilter import prefilter_grouped
+
+    queries, dbs = _ka_fixture(spark)
+    targets, n = dbs[1]
+    pairs = prefilter_grouped(extract_query_kmers(queries), build_kmer_index(targets))
+    literal = _rows(align_pairs(pairs, queries, targets, db_residues=n))
+    column = _rows(align_pairs(pairs.withColumn("n", F.lit(n).cast("long")),
+                               queries, targets, db_residues_col="n"))
+    lazy = _rows(align_pairs(pairs, queries, targets))
+    assert len(literal) >= 3
+    assert literal == column == lazy
+    with pytest.raises(ValueError, match="not both"):
+        align_pairs(pairs, queries, targets, db_residues=n, db_residues_col="n")
+
+
+def test_set_col_without_ka_total_gives_per_db_evalues(spark):
+    """set_col alone sums each DB's residues for its own search space:
+    one tagged alignment stage over two DBs equals the per-DB runs row
+    for row, e-values included (the planted hits score the same in both
+    DBs, so only a per-DB total separates their e-values)."""
+    from pyspark.sql import functions as F
+
+    from petasearch_spark.operators.kmer_index import (
+        aggregate_kmer_index,
+        build_kmer_index,
+        extract_kmers_arrow,
+        extract_query_kmers,
+    )
+    from petasearch_spark.operators.prefilter import prefilter_grouped
+
+    queries, dbs = _ka_fixture(spark)
+    qk = extract_query_kmers(queries)
+    tagged = tagged_kmers = None
+    per_db = []
+    for i, (t, _) in enumerate(dbs):
+        ti = t.select("seq_id", "accession", "sequence").withColumn("_set", F.lit(i))
+        ki = extract_kmers_arrow(t).withColumn("_set", F.lit(i))
+        tagged = ti if tagged is None else tagged.unionByName(ti)
+        tagged_kmers = ki if tagged_kmers is None else tagged_kmers.unionByName(ki)
+        per_db += _rows(align_pairs(prefilter_grouped(qk, build_kmer_index(t)), queries, t))
+    pairs = prefilter_grouped(
+        qk, aggregate_kmer_index(tagged_kmers, extra_keys=("_set",)), extra_keys=("_set",)
+    )
+    fused = _rows(align_pairs(pairs, queries, tagged, set_col="_set"))
+    assert fused == sorted(per_db)
+    evalues: dict = {}
+    for qid, tid, raw, ev, *_ in fused:
+        evalues.setdefault((qid, tid, raw), set()).add(ev)
+    assert sum(len(v) == 2 for v in evalues.values()) >= 3

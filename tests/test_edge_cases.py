@@ -106,13 +106,13 @@ def test_prefilter_plan_broadcasts_query_side(spark):
     """Plan-shape regression: the prefilter must broadcast the query k-mer
     side, never shuffle the index for a small query set."""
     from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-    from petasearch_spark.operators.prefilter import prefilter
+    from petasearch_spark.operators.prefilter import prefilter_grouped
 
     t = sequences_from_records(
         spark, [(f"t{i}", "ACDEFGHIKLMNPQRSTVWY" * 3) for i in range(5)]
     )
     q = sequences_from_records(spark, [("q0", "ACDEFGHIKLMNPQRSTVWY")])
-    pairs = prefilter(extract_query_kmers(q), build_kmer_index(t))
+    pairs = prefilter_grouped(extract_query_kmers(q), build_kmer_index(t))
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 

@@ -1,0 +1,41 @@
+"""Every ``petasearch_spark`` name a script under scripts/ imports must
+exist: a removed or renamed API then fails here, loudly, instead of
+leaving a smoke script broken until someone next runs it."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import os
+
+import pytest
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+
+
+def _package_imports(path: str) -> list[tuple[str, str | None]]:
+    """(module, name) for every import of the package in one script;
+    name is None for a plain ``import module``."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    out: list[tuple[str, str | None]] = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("petasearch_spark"):
+            out.extend((node.module, a.name) for a in node.names)
+        elif isinstance(node, ast.Import):
+            out.extend((a.name, None) for a in node.names if a.name.startswith("petasearch_spark"))
+    return out
+
+
+@pytest.mark.parametrize("script", sorted(f for f in os.listdir(SCRIPTS) if f.endswith(".py")))
+def test_script_package_imports_resolve(script):
+    missing = []
+    for module, name in _package_imports(os.path.join(SCRIPTS, script)):
+        mod = importlib.import_module(module)
+        if name is None or hasattr(mod, name):
+            continue
+        try:  # `from package import submodule`
+            importlib.import_module(f"{module}.{name}")
+        except ModuleNotFoundError:
+            missing.append(f"from {module} import {name}")
+    assert not missing, f"{script}: {missing}"

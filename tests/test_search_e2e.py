@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
-from petasearch_spark.plans.search import search, search_multi_target
+from petasearch_spark.plans.search import (
+    funnel_report,
+    search,
+    search_multi_target,
+    search_sharded_layout,
+)
 from petasearch_spark.sources.fasta import sequences_from_records
 from petasearch_spark.sources.m8 import M8_COLUMNS, to_m8
 
@@ -194,8 +199,19 @@ def test_multi_target_max_seqs_is_global_not_per_db(spark):
     assert all(len(v) == 1 for v in got.values())
 
 
-@pytest.mark.parametrize("kw", [{"max_eval": 1e-3}, {"target_index": None}])
-def test_multi_target_rejects_unknown_kwargs(kw):
-    """A misspelled or single-DB-only knob must not run the defaults."""
-    with pytest.raises(TypeError):
-        search_multi_target(None, [], **kw)
+@pytest.mark.parametrize(
+    "fn, args, kw",
+    [
+        (search_multi_target, (None, []), {"max_eval": 1e-3}),
+        (search_multi_target, (None, []), {"target_index": None}),
+        (search, (None, None), {"max_eval": 1e-3}),
+        (search_sharded_layout, (None, "/nonexistent"), {"max_eval": 1e-3}),
+        (funnel_report, (None, None), {"max_eval": 1e-3}),
+    ],
+    ids=["kw0", "kw1", "search", "search_sharded_layout", "funnel_report"],
+)
+def test_multi_target_rejects_unknown_kwargs(fn, args, kw):
+    """A misspelled or single-DB-only knob must not run the defaults — on
+    every entry point, before any Spark work (the inputs here are None)."""
+    with pytest.raises(TypeError, match=next(iter(kw))):
+        fn(*args, **kw)

@@ -123,7 +123,7 @@ def test_sharded_index_probe_prunes_partitions(spark, tmp_path):
         read_kmer_index_pruned,
         write_kmer_index_sharded,
     )
-    from petasearch_spark.operators.prefilter import prefilter
+    from petasearch_spark.operators.prefilter import prefilter_grouped
     from petasearch_spark.sources.fasta import sequences_from_records
 
     rng = random.Random(9)
@@ -165,10 +165,17 @@ def test_sharded_index_probe_prunes_partitions(spark, tmp_path):
     assert one_shard.count() == expected < total / 8
     one.unpersist()
 
-    # value equality vs the unpruned probe
+    # value equality vs the unpruned probe, over the member rows of the
+    # surviving pairs (the grouped lists exploded back to one row a match)
+    def member_rows(index):
+        m = F.explode(F.arrays_zip("kmers", "qpositions")).alias("m")
+        return prefilter_grouped(qk, index).select("query_id", "target_id", m).select(
+            "query_id", "target_id",
+            F.col("m.kmers").alias("kmer"), F.col("m.qpositions").alias("pos"),
+        )
+
     full = build_kmer_index(seqs)
-    a = prefilter(qk, pruned).select("query_id", "target_id", "kmer", "pos")
-    b = prefilter(qk, full).select("query_id", "target_id", "kmer", "pos")
+    a, b = member_rows(pruned), member_rows(full)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.count() > 0  # self-hit guarantees rows
     qk.unpersist()
@@ -194,6 +201,37 @@ def test_sharded_index_empty_query_and_meta(spark, tmp_path):
     # a sub-k sequence yields no kmers
     empty_qk = extract_query_kmers(sequences_from_records(spark, [("q0", "ACD")]))
     assert read_kmer_index_pruned(spark, path, empty_qk).count() == 0
+
+
+def test_sidecar_meta_cache_is_bounded_lru(spark, tmp_path, monkeypatch):
+    """The in-process sidecar cache keeps at most _META_CACHE_SIZE
+    entries, least recently used out first, and an evicted sidecar is
+    read again from disk with its own values."""
+    from collections import OrderedDict
+
+    from petasearch_spark.functions.localframe import literal_df
+    from petasearch_spark.operators import kmer_index
+
+    monkeypatch.setattr(kmer_index, "_META_CACHE", OrderedDict())
+    monkeypatch.setattr(kmer_index, "_META_CACHE_SIZE", 2)
+    paths = []
+    for n in (10, 11, 12):
+        p = str(tmp_path / f"idx{n}")
+        literal_df(spark, [(n, 9, "ACDEFGHIKLMNPQRSTVWY")],
+                   "num_shards int, k int, alphabet string").write.parquet(p + "/_ps_meta")
+        paths.append(p)
+
+    def cached():
+        return [os.path.basename(os.path.dirname(key[0])) for key in kmer_index._META_CACHE]
+
+    for p in paths:
+        kmer_index.read_kmer_index_meta(spark, p)
+    assert cached() == ["idx11", "idx12"]  # idx10 evicted
+    assert kmer_index.read_kmer_index_meta(spark, paths[1])["num_shards"] == 11  # a hit
+    assert cached() == ["idx12", "idx11"]
+    meta = kmer_index.read_kmer_index_meta(spark, paths[0])  # re-read from disk
+    assert (meta["num_shards"], meta["k"]) == (10, 9)
+    assert cached() == ["idx11", "idx10"]
 
 
 def test_sequence_store_pruned_fetch(spark, tmp_path):
