@@ -731,41 +731,41 @@ UNGATED: dict[str, str] = {
         " semi-join class stays gated via the returning repeat_customers"
         " (groupBy-count HAVING) and keeps pytest parity at both SFs"
     ),
-    "protein_search_sharded": (
-        "NEW in round 10 (mid-round, after the rotation settled): the full"
-        " cascade through the sharded interactive layout — logical output"
-        " duplicates protein_search (shares its regression-golden oracle"
-        " verbatim); full DuckDB parity at both SFs in pytest from day one,"
-        " the pruned-fetch plan + batch-equality pinned in"
-        " tests/test_skew_pruning.py; listed in PENDING_FIRST_GATE to take a"
-        " gate slot at the round-11 rotation"
+    # --- round-12 rotation: the four round-10 additions queued in
+    # PENDING_FIRST_GATE (protein_search_sharded, protein_search_stream,
+    # protein_search_sharded_delta, protein_index_stream_append) take
+    # their first gate slot — two of them are streaming twins whose
+    # replay moved onto the one streaming.stateful.run_replay runner in
+    # the same change. The four slots come from rows green for rounds
+    # [8, 9, 10, 11] whose class keeps another gated row; every stream
+    # twin keeps its slot (all of them were rewired onto the runner).
+    # The flagship search cascade (protein_search, protein_search_masked,
+    # protein_prefilter) stays pinned. All four keep full DuckDB parity
+    # at sf0.001 AND the gate SF in tests/test_oracle_parity.py.
+    "cm_heavy_hitters": (
+        "rotated out round 12 after 4 green rounds; the gated"
+        " cm_stream_heavy_hitters shares this query's DuckDB oracle"
+        " VERBATIM (counter addition is associative, so the stream-built"
+        " matrix must equal the batch sketch exactly) — the identical"
+        " output stays gated via the harder streaming path"
     ),
-    "protein_search_stream": (
-        "NEW in round 10 (mid-round): the streaming twin of the interactive"
-        " cascade — per-micro-batch probes through the SAME"
-        " sharded_search_queries core as the batch entry, idempotent"
-        " per-batch sink; shares protein_search's oracle verbatim (union"
-        " over batches == batch answer). Full pytest parity from day one;"
-        " listed in PENDING_FIRST_GATE for the round-11 rotation"
+    "events_zorder_layout": (
+        "rotated out round 12 after 4 green rounds; the Morton key keeps"
+        " its python-reference and monotonicity pins plus the pruning and"
+        " round-trip tests in tests/test_layout.py, and DuckDB parity at"
+        " both SFs in pytest"
     ),
-    "protein_search_sharded_delta": (
-        "NEW in round 10 (mid-round): the cascade against a layout grown"
-        " by append_sharded_layout (LSM delta generations — the"
-        " incremental-ingest path the batch-only reference lacks); probe"
-        " re-resolves J2 over the pruned union of generations and sums"
-        " sidecar db_residues, so it shares protein_search's golden oracle"
-        " verbatim. Full pytest parity + append/compact law tests"
-        " (tests/test_sharded_delta.py) from day one; listed in"
-        " PENDING_FIRST_GATE for the round-11 rotation"
+    "events_retention_cohorts": (
+        "rotated out round 12 after 4 green rounds; the per-user"
+        " earliest-event aggregation stays gated via events_conversion_funnel"
+        " (same first-ts-per-user pass over the events) and the cohort"
+        " triangle keeps pytest parity at both SFs"
     ),
-    "protein_index_stream_append": (
-        "NEW in round 10 (mid-round): the STREAMED form of layout growth"
-        " — target arrivals folded in per micro-batch via foreachBatch"
-        " append (replay-safe: the atomic generation claim makes the"
-        " id-disjointness check a replay detector); probed after the"
-        " drain it shares protein_search's golden oracle verbatim. Full"
-        " pytest parity + the exactly-once replay pin from day one;"
-        " listed in PENDING_FIRST_GATE for the round-11 rotation"
+    "events_proximity_pairs": (
+        "rotated out round 12 after 4 green rounds; the temporal-"
+        " correlation join class stays gated via events_stream_join (the"
+        " watermark-bounded interval join over the same events) and keeps"
+        " pytest parity at both SFs"
     ),
 }
 
@@ -774,12 +774,7 @@ UNGATED: dict[str, str] = {
 #: MUST be rotated into the gate at the next rotation (value = round
 #: added). tests/test_gate_ledger.py exempts exactly these names from
 #: the no-never-gated invariant.
-PENDING_FIRST_GATE: dict[str, int] = {
-    "protein_search_sharded": 10,
-    "protein_search_stream": 10,
-    "protein_search_sharded_delta": 10,
-    "protein_index_stream_append": 10,
-}
+PENDING_FIRST_GATE: dict[str, int] = {}
 
 #: The round whose driver artifact does NOT exist yet. Bumped as part
 #: of each round-open rotation edit (tests/test_gate_ledger.py keeps it
@@ -787,7 +782,7 @@ PENDING_FIRST_GATE: dict[str, int] = {
 #: ledger generator anchors on this instead of inferring the round from
 #: artifact files, so a freshly-landed driver artifact cannot shift the
 #: derivation (ADVICE r9 medium).
-CURRENT_ROUND: int = 10
+CURRENT_ROUND: int = 12
 
 #: driver-gated queries, in registry order
 GATED: list[str] = [n for n in REGISTRY if n not in UNGATED]

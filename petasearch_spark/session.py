@@ -3,6 +3,11 @@
 Local testing runs on local[N]; the configs below are the ones that also
 matter on a real cluster (AQE, skew-join handling, Arrow batching for the
 pandas-UDF alignment kernel, partition sizing).
+
+The session carries no streaming overrides: a live stream built on it
+keeps Spark's defaults (no-data micro-batches on, so an idle watermarked
+query still evicts state). The streaming twins' replay-only settings are
+scoped to each replay by ``streaming.stateful.run_replay``.
 """
 
 from __future__ import annotations
@@ -60,17 +65,6 @@ def get_spark(app_name: str = "petasearch_spark", shuffle_partitions: int | None
         # the ContextCleaner remove a checkpoint's files once its RDD is
         # GC'd, or the durable dir grows without bound across rounds
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        # package-wide streaming convention (round 11, measured on k77):
-        # every streaming twin is an availableNow REPLAY whose sink never
-        # relies on a no-data micro-batch — the only watermarked query
-        # (the stream-stream INNER join) emits rows exclusively on data
-        # batches, and the trailing empty batch exists only to advance
-        # the watermark and evict state the terminating query is about
-        # to drop anyway. That empty batch cost a full addBatch cycle
-        # (~3 s: 4x32 state-store commits for zero rows). On a live
-        # 24/7 stream this stays enabled so eviction keeps pace; for
-        # replays it is pure machinery. Results are oracle-pinned.
-        .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -93,12 +87,6 @@ _SESSION_DEFAULTS: dict[str, str] = {
     # under UTC; a differently-configured caller would silently shift
     # instants otherwise
     "spark.sql.session.timeZone": "UTC",
-    # availableNow replays never need the trailing no-data micro-batch
-    # (see the get_spark builder note); applied to foreign sessions so
-    # the driver's gate session times the same plan the bench session
-    # runs. Read at STREAM START, so setting it here cannot affect a
-    # concurrently RUNNING stream.
-    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
 }
 
 

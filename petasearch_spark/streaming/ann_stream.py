@@ -34,6 +34,7 @@ from petasearch_spark.operators.similarity import N_QUERIES, _as_double, cosine_
 from petasearch_spark.sources.tables import load_table
 from petasearch_spark.streaming.stateful import (
     _stage_two_files,
+    run_replay,
     source_fingerprint,
     staged_cache,
 )
@@ -50,13 +51,13 @@ def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_queries(spark: SparkSession, emb: DataFrame, sf_dir: str) -> str:
+def _query_stream(spark: SparkSession, emb: DataFrame, sf_dir: str) -> DataFrame:
     """Stage the query vectors (vec_id < N_QUERIES) as a 2-file parquet
-    stream source. Cached per (source CONTENT, N_QUERIES) — the staged
-    rows depend on the cutoff, so changing N_QUERIES must invalidate the
-    cache, not silently serve the old query set (round-4 review finding) —
-    and published atomically so concurrent runs never see a partial
-    write."""
+    stream source, read one file per micro-batch. The staging is cached
+    per (source CONTENT, N_QUERIES) — the staged rows depend on the
+    cutoff, so changing N_QUERIES must invalidate the cache, not silently
+    serve the old query set (round-4 review finding) — and published
+    atomically so concurrent runs never see a partial write."""
     fp = source_fingerprint(
         os.path.join(sf_dir, "embeddings.parquet"), f"nq={N_QUERIES}"
     )
@@ -67,7 +68,12 @@ def _stage_queries(spark: SparkSession, emb: DataFrame, sf_dir: str) -> str:
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         ).coalesce(1).write.mode("overwrite").parquet(tmp)
 
-    return _stage_two_files(spark, staged_cache(q_src, build), "query_id")
+    staged = _stage_two_files(spark, staged_cache(q_src, build), "query_id")
+    return (
+        spark.readStream.schema("query_id long, qv array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
+    )
 
 
 def _sweep_dead_sinks() -> None:
@@ -93,17 +99,18 @@ def _sweep_dead_sinks() -> None:
 
 
 def _run_foreach_stream(
-    spark: SparkSession,
-    staged: str,
+    stream: DataFrame,
     sink_tag: str,
     probe_fn: Callable[[DataFrame, list], DataFrame],
+    schema: str = RESULT_SCHEMA,
+    order_by: tuple[str, ...] = ("query_id", "rk"),
 ) -> DataFrame:
-    """Drive `staged` as a maxFilesPerTrigger=1 stream, run `probe_fn`
-    per micro-batch, append its result to a per-tag, PER-PROCESS sink
-    (cleared per run; pid-unique so concurrent suite runs cannot rmtree
-    or double-append each other's in-flight sink — round-4 review
-    finding), and return the combined result — a typed empty frame if
-    nothing was produced.
+    """Replay ``stream``, run `probe_fn` per micro-batch, write its result
+    to a per-tag, PER-PROCESS sink (cleared per run; pid-unique so
+    concurrent suite runs cannot rmtree or double-append each other's
+    in-flight sink — round-4 review finding), and return the combined
+    result read back with ``schema``/``order_by`` — a typed empty frame
+    if nothing was produced.
 
     `probe_fn(batch_df, persisted)` must append any DataFrame it
     persist()s to `persisted`; ONLY those frames are unpersisted after
@@ -116,22 +123,8 @@ def _run_foreach_stream(
         tempfile.gettempdir(), f"ps_ann_stream_sink_{sink_tag}_{os.getpid()}"
     )
     shutil.rmtree(sink, ignore_errors=True)
-    run_batch = make_probe_batch_writer(sink, probe_fn)
-
-    stream = (
-        spark.readStream.schema("query_id long, qv array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    with tempfile.TemporaryDirectory() as ckpt:
-        query = (
-            stream.writeStream.foreachBatch(run_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return read_probe_sink(spark, sink)
+    run_replay(stream, make_probe_batch_writer(sink, probe_fn))
+    return read_probe_sink(stream.sparkSession, sink, schema=schema, order_by=order_by)
 
 
 def make_probe_batch_writer(
@@ -194,12 +187,13 @@ def ann_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no query vectors: skip staging + the whole streaming machinery
         # (the empty-table sweep otherwise pays a full stream startup)
         return literal_df(spark, [], RESULT_SCHEMA)
-    staged = _stage_queries(spark, emb, sf_dir)
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     # the SAME core as the batch operator — stream/batch cannot drift
     # (cosine_topk persists nothing, so the tracked list stays empty)
     return _run_foreach_stream(
-        spark, staged, f"brute_{fp}", lambda batch, _p: cosine_topk(batch, emb)
+        _query_stream(spark, emb, sf_dir),
+        f"brute_{fp}",
+        lambda batch, _p: cosine_topk(batch, emb),
     )
 
 
@@ -248,10 +242,8 @@ def ann_ivf_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(tempfile.gettempdir(), f"ps_ivf_stream_idx2_{fp}"),
         lambda tmp: write_ivf_index(emb, tmp, cent_rows),
     )
-    staged = _stage_queries(spark, emb, sf_dir)
     return _run_foreach_stream(
-        spark,
-        staged,
+        _query_stream(spark, emb, sf_dir),
         f"ivf_{fp}",
         lambda batch, persisted: probe_ivf_index(
             spark, idx_path, batch, cent_rows, _persisted=persisted

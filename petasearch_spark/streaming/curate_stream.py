@@ -59,6 +59,7 @@ def curate_stream(spark: SparkSession, input_dir: str, out_dir: str) -> dict:
     """
     from petasearch_spark.cli import _curate_report
     from petasearch_spark.sources.jsonl import parse_jsonl_lines
+    from petasearch_spark.streaming.stateful import run_replay
 
     bronze = os.path.join(out_dir, "bronze")
     bronze_docs = os.path.join(bronze, "documents.parquet")
@@ -101,13 +102,7 @@ def curate_stream(spark: SparkSession, input_dir: str, out_dir: str) -> dict:
         finally:
             batch.unpersist()
 
-    q = (
-        parsed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_replay(parsed, sink, checkpoint=checkpoint)
 
     if not os.path.isdir(bronze_docs):
         raise ValueError(

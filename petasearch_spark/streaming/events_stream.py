@@ -6,9 +6,11 @@ stream with windowed aggregation. The batch twin (operators/events.py
 events_hourly) provides the DuckDB oracle: a correct streaming run over the
 full file set must produce exactly the batch answer.
 
-Runs with ``Trigger.AvailableNow`` + a memory sink so the result is a
-normal DataFrame the driver can collect; in production the same lineage
-points at a file/Kafka source and a parquet/Delta sink with checkpointing.
+Both twins run through the package's one replay runner
+(``streaming.stateful.run_replay``: availableNow into a memory sink), so
+the result is a normal DataFrame the driver can collect; in production
+the same lineage points at a file/Kafka source and a parquet/Delta sink
+with checkpointing.
 """
 
 from __future__ import annotations
@@ -20,56 +22,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petasearch_spark.session import apply_session_defaults
+from petasearch_spark.streaming.stateful import run_replay, source_fingerprint, staged_cache
 
 
 def events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling-window counts/sums computed via readStream ->
-    writeStream(availableNow) -> memory sink; returns the final table."""
+    replay into a memory sink; returns the final table."""
     apply_session_defaults(spark)  # nanosAsLong + UTC for a foreign session
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # The file-stream source wants a directory; stage the single parquet
-    # file behind a symlink (a real deployment points this at the landing
-    # directory new files arrive in).
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), os.path.join(stage, "events.parquet"))
+    from petasearch_spark.operators.events import _finite_value
     from petasearch_spark.sources.tables import normalize_events_ts
 
-    stream = normalize_events_ts(spark.readStream.schema(batch_schema).parquet(stage))
-    from petasearch_spark.operators.events import _finite_value
-
-    # day-less law + finite-value law, explicit on BOTH sides (round-7
-    # fuzz): F.window silently drops NULL-ts rows, and Spark's
-    # double->decimal cast silently NULLs non-finite where DuckDB's CAST
-    # errors — the batch events_hourly applies both; the stream twin
-    # must not drift from it
-    stream = stream.filter(F.col("ts").isNotNull())
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_finite_value(F.col("value")).cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
     name = "events_stream_hourly_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with tempfile.TemporaryDirectory() as ckpt:
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    # The file-stream source wants a directory; stage the single parquet
+    # file behind a symlink (a real deployment points this at the landing
+    # directory new files arrive in). The stage lives only as long as the
+    # replay: the returned frame reads the memory sink, not the stage.
+    with tempfile.TemporaryDirectory(prefix="events_stream_") as stage:
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), os.path.join(stage, "events.parquet"))
+        stream = normalize_events_ts(spark.readStream.schema(batch_schema).parquet(stage))
+        # day-less law + finite-value law, explicit on BOTH sides (round-7
+        # fuzz): F.window silently drops NULL-ts rows, and Spark's
+        # double->decimal cast silently NULLs non-finite where DuckDB's CAST
+        # errors — the batch events_hourly applies both; the stream twin
+        # must not drift from it
+        stream = stream.filter(F.col("ts").isNotNull())
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(_finite_value(F.col("value")).cast("decimal(18,4)")).cast("double").alias("sum_value"),
+            )
+            .select(
+                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
         )
-        query.awaitTermination()
+        run_replay(agg, name, "complete")
     return spark.table(name).orderBy("hour", "event_type")
 
 
@@ -113,8 +104,6 @@ def _stage_join_halves(spark: SparkSession, sf_dir: str) -> str:
     NULL-ts rows match neither half — exactly the old filters' behavior
     (they cannot join: every join condition on a NULL ts is NULL)."""
     import time as _time
-
-    from petasearch_spark.streaming.stateful import source_fingerprint, staged_cache
 
     src = os.path.join(sf_dir, "events.parquet")
     key = source_fingerprint(src, "pe-midsplit")
@@ -223,19 +212,7 @@ def events_stream_purchase_error_join(spark: SparkSession, sf_dir: str) -> DataF
         (F.unix_micros("e_ts") - F.unix_micros("p_ts")).alias("gap_us"),
     )
     name = "events_stream_join_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with tempfile.TemporaryDirectory() as ckpt:
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_replay(joined, name, "append")
     return spark.table(name).orderBy("user_id", "purchase_id", "error_id")
 
 

@@ -80,7 +80,7 @@ def _build_ingested_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> No
         load_table,
     )
     from petasearch_spark.operators.kmer_index import write_sharded_layout
-    from petasearch_spark.streaming.stateful import _stage_two_files
+    from petasearch_spark.streaming.stateful import _stage_two_files, run_replay
 
     docs = load_table(spark, "documents", sf_dir, widen_scan=True)
     seqs = derived_sequences(docs).drop("source")
@@ -102,14 +102,7 @@ def _build_ingested_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> No
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        query = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_replay(stream, fold)
 
 
 def protein_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -90,7 +90,7 @@ def docs_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, so the row proves the stream actually parsed payloads, not
     just counted lines."""
     from petasearch_spark.sources.jsonl import JSONL_DOC_SCHEMA
-    from petasearch_spark.streaming.stateful import _run_to_memory
+    from petasearch_spark.streaming.stateful import run_replay
 
     stage = _stage_jsonl_two_files(spark, sf_dir)
     parsed = (
@@ -135,7 +135,7 @@ def docs_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "docs_stream_ingest_sink"
-    _run_to_memory(counts, name, "complete")
+    run_replay(counts, name, "complete")
     return spark.table(name).orderBy("source")
 
 

@@ -28,20 +28,14 @@ after a crash overwrites its own dir — exactly-once results).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.localframe import literal_df
 
-from petasearch_spark.streaming.ann_stream import (
-    _sweep_dead_sinks,
-    make_probe_batch_writer,
-    read_probe_sink,
-)
-from petasearch_spark.streaming.stateful import _stage_two_files
+from petasearch_spark.streaming.ann_stream import _run_foreach_stream
+from petasearch_spark.streaming.stateful import _stage_two_files, source_fingerprint
 
 #: protein_search's output contract — ONE copy, shared with the batch
 #: registry entries (round-10 review finding: three hand-kept lists)
@@ -60,7 +54,6 @@ def protein_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         derived_sequences,
         sharded_search_queries,
     )
-    from petasearch_spark.streaming.stateful import source_fingerprint
 
     root = _ensure_sharded_layout(spark, sf_dir)
     staged = _stage_two_files(spark, os.path.join(sf_dir, "documents.parquet"), "doc_id")
@@ -79,28 +72,16 @@ def protein_search_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, queries, root=root, persisted=persisted
         )
 
-    _sweep_dead_sinks()
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    sink = os.path.join(
-        tempfile.gettempdir(), f"ps_ann_stream_sink_search{fp}_{os.getpid()}"
-    )
-    shutil.rmtree(sink, ignore_errors=True)
-    run_batch = make_probe_batch_writer(sink, probe)
-
     stream = (
         spark.readStream.schema("doc_id long, text string, source string")
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        query = (
-            stream.writeStream.foreachBatch(run_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-
-    return read_probe_sink(
-        spark, sink, schema=SEARCH_RESULT_SCHEMA, order_by=("query_id", "target_id")
+    return _run_foreach_stream(
+        stream,
+        f"search{fp}",
+        probe,
+        schema=SEARCH_RESULT_SCHEMA,
+        order_by=("query_id", "target_id"),
     )

@@ -20,12 +20,14 @@ from __future__ import annotations
 import logging
 import os
 import tempfile
+from collections.abc import Callable
 from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from petasearch_spark.session import apply_session_defaults
@@ -220,21 +222,56 @@ def _stage_two_files(spark: SparkSession, src_parquet: str, split_col: str) -> s
     return os.path.join(staged_cache(root, build), "flat")
 
 
-def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> None:
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def run_replay(
+    stream_df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """THE replay runner: drive ``stream_df`` under
+    ``trigger(availableNow=True)`` to termination and return the
+    terminated query (its ``recentProgress`` holds one entry per
+    micro-batch). ``sink`` is a memory-table name (the table is
+    ``spark.table(sink)`` afterwards) or a ``foreachBatch`` function.
+    ``checkpoint`` defaults to a temporary directory removed on return;
+    pass a durable one to resume across runs (curate-stream's ingest
+    barrier).
+
+    A replay has no use for the trailing no-data micro-batch: the
+    terminating query would advance its watermark and evict state only
+    to drop that state anyway (a full state-store commit cycle for zero
+    rows). No-data batches are therefore off for THIS query only — the
+    session's previous value (or its absence) is restored once the
+    query ends, so a live watermarked stream on the same session keeps
+    evicting state while idle."""
     spark = stream_df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
+    prev = spark.conf.get(_NO_DATA_BATCHES, None)
+    query = None
+    with tempfile.TemporaryDirectory() as tmp_ckpt:
+        writer = (
             stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", checkpoint or tmp_ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        if callable(sink):
+            writer = writer.foreachBatch(sink)
+        else:
+            writer = writer.format("memory").queryName(sink)
+        spark.conf.set(_NO_DATA_BATCHES, "false")
+        try:
+            query = writer.start()
+            query.awaitTermination()
+        finally:
+            if query is not None and query.isActive:
+                query.stop()
+            if prev is None:
+                spark.conf.unset(_NO_DATA_BATCHES)
+            else:
+                spark.conf.set(_NO_DATA_BATCHES, prev)
+    return query
 
 
 def user_totals_precount(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -339,7 +376,7 @@ def events_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = user_totals_stream(stream)
     name = "events_stream_user_totals_sink"
-    _run_to_memory(out, name, "update")
+    run_replay(out, name, "update")
     return latest_user_totals(spark.table(name))
 
 
@@ -365,7 +402,7 @@ def docs_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["source", "content_hash"])
     )
     name = "docs_stream_dedup_sink"
-    _run_to_memory(stream, name, "append")
+    run_replay(stream, name, "append")
     return (
         spark.table(name)
         .groupBy("source")
@@ -441,7 +478,7 @@ def cm_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = "cm_stream_sink"
-    _run_to_memory(out, name, "update")
+    run_replay(out, name, "update")
     # latest emission per counter = the final running value
     counters = (
         spark.table(name).groupBy("d", "b").agg(F.max("c").alias("c"))
@@ -627,7 +664,7 @@ def events_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = "events_stream_quantiles_sink"
-    _run_to_memory(out, name, "update")
+    run_replay(out, name, "update")
     emitted = spark.table(name)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (

@@ -3,11 +3,96 @@ oracle parity test alone would also pass for a single-batch run)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
-from petasearch_spark.streaming.stateful import docs_stream_dedup, events_stream_user_totals
+from petasearch_spark.streaming.stateful import docs_stream_dedup, events_stream_user_totals, run_replay
 
 SF_DIR = "/root/testdata/sf0.001"
+NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def _watermarked_two_file_stream(spark, root: str):
+    """A watermarked windowed count over a 2-file parquet source read one
+    file per micro-batch; batch 1 advances event time past batch 0's
+    window, so a no-data batch after it WOULD have work to do."""
+    flat = os.path.join(root, "flat")
+    os.makedirs(flat)
+    for i, ts in enumerate(["2024-01-01 10:00:00", "2024-01-01 14:00:00"]):
+        part = os.path.join(root, f"b{i}")
+        spark.createDataFrame([(ts, 1.0)], "ts_s string, value double").selectExpr(
+            "CAST(ts_s AS TIMESTAMP) AS ts", "value"
+        ).coalesce(1).write.parquet(part)
+        (f,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        # the file source orders by modification time: b0 strictly first
+        os.utime(os.path.join(part, f), (1_700_000_000 + i, 1_700_000_000 + i))
+        os.symlink(os.path.join(part, f), os.path.join(flat, f"p{i}.parquet"))
+    return (
+        spark.readStream.schema("ts timestamp, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"))
+        .count()
+    )
+
+
+@pytest.fixture
+def no_data_conf(spark):
+    """Run a test against a chosen session value of the no-data key and
+    put the session's own value back afterwards."""
+    own = spark.conf.get(NO_DATA_KEY, None)
+
+    def set_to(value):
+        if value is None:
+            spark.conf.unset(NO_DATA_KEY)
+        else:
+            spark.conf.set(NO_DATA_KEY, value)
+
+    yield set_to
+    set_to(own)
+
+
+@pytest.mark.parametrize("prior", [None, "true"])
+def test_replay_runs_only_data_batches_and_restores_session(spark, tmp_path, no_data_conf, prior):
+    """The replay skips the trailing no-data micro-batch (exactly one
+    batch per staged file), and the override is scoped to the replay:
+    the session's value afterwards is the value it had before — unset
+    stays unset, an explicit "true" stays "true"."""
+    no_data_conf(prior)
+    query = run_replay(_watermarked_two_file_stream(spark, str(tmp_path)), "replay_probe_sink")
+    assert [p.batchId for p in query.recentProgress] == [0, 1]
+    assert not query.isActive
+    assert spark.conf.get(NO_DATA_KEY, None) == prior
+
+
+def test_replay_restores_session_when_the_sink_raises(spark, tmp_path, no_data_conf):
+    """A failing foreachBatch function fails the replay, but the session
+    value is still restored and no query is left running."""
+    no_data_conf("true")
+
+    def boom(_batch, _batch_id):
+        raise RuntimeError("sink failure")
+
+    with pytest.raises(Exception, match="sink failure"):
+        run_replay(_watermarked_two_file_stream(spark, str(tmp_path)), boom)
+    assert spark.conf.get(NO_DATA_KEY, None) == "true"
+    assert spark.streams.active == []
+
+
+def test_events_stream_hourly_leaves_no_stage_dir(spark):
+    """The symlink stage lives only as long as its replay."""
+    from petasearch_spark.streaming.events_stream import events_stream_hourly
+
+    def n_stages():
+        return sum(1 for f in os.listdir(tempfile.gettempdir()) if f.startswith("events_stream_"))
+
+    before = n_stages()
+    assert events_stream_hourly(spark, SF_DIR).count() > 0
+    assert n_stages() == before
 
 
 def test_user_totals_state_carries_across_batches(spark):
@@ -58,11 +143,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     """Watermark semantics demo: batch 2 delivers an event whose timestamp
     is far behind the watermark advanced by batch 1 -> the late row is
     DROPPED from its (already emitted) window in append mode."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # Watermark propagation lags one batch (batch N filters with stats
     # from batch N-1), so the demonstration needs THREE batches: b0 loads
     # the 10:00 window and advances event time to 13:00; b1's arrival
@@ -100,15 +180,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
         .select(F.date_format("w.start", "HH:mm").alias("hour"), "total")
     )
     name = "wm_sink"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+    run_replay(stream, name)
     got = {r["hour"]: r["total"] for r in spark.table(name).collect()}
     # 10:00 window closed with only batch-0 rows; the late 100.0 from
     # batch 2 was dropped and never appears anywhere.
