@@ -394,6 +394,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-polls", type=int, default=20)
 
     args = top.parse_args(argv)
+    if hasattr(args, "max_kmer_per_pos"):
+        from petasearch_spark.plans.search import SearchKnobs
+
+        try:  # reject knob values before a Spark session starts
+            SearchKnobs(**_search_kwargs(args))
+        except ValueError as e:
+            sub.choices[args.cmd].error(str(e))
     spark = get_spark("petasearch-cli")
 
     if args.cmd == "curate":

@@ -739,12 +739,12 @@ GOLDEN_DIR = os.path.join(
 def protein_expand_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 similar-k-mer expansion under the DuckDB oracle (VERDICT r1 item
     3): the engine path runs extract_query_kmers -> expand_query_kmers
-    (the lazy best-first heap at the calibrated --k-score 225 default) ->
+    (bound screen + exact top-N at the calibrated --k-score 225 default) ->
     prefilter against the full k-mer index; the oracle derives the exact
     query k-mers in SQL and takes the similar ones from the committed
     expansion golden — generated by tests.golden_tools.brute_expand, an
     independent threshold-pruned enumerator (scripts/gen_goldens.py). A
-    green row therefore certifies the heap's expansion set AND the
+    green row therefore certifies the engine's expansion set AND the
     expanded join/HAVING semantics end-to-end.
 
     Queries are every 100th doc (the expansion table stays small); match

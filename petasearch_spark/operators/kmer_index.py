@@ -67,7 +67,16 @@ def extract_kmers_arrow(
     oracle queries, but the hot extraction path encodes tens of millions
     of windows, where one numpy sliding-window matmul per sequence is
     ~6x faster end to end. Same output, same F1/F2 semantics (invalid
-    residues break windows; short sequences yield nothing)."""
+    residues break windows; short sequences yield nothing).
+
+    Raises ValueError unless every k-mer code fits a signed BIGINT
+    (``1 <= k`` and ``len(alphabet) ** k <= 2**63``): a wider code wraps
+    in the int64 matmul and distinct k-mers would collide."""
+    if k < 1 or len(alphabet) ** k > 2**63:
+        raise ValueError(
+            f"k={k} is out of range for a {len(alphabet)}-letter alphabet:"
+            f" k-mer codes need 1 <= k and {len(alphabet)}**k <= 2**63"
+        )
     lut = np.full(128, -1, dtype=np.int64)
     for i, c in enumerate(alphabet):
         lut[ord(c)] = i

@@ -22,8 +22,12 @@ Spark design: expansion is a pure function of the k-mer VALUE, so we
 expand each DISTINCT k-mer once (a pandas UDF over the distinct-kmer
 DataFrame — typically orders of magnitude smaller than the kmer stream)
 and join the expansion back to (query_id, pos) rows; the unconditional
-exact row is a unionByName. The chunk score vectors are numpy broadcasts
-of seed-matrix rows — rebuilt per Arrow batch in microseconds.
+exact row is a unionByName. Each Arrow batch first screens its k-mers in
+one numpy step by their best reachable score (the sum of their residues'
+seed-matrix row maxima — the heads of the reference's sorted lists), so
+a k-mer that cannot reach the threshold costs nothing. Survivors get an
+exact vectorized top-N: per chunk, the entries that clear the bound, cut
+to the top N plus ties, then one filtered cartesian product.
 
 Accepted divergence from the reference (documented for the judge): on
 score TIES at the top-N boundary the reference keeps whichever its heap
@@ -34,7 +38,6 @@ brute-force checks, scripts/gen_goldens.py).
 
 from __future__ import annotations
 
-import heapq
 from typing import Iterator
 
 import numpy as np
@@ -88,79 +91,40 @@ def expand_kmer_scored(
     threshold: int = DEFAULT_KMER_THRESHOLD,
     max_n: int = DEFAULT_MAX_PER_POS,
     matrix: np.ndarray = KMER_SEED_MATRIX,
-    _chunk_cache: dict | None = None,
 ) -> list[tuple[int, int]]:
     """Top-`max_n` (k-mer, score) by substitution score vs `kmer`, score
     **>=** `threshold` (generateKmerList's filter, FixedKmerGenerator.cpp
-    :315,339). Lazy best-first merge over per-chunk sorted score lists —
-    the reference's top-N heap algorithm — then canonicalized to
-    (score DESC, kmer ASC) including boundary ties, so the result is the
-    unique canonical top-N set."""
-    codes = _decode(kmer, k)
-    sizes = _chunk_sizes(k)
-    chunks = []
-    off = 0
-    for s in sizes:
-        chunks.append(codes[off : off + s])
-        off += s
-    # per-chunk sorted score tables — the reference precomputes these once
-    # as ExtendedSubstitutionMatrix; we memoize per distinct chunk (the
-    # same 3-mers recur across a query set's k-mers constantly)
-    orders = []
-    sorted_scores = []
-    for c in chunks:
-        key = tuple(c)
-        hit = _chunk_cache.get(key) if _chunk_cache is not None else None
-        if hit is None:
-            v = _chunk_scores(c, matrix)
-            o = np.argsort(-v, kind="stable")
-            hit = (o, v[o])
-            if _chunk_cache is not None:
-                _chunk_cache[key] = hit
-        orders.append(hit[0])
-        sorted_scores.append(hit[1])
-    g = len(chunks)
-    # multipliers to recompose the full kmer code from chunk codes
-    mults = []
-    m = 1
-    for s in reversed(sizes):
-        mults.append(m)
-        m *= _A ** s
-    mults = mults[::-1]
+    :315,339), in canonical (score DESC, kmer ASC) order.
 
-    start = tuple([0] * g)
-    best0 = sum(float(ss[0]) for ss in sorted_scores)
-    heap = [(-best0, start)]
-    seen = {start}
-    out: list[tuple[int, int]] = []  # (code, score)
-    cutoff: int | None = None
-    while heap:
-        neg, idx = heapq.heappop(heap)
-        score = int(-neg)
-        if score < threshold:
-            break
-        if len(out) >= max_n:
-            # keep draining only boundary ties so the canonical sort below
-            # can pick the (score DESC, code ASC) winners among them
-            if cutoff is None:
-                cutoff = out[-1][1] if out else threshold
-            if score < cutoff:
-                break
-        code = 0
-        for j in range(g):
-            code += int(orders[j][idx[j]]) * mults[j]
-        out.append((code, score))
-        for j in range(g):
-            if idx[j] + 1 < len(sorted_scores[j]):
-                nxt = idx[:j] + (idx[j] + 1,) + idx[j + 1 :]
-                if nxt not in seen:
-                    seen.add(nxt)
-                    ns = score - float(sorted_scores[j][idx[j]]) + float(sorted_scores[j][idx[j] + 1])
-                    heapq.heappush(heap, (-ns, nxt))
-        if cutoff is None and len(out) >= max_n:
-            cutoff = out[-1][1]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out[:max_n]
+    Per chunk, only entries that can still reach `threshold` with every
+    other chunk at its maximum survive (the reference's sorted-list-head
+    bound), cut to the top `max_n` plus ties at the `max_n`-th score. The
+    cut is exact: an entry below it has >= `max_n` strictly better
+    entries in its chunk, each giving a strictly better full k-mer. The
+    cartesian product of the survivors is then filtered and sorted."""
+    if max_n < 0:
+        raise ValueError(f"max_n must be >= 0, got {max_n}")
+    if max_n == 0:
+        return []
+    codes = _decode(kmer, k)
+    tables = []
+    off = 0
+    for s in _chunk_sizes(k):
+        tables.append(_chunk_scores(codes[off : off + s], matrix).astype(np.int64))
+        off += s
+    total = sum(int(t.max()) for t in tables)
+    code = np.zeros(1, dtype=np.int64)
+    score = np.zeros(1, dtype=np.int64)
+    for t in tables:
+        keep = np.flatnonzero(t >= threshold - (total - t.max()))
+        if len(keep) > max_n:
+            keep = keep[t[keep] >= np.sort(t[keep])[-max_n]]
+        code = (code[:, None] * len(t) + keep[None, :]).reshape(-1)
+        score = (score[:, None] + t[keep][None, :]).reshape(-1)
+    hit = score >= threshold
+    code, score = code[hit], score[hit]
+    top = np.lexsort((code, -score))[:max_n]
+    return list(zip(code[top].tolist(), score[top].tolist()))
 
 
 def expand_kmer(
@@ -265,34 +229,29 @@ def expand_query_kmers(
     With `bias` (T4, :func:`composition_bias_kmer`): kbias <= 0 and each
     occurrence keeps similar k-mers scoring >= max(threshold - kbias, 0).
     """
-    # Keep the expansion stage WIDE: the distinct-kmer shuffle output is
-    # tiny in bytes, so AQE coalesces it to one or two partitions — which
-    # would serialize the CPU-heavy per-kmer heap into a single Python
-    # worker (observed as 2x run-to-run variance on protein_search_
-    # expanded). An explicit repartition to cluster parallelism costs a
-    # round-trip of 8-byte keys and buys full-width expansion.
-    spark = query_kmers.sparkSession
-    distinct = (
-        query_kmers.select("kmer").distinct()
-        .repartition(max(1, spark.sparkContext.defaultParallelism))
-    )
+    # One numpy screen per Arrow batch: a k-mer's best reachable score is
+    # the sum of its residues' row maxima (the heads of the reference's
+    # sorted chunk lists), so a k-mer below `threshold` has no similar
+    # list. T4 bias only raises the threshold (kbias <= 0), so the screen
+    # at the base threshold is exact with bias too.
+    rowmax = KMER_SEED_MATRIX.max(axis=1).astype(np.int64)
+    place = _A ** np.arange(k, dtype=np.int64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunk_cache: dict = {}  # ≤ 8000 entries of 2×8000 int arrays
         for pdf in batches:
-            kmers = []
-            sims = []
-            scores = []
-            for km in pdf["kmer"]:
-                for s, sc in expand_kmer_scored(
-                    int(km), k, threshold, max_per_pos, _chunk_cache=chunk_cache
-                ):
-                    kmers.append(km)
-                    sims.append(s)
-                    scores.append(sc)
-            yield pd.DataFrame({"kmer": kmers, "sim_kmer": sims, "score": scores})
+            km = pdf["kmer"].to_numpy(dtype=np.int64)
+            best = rowmax[(km[:, None] // place) % _A].sum(axis=1)
+            rows = [
+                (q, s, sc)
+                for q in km[best >= threshold].tolist()
+                for s, sc in expand_kmer_scored(q, k, threshold, max_per_pos)
+            ]
+            yield pd.DataFrame(rows, columns=["kmer", "sim_kmer", "score"])
 
-    expansion = distinct.mapInPandas(run, schema="kmer long, sim_kmer long, score int")
+    expansion = (
+        query_kmers.select("kmer").distinct()
+        .mapInPandas(run, schema="kmer long, sim_kmer long, score int")
+    )
     sim = query_kmers.join(F.broadcast(expansion), "kmer", "inner")
     if bias is not None:
         # bias has one row per (query, pos) — the same order as the query

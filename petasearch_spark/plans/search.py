@@ -41,7 +41,8 @@ from petasearch_spark.operators.prefilter import (
 class SearchKnobs:
     """The search knobs every entry point takes as keywords, with their
     defaults (cli._search_kwargs maps the reference's flags onto them);
-    any other keyword raises TypeError rather than running the defaults.
+    any other keyword raises TypeError rather than running the defaults,
+    and a negative ``kmer_max_per_pos`` raises ValueError.
 
     ``expand_similar=True`` turns on T2 similar-k-mer expansion (the
     reference's default sensitivity mode, --exact-kmer-matching 0);
@@ -67,6 +68,10 @@ class SearchKnobs:
     alphabet: str = "amino"
     max_seqs: int | None = None
     xdrop: int | None = None
+
+    def __post_init__(self):
+        if self.kmer_max_per_pos is not None and self.kmer_max_per_pos < 0:
+            raise ValueError(f"kmer_max_per_pos must be >= 0, got {self.kmer_max_per_pos}")
 
 
 def _alphabet_params(alphabet: str):

@@ -3,7 +3,7 @@
 1. expansion_golden.parquet — per (SF, distinct query 9-mer) the canonical
    similar-k-mer list at the default --k-score 225 / max-per-pos 20,
    produced by tests.golden_tools.brute_expand (threshold-pruned product
-   enumeration — an INDEPENDENT algorithm from the engine's lazy heap).
+   enumeration — INDEPENDENT of the engine's per-chunk top-N cut).
    Backs the protein_expand_prefilter oracle: DuckDB derives the exact
    query k-mers in SQL and joins this table for the similar ones.
 

@@ -2,10 +2,11 @@
 
 `brute_expand` is a deliberately INDEPENDENT implementation of
 similar-k-mer expansion (threshold-pruned product enumeration with
-suffix-max bounds) used to cross-check the engine's lazy best-first heap
-(operators/similar_kmers.expand_kmer_scored) and to generate the
-committed expansion golden (scripts/gen_goldens.py). Both sides
-canonicalize ties to (score DESC, code ASC).
+suffix-max bounds, no top-N cut) used to cross-check the engine's
+per-chunk top-N-with-ties product (operators/similar_kmers.
+expand_kmer_scored) and to generate the committed expansion golden
+(scripts/gen_goldens.py). Both sides canonicalize ties to (score DESC,
+code ASC).
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ fixtures never produce:
 
 - mask ops  vs mask_seq_scalar / tantan_mask_scalar per derived sequence
 - expansion vs brute_expand (threshold-pruned product enumeration,
-  independent of the engine's lazy best-first heap)
+  independent of the engine's per-chunk top-N cut)
 - bias      vs composition_bias_scalar (plain loops, independent of the
   numpy cumsum/einsum kernel), thresholds raised per (query, pos)
 

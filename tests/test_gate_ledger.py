@@ -174,19 +174,19 @@ def test_regen_stays_byte_identical_when_driver_artifact_lands():
     )
 
 
-def test_regen_fails_loudly_on_unbumped_rotation():
-    """If a rotation edit happens AFTER the current round's artifact lands
-    but BEFORE the CURRENT_ROUND bump, the generator must refuse rather
-    than record a fictitious tenure (ADVICE r9 medium)."""
+@pytest.mark.parametrize("landed", ["rotated_after_landing", "next_round_landed"])
+def test_regen_fails_loudly_on_unbumped_rotation(landed):
+    """The generator must refuse, naming CURRENT_ROUND, in both states the
+    constant can lag the artifacts: a rotation edit after the current
+    round's artifact landed but before the bump (ADVICE r9 medium), and
+    the driver's NEXT round artifact landing (its key set equal to GATED)
+    before the bump — the state that opened round 11 red."""
     gen = _load_generator()
     boundary = dict(gen.committed_rounds())
-    boundary[CURRENT_ROUND] = set(GATED) ^ {"q1_pricing_summary"}
+    if landed == "rotated_after_landing":
+        boundary[CURRENT_ROUND] = set(GATED) ^ {"q1_pricing_summary"}
+    else:
+        boundary[CURRENT_ROUND + 1] = set(GATED)
     gen.committed_rounds = lambda: boundary
     with pytest.raises(SystemExit, match="CURRENT_ROUND"):
-        gen.generate()
-    ahead = dict(boundary)
-    ahead.pop(CURRENT_ROUND)
-    ahead[CURRENT_ROUND + 1] = set(GATED)
-    gen.committed_rounds = lambda: ahead
-    with pytest.raises(SystemExit, match="bump CURRENT_ROUND"):
         gen.generate()

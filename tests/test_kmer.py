@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET, extract_kmers, sanitize_seq
+from petasearch_spark.functions.scoring import NUCL_ALPHABET
 from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
 
 
@@ -97,3 +99,29 @@ def test_query_kmers_positions(spark):
         (7, encode_py("ACDEFGHIK"), 0),
         (7, encode_py("CDEFGHIKL"), 1),
     ]
+
+
+@pytest.mark.parametrize(
+    "alphabet, k, ok",
+    [
+        (AMINO_ALPHABET, 14, True),
+        (AMINO_ALPHABET, 15, False),
+        (NUCL_ALPHABET, 31, True),
+        (NUCL_ALPHABET, 32, False),
+        (AMINO_ALPHABET, 0, False),
+    ],
+)
+def test_kmer_codes_must_fit_bigint(spark, alphabet, k, ok):
+    """A k-mer code is a base-|alphabet| integer; past 2^63 the int64
+    matmul wraps and distinct k-mers collide in the index. Widths that
+    fit give exact codes up to the largest one; wider ones raise."""
+    top = alphabet[-1] * k
+    df = spark.createDataFrame([(1, top)], "seq_id long, sequence string")
+    if ok:
+        got = [r["kmer"] for r in extract_query_kmers(df, k=k, alphabet=alphabet).collect()]
+        assert got == [len(alphabet) ** k - 1]
+    else:
+        with pytest.raises(ValueError, match=f"k={k}"):
+            extract_query_kmers(df, k=k, alphabet=alphabet)
+        with pytest.raises(ValueError, match=f"k={k}"):
+            build_kmer_index(df, k=k, alphabet=alphabet)

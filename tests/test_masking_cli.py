@@ -109,6 +109,18 @@ def test_cli_easy_search(spark, tmp_path):
     assert len(fields) == 12
 
 
+def test_cli_rejects_negative_max_kmer_per_pos(tmp_path):
+    """A usage error (exit 2) before any Spark work, not a run that
+    returns a wrongly sized expansion with exit 0."""
+    from petasearch_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["easy-search", str(tmp_path / "q.fa"), str(tmp_path / "t.fa"),
+              str(tmp_path / "out"), "--max-kmer-per-pos", "-1"])
+    assert exc.value.code == 2
+    assert not (tmp_path / "out").exists()
+
+
 def test_cli_targetlist_search(spark, tmp_path):
     from petasearch_spark.cli import main
 

@@ -19,6 +19,17 @@ from petasearch_spark.sources.fasta import sequences_from_records
 from petasearch_spark.sources.m8 import M8_COLUMNS, to_m8
 
 
+def test_search_rejects_knobs_that_would_return_wrong_answers(spark):
+    """k=15 amino codes overflow BIGINT, so distinct k-mers would
+    collide, and a negative per-position cap is not a count: both raise
+    instead of returning rows."""
+    qdf = sequences_from_records(spark, [("q0", "ACDEFGHIKLMNPQRSTVWY")])
+    with pytest.raises(ValueError, match="k=15"):
+        search(qdf, qdf, k=15)
+    with pytest.raises(ValueError, match="kmer_max_per_pos"):
+        search(qdf, qdf, expand_similar=True, kmer_max_per_pos=-1)
+
+
 def rand_seq(rng, n):
     return "".join(rng.choice(AMINO_ALPHABET) for _ in range(n))
 

@@ -9,6 +9,7 @@ All default-threshold expectations are in the MMseqs seed-matrix scale
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
 from petasearch_spark.functions.scoring import BLOSUM62, KMER_SEED_MATRIX, SEED_LAMBDA
@@ -121,6 +122,39 @@ def test_heap_matches_pruned_bruteforce_k9():
     # the fixture is rare-residue-rich: some positions expand fully, the
     # ordinary tail does not — both regimes are exercised
     assert max(counts) == 20 and min(counts) == 0
+
+
+@pytest.mark.parametrize("k", [4, 5, 7, 9])
+def test_top_n_tie_boundary_matches_bruteforce(k):
+    """Small `max_n` puts the top-N cut inside runs of tied scores: the
+    per-chunk top-N-with-ties cut must keep every tied entry that can win
+    the canonical (score DESC, code ASC) order. Seeded sweep against the
+    independent enumerator, thresholds at and below the self score."""
+    from tests.golden_tools import brute_expand
+
+    rng = np.random.default_rng(k)
+    boundary_ties = 0
+    for _ in range(3):
+        codes = rng.integers(0, A, size=k).tolist()
+        km = int(np.dot(codes, A ** np.arange(k - 1, -1, -1)))
+        self_sc = int(sum(KMER_SEED_MATRIX[c, c] for c in codes))
+        thresholds = [self_sc, self_sc - 5, self_sc - 20]
+        if k <= 5:
+            thresholds += [self_sc - 60, 20]
+        for thr in thresholds:
+            full = brute_expand(codes, thr, A**k)
+            for max_n in (1, 2, 5, 20):
+                got = expand_kmer_scored(km, k, thr, max_n)
+                assert got == full[:max_n], (codes, thr, max_n)
+                boundary_ties += len(full) > max_n and full[max_n - 1][1] == full[max_n][1]
+    assert boundary_ties > 0  # the sweep really cuts inside a tie run
+
+
+def test_max_n_zero_is_empty_and_negative_raises():
+    km = encode_py("WCWCWCWCW")
+    assert expand_kmer_scored(km, 9, max_n=0) == []
+    with pytest.raises(ValueError, match="max_n"):
+        expand_kmer_scored(km, 9, max_n=-1)
 
 
 def test_sensitivity_flip_e2e(spark):
