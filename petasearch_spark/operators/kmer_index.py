@@ -53,23 +53,8 @@ def _write_parts(spark, num_shards: int) -> int:
     return max(1, min(int(num_shards), spark.sparkContext.defaultParallelism))
 
 
-def extract_kmers_arrow(
-    sequences: DataFrame,
-    k: int = DEFAULT_K,
-    alphabet: str = AMINO_ALPHABET,
-    with_pos: bool = False,
-    id_col: str = "seq_id",
-) -> DataFrame:
-    """T1 as a vectorized Arrow stage: (id, [seq_len,] kmer[, pos]) rows.
-
-    Catalyst higher-order functions (the `functions/kmer.py` twin) are
-    interpreted per element — fine for small inputs and for SQL-portable
-    oracle queries, but the hot extraction path encodes tens of millions
-    of windows, where one numpy sliding-window matmul per sequence is
-    ~6x faster end to end. Same output, same F1/F2 semantics (invalid
-    residues break windows; short sequences yield nothing).
-
-    Raises ValueError unless every k-mer code fits a signed BIGINT
+def check_kmer_width(k: int, alphabet: str = AMINO_ALPHABET) -> None:
+    """Raise ValueError unless every k-mer code fits a signed BIGINT
     (``1 <= k`` and ``len(alphabet) ** k <= 2**63``): a wider code wraps
     in the int64 matmul and distinct k-mers would collide."""
     if k < 1 or len(alphabet) ** k > 2**63:
@@ -77,40 +62,71 @@ def extract_kmers_arrow(
             f"k={k} is out of range for a {len(alphabet)}-letter alphabet:"
             f" k-mer codes need 1 <= k and {len(alphabet)}**k <= 2**63"
         )
+
+
+def extract_kmers_batch(
+    seqs, k: int = DEFAULT_K, alphabet: str = AMINO_ALPHABET
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """T1 over one batch of sequences, one numpy sliding-window matmul per
+    sequence: ``(row, seq_len, kmer, pos)`` arrays, ``row`` indexing
+    ``seqs``. Invalid residues break windows (F1); a sequence shorter
+    than k, or NULL (e.g. derived from a NULL-text doc), yields nothing
+    (F2) — the HOF twin and every SQL oracle drop it the same way."""
     lut = np.full(128, -1, dtype=np.int64)
     for i, c in enumerate(alphabet):
         lut[ord(c)] = i
     weights = (len(alphabet) ** np.arange(k - 1, -1, -1)).astype(np.int64)
+    row_o, len_o, km_o, pos_o = [], [], [], []
+    for i, seq in enumerate(seqs):
+        if seq is None:
+            continue
+        codes = lut[np.frombuffer(seq.encode("ascii", "replace"), dtype=np.uint8) & 0x7F]
+        n = len(codes)
+        if n < k:
+            continue
+        w = np.lib.stride_tricks.sliding_window_view(codes, k)
+        valid = (w >= 0).all(axis=1)
+        km = (w @ weights)[valid]
+        row_o.append(np.full(len(km), i, dtype=np.int64))
+        len_o.append(np.full(len(km), n, dtype=np.int32))
+        km_o.append(km)
+        pos_o.append(np.nonzero(valid)[0].astype(np.int32))
+    if not row_o:
+        return (np.array([], dtype=np.int64), np.array([], dtype=np.int32),
+                np.array([], dtype=np.int64), np.array([], dtype=np.int32))
+    return (np.concatenate(row_o), np.concatenate(len_o),
+            np.concatenate(km_o), np.concatenate(pos_o))
+
+
+def extract_kmers_arrow(
+    sequences: DataFrame,
+    k: int = DEFAULT_K,
+    alphabet: str = AMINO_ALPHABET,
+    with_pos: bool = False,
+    id_col: str = "seq_id",
+) -> DataFrame:
+    """T1 as a vectorized Arrow stage: (id, [seq_len,] kmer[, pos]) rows
+    (:func:`extract_kmers_batch` per Arrow batch).
+
+    Catalyst higher-order functions (the `functions/kmer.py` twin) are
+    interpreted per element — fine for small inputs and for SQL-portable
+    oracle queries, but the hot extraction path encodes tens of millions
+    of windows, where one numpy sliding-window matmul per sequence is
+    ~6x faster end to end. Same output, same F1/F2 semantics.
+
+    Raises ValueError via :func:`check_kmer_width`."""
+    check_kmer_width(k, alphabet)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids_o, len_o, km_o, pos_o = [], [], [], []
-            for sid, seq in zip(pdf[id_col], pdf["sequence"]):
-                if seq is None:
-                    # a NULL sequence (e.g. derived from a NULL-text doc)
-                    # has no windows — the HOF twin and every SQL oracle
-                    # drop it the same way; encoding None CRASHED the
-                    # whole extraction task instead (round-6 fuzz)
-                    continue
-                codes = lut[np.frombuffer(seq.encode("ascii", "replace"), dtype=np.uint8) & 0x7F]
-                n = len(codes)
-                if n < k:
-                    continue
-                w = np.lib.stride_tricks.sliding_window_view(codes, k)
-                valid = (w >= 0).all(axis=1)
-                km = (w @ weights)[valid]
-                ids_o.append(np.full(len(km), sid, dtype=np.int64))
-                len_o.append(np.full(len(km), n, dtype=np.int32))
-                km_o.append(km)
-                if with_pos:
-                    pos_o.append(np.nonzero(valid)[0].astype(np.int32))
+            row, seq_len, km, pos = extract_kmers_batch(list(pdf["sequence"]), k, alphabet)
             cols = {
-                id_col: np.concatenate(ids_o) if ids_o else np.array([], dtype=np.int64),
-                "seq_len": np.concatenate(len_o) if len_o else np.array([], dtype=np.int32),
-                "kmer": np.concatenate(km_o) if km_o else np.array([], dtype=np.int64),
+                id_col: pdf[id_col].to_numpy(dtype=np.int64)[row],
+                "seq_len": seq_len,
+                "kmer": km,
             }
             if with_pos:
-                cols["pos"] = np.concatenate(pos_o) if pos_o else np.array([], dtype=np.int32)
+                cols["pos"] = pos
             yield pd.DataFrame(cols)
 
     schema = f"{id_col} long, seq_len int, kmer long" + (", pos int" if with_pos else "")
@@ -342,9 +358,9 @@ def read_kmer_index_pruned(
     size. Returns the standard index schema (kmer, seq_id, seq_len).
     ``meta``: pass a read_kmer_index_meta result to skip the sidecar
     re-read (the cascade reads it once for parameter validation).
-    ``shards``: pass a precomputed query_shard_list to skip the collect
-    — a multi-generation probe derives the list ONCE and prunes every
-    generation with it (all generations share the modulus)."""
+    ``shards``: pass a precomputed shard list to skip the collect — a
+    layout probe derives the lists of every modulus in ONE collect
+    (query_shard_lists) and prunes every generation with them."""
     if meta is None:
         meta = read_kmer_index_meta(spark, path)
     num_shards = int(meta["num_shards"])
@@ -361,18 +377,22 @@ def read_kmer_index_pruned(
     )
 
 
+def query_shard_lists(query_kmers: DataFrame, moduli) -> dict[int, list[int]]:
+    """The sorted distinct ``kmer % m`` values of a query-k-mer frame
+    for every modulus ``m`` — the partition-prune lists, all from
+    ONE aggregation and one collect, each list bounded by min(m,
+    distinct query k-mers)."""
+    moduli = sorted({int(m) for m in moduli})
+    row = query_kmers.agg(*[
+        F.collect_set(F.pmod(F.col("kmer"), F.lit(m)).cast("int"))
+        for m in moduli
+    ]).first()
+    return {m: sorted(int(x) for x in row[i]) for i, m in enumerate(moduli)}
+
+
 def query_shard_list(query_kmers: DataFrame, num_shards: int) -> list[int]:
-    """The distinct ``kmer % num_shards`` values of a query-k-mer frame
-    — the partition-prune driver list (bounded by min(num_shards,
-    distinct query k-mers))."""
-    return [
-        int(r["s"])
-        for r in query_kmers.select(
-            F.pmod(F.col("kmer"), F.lit(num_shards)).cast("int").alias("s")
-        )
-        .distinct()
-        .collect()
-    ]
+    """:func:`query_shard_lists` for one modulus."""
+    return query_shard_lists(query_kmers, [num_shards])[int(num_shards)]
 
 
 def write_sequence_store_sharded(seqs: DataFrame, path: str, num_shards: int = 256) -> None:
@@ -786,16 +806,16 @@ def read_layout_index_pruned(
     idx_meta: dict | None = None,
     gens: list[str] | None = None,
 ) -> DataFrame:
-    """GENERATION-AWARE pruned index read: the shard list is derived
-    ONCE from the query k-mers and prunes every generation's scan; the
+    """GENERATION-AWARE pruned index read: the shard lists are derived
+    ONCE from the query k-mers and prune every generation's scan; the
     pruned union is J2-re-resolved (resolve_j2 — exact by associativity)
     so downstream sees exactly the index a full rebuild would produce.
     With no deltas this IS read_kmer_index_pruned — same plan, zero new
     nodes (the no-delta probe's pinned plan shape is unchanged).
     Generations may carry DIFFERENT moduli (append auto-sizes a small
     delta's fanout to the delta, the LSM L0 shape — a 5k-seq arrival
-    must not pay the base's 4096-directory write); the prune list is
-    derived once per DISTINCT modulus, never per generation. Each delta
+    must not pay the base's 4096-directory write); one collect gives
+    the list of every DISTINCT modulus (query_shard_lists). Each delta
     generation's k/alphabet is checked against the base's — a
     hand-placed generation with drifted k-mer codes fails loudly
     instead of returning silently-wrong joins."""
@@ -805,10 +825,6 @@ def read_layout_index_pruned(
         gens = list_layout_generations(root)
     if idx_meta is None:
         idx_meta = read_kmer_index_meta(spark, os.path.join(root, "index"))
-    if len(gens) == 1:
-        return read_kmer_index_pruned(
-            spark, os.path.join(root, "index"), query_kmers, meta=idx_meta
-        )
     metas = [idx_meta] + [
         read_kmer_index_meta(spark, os.path.join(g, "index")) for g in gens[1:]
     ]
@@ -821,10 +837,7 @@ def read_layout_index_pruned(
                     " — the layout is corrupt (append_sharded_layout can"
                     " never write this); rebuild it"
                 )
-    shards_by_mod = {
-        mod: query_shard_list(query_kmers, mod)
-        for mod in {int(m["num_shards"]) for m in metas}
-    }
+    shards_by_mod = query_shard_lists(query_kmers, [m["num_shards"] for m in metas])
     union = None
     for gen, gmeta in zip(gens, metas):
         part = read_kmer_index_pruned(
@@ -835,6 +848,8 @@ def read_layout_index_pruned(
             shards=shards_by_mod[int(gmeta["num_shards"])],
         )
         union = part if union is None else union.unionAll(part)
+    if len(gens) == 1:
+        return union
     # narrow to the query's own k-mers BEFORE re-resolving: the probed
     # shards hold ~|shard| rows each (corpus-proportional), and without
     # this the multi-generation groupBy shuffles all of them; the only

@@ -81,8 +81,9 @@ def mask_seq(seq: str) -> str:
     return b.tobytes().decode("ascii")
 
 
-def mask_sequences(sequences: DataFrame, col: str = "sequence", method: str = "tantan") -> DataFrame:
-    """T3 over a sequences DF: replace `col` with its masked form.
+def mask_batch(seqs, method: str = "tantan") -> list:
+    """T3 over one batch of sequences: each masked, NULL passing through
+    as NULL.
 
     ``method="tantan"`` (default) is the reference's actual masking —
     operators/tantan.py implements the tantan forward-backward with the
@@ -91,26 +92,33 @@ def mask_sequences(sequences: DataFrame, col: str = "sequence", method: str = "t
     ``method="heuristic"`` keeps this module's deterministic
     tandem-repeat/low-entropy approximation (the engine's cheaper
     alternative; integer-exact, no float thresholds)."""
-    schema = ", ".join(f"{name} {dtype}" for name, dtype in sequences.dtypes)
     if method == "tantan":
         from petasearch_spark.operators.tantan import tantan_mask_batch as _mask_batch
     elif method == "heuristic":
-        def _mask_batch(seqs):
-            return [mask_seq(s) for s in seqs]
+        def _mask_batch(present):
+            return [mask_seq(s) for s in present]
     else:
         raise ValueError(f"unknown masking method: {method!r}")
+    # None-guard law (q): a NULL sequence (NULL-text doc) must pass
+    # through as NULL, not crash the whole task — found by the round-7
+    # constructed-frame scalar-twin fuzz, same class as the round-6
+    # kmer-extractor fix
+    vals = list(seqs)
+    masked = iter(_mask_batch([s for s in vals if s is not None]))
+    return [None if s is None else next(masked) for s in vals]
+
+
+def mask_sequences(sequences: DataFrame, col: str = "sequence", method: str = "tantan") -> DataFrame:
+    """T3 over a sequences DF: replace `col` with its masked form
+    (:func:`mask_batch` per Arrow batch)."""
+    if method not in ("tantan", "heuristic"):
+        raise ValueError(f"unknown masking method: {method!r}")
+    schema = ", ".join(f"{name} {dtype}" for name, dtype in sequences.dtypes)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            # None-guard law (q): a NULL sequence (NULL-text doc) must pass
-            # through as NULL, not crash the whole task — found by the
-            # round-7 constructed-frame scalar-twin fuzz, same class as the
-            # round-6 kmer-extractor fix
-            vals = list(pdf[col])
-            present = [s for s in vals if s is not None]
-            masked = iter(_mask_batch(present))
-            pdf[col] = [None if s is None else next(masked) for s in vals]
+            pdf[col] = mask_batch(pdf[col], method)
             yield pdf
 
     return sequences.mapInPandas(run, schema=schema)

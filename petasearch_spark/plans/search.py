@@ -19,7 +19,10 @@ is one plan keyed by that ``_set`` tag, not one lineage per DB.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, NamedTuple
+from typing import Callable, Iterator, NamedTuple
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,7 +32,8 @@ from petasearch_spark.operators.align import DEFAULT_EVALUE, align_pairs
 from petasearch_spark.operators.kmer_index import (
     DEFAULT_K,
     build_kmer_index,
-    extract_query_kmers,
+    check_kmer_width,
+    extract_kmers_batch,
 )
 from petasearch_spark.operators.prefilter import (
     DEFAULT_REQ_KMER_MATCHES,
@@ -95,43 +99,66 @@ def _alphabet_params(alphabet: str):
 
 
 def build_query_kmers(queries: DataFrame, knobs: SearchKnobs) -> DataFrame:
-    """The query-side k-mer table of the cascade (masking -> extraction
-    -> optional T2/T4 expansion), built once per search and shared by
-    every target DB — the reference recomputes it per target DB (one
-    comparekmertables process each, petasearch.sh:42-65)."""
+    """The query-side k-mer table of the cascade, (query_id, kmer, pos):
+    ONE mapInPandas over queries(seq_id, sequence) — the reference's
+    per-query emit loop (comparekmertables.cpp:214-275) — running per
+    Arrow batch masking (T3, ``mask``) -> extraction with positions (T1)
+    -> similar-k-mer expansion (T2, ``expand_similar``) with its
+    composition-bias threshold (T4, ``compo_bias``, computed from the
+    UNMASKED residues). Expansion is a pure function of the k-mer value,
+    so deduplicating per batch gives the rows a global distinct would;
+    the plan has no shuffle, no broadcast and reads the queries once.
+    Built once per search and shared by every target DB — the reference
+    recomputes it per target DB (one comparekmertables process each,
+    petasearch.sh:42-65)."""
+    from petasearch_spark.operators.masking import mask_batch
+    from petasearch_spark.operators.similar_kmers import (
+        DEFAULT_KMER_THRESHOLD,
+        DEFAULT_MAX_PER_POS,
+        expand_kmers,
+        kmer_bias,
+    )
+
+    k, mask, compo_bias = knobs.k, knobs.mask, knobs.compo_bias
     alpha = _alphabet_params(knobs.alphabet)[0]
+    check_kmer_width(k, alpha)
     # Reference parity note (nucl): nucleotide mode scores with
     # NucleotideMatrix at scale 1.0 (comparekmertables.cpp:135) where the
     # k-score default 225 exceeds any 9-mer self-score (9×2=18) —
     # generateKmerList can never emit, so expansion degenerates to exact
     # matching.
     expand_similar = knobs.expand_similar and knobs.alphabet != "nucl"
-    if knobs.mask:
-        from petasearch_spark.operators.masking import mask_sequences
+    threshold = (knobs.kmer_threshold if knobs.kmer_threshold is not None
+                 else DEFAULT_KMER_THRESHOLD)
+    max_per_pos = (knobs.kmer_max_per_pos if knobs.kmer_max_per_pos is not None
+                   else DEFAULT_MAX_PER_POS)
 
-        qk = extract_query_kmers(mask_sequences(queries), k=knobs.k, alphabet=alpha)
-    else:
-        qk = extract_query_kmers(queries, k=knobs.k, alphabet=alpha)
-    if expand_similar:
-        from petasearch_spark.operators.similar_kmers import (
-            DEFAULT_KMER_THRESHOLD,
-            DEFAULT_MAX_PER_POS,
-            composition_bias_kmer,
-            expand_query_kmers,
-        )
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            seqs = list(pdf["sequence"])
+            row, _, km, pos = extract_kmers_batch(
+                mask_batch(seqs) if mask else seqs, k, alpha
+            )
+            if expand_similar:
+                kb = None
+                if compo_bias:
+                    # per-sequence kbias laid end to end; occurrence
+                    # (row, pos) reads its sequence's slice at pos
+                    per_seq = [kmer_bias(s, k) for s in seqs]
+                    lens = np.array([len(b) for b in per_seq], dtype=np.int64)
+                    flat = np.concatenate(per_seq) if per_seq else np.zeros(0, np.int64)
+                    kb = flat[(np.cumsum(lens) - lens)[row] + pos]
+                erow, km = expand_kmers(km, k, threshold, max_per_pos, kb)
+                row, pos = row[erow], pos[erow]
+            yield pd.DataFrame({
+                "query_id": pdf["seq_id"].to_numpy(dtype=np.int64)[row],
+                "kmer": km,
+                "pos": pos,
+            })
 
-        qk = expand_query_kmers(
-            qk,
-            k=knobs.k,
-            threshold=(knobs.kmer_threshold if knobs.kmer_threshold is not None
-                       else DEFAULT_KMER_THRESHOLD),
-            max_per_pos=(knobs.kmer_max_per_pos if knobs.kmer_max_per_pos is not None
-                         else DEFAULT_MAX_PER_POS),
-            # T4: per-position composition bias raises the similar-k-mer
-            # threshold inside biased regions (comparekmertables.cpp:196-253)
-            bias=composition_bias_kmer(queries, k=knobs.k) if knobs.compo_bias else None,
-        )
-    return qk
+    return queries.select("seq_id", "sequence").mapInPandas(
+        run, schema="query_id long, kmer long, pos int"
+    )
 
 
 def _rank_and_order(alignments: DataFrame, max_seqs: int | None) -> DataFrame:

@@ -77,7 +77,7 @@ def scalar_funnel(
     # query k-mer table: every valid window occurrence; expansion mode
     # appends ALL similar k-mers scoring >= threshold (which may
     # re-include the exact k-mer — reference behavior, matching
-    # expand_query_kmers' unionByName)
+    # similar_kmers.expand_kmers' exact row plus similar rows)
     qk_rows: list[tuple[int, str]] = []
     memo: dict[str, list[str]] = {}
     for qid, seq in enumerate(queries):
