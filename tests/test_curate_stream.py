@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from petasearch_spark.cli import main
@@ -57,7 +58,7 @@ def _poison_in_place(dump: str) -> None:
             os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
 
 
-def test_curate_stream_incremental_parse_and_recurate(spark, tmp_path, capsys):
+def test_curate_stream_incremental_parse_and_recurate(spark, tmp_path, capsys, monkeypatch):
     docs = load_table(spark, "documents", SF)
     dump = str(tmp_path / "landing")
     os.makedirs(dump)
@@ -83,6 +84,37 @@ def test_curate_stream_incremental_parse_and_recurate(spark, tmp_path, capsys):
     for k in ("n_quarantined", "n_staged", "n_dropped_null_fields", "funnel", "n_kept",
               "kept_tokens", "n_packs"):
         assert r1[k] == b[k], k
+
+    # --- run 1 again, killed mid-drain: 6 files drain as 2 micro-batches;
+    # the second dies after landing its bronze docs, before its accounting
+    # sidecar and its checkpoint commit. One ordinary rerun replays it and
+    # must reproduce run 1's accounting exactly, and a further run is a
+    # no-op
+    import petasearch_spark.streaming.curate_stream as cs
+
+    crash_dump = str(tmp_path / "crash_landing")
+    first.select(_dump_lines(first).alias("value")).repartition(6).write.text(
+        os.path.join(crash_dump, "day1")
+    )
+    real_literal_df = cs.literal_df
+
+    def dies_in_batch_1(spark_, rows, schema):
+        if rows[0][0] == 1:
+            raise RuntimeError("killed mid-drain")
+        return real_literal_df(spark_, rows, schema)
+
+    crash_out = str(tmp_path / "crash_out")
+    monkeypatch.setattr(cs, "literal_df", dies_in_batch_1)
+    with pytest.raises(Exception, match="killed mid-drain"):
+        curate_stream(spark, crash_dump, crash_out)
+    monkeypatch.setattr(cs, "literal_df", real_literal_df)
+    rec = curate_stream(spark, crash_dump, crash_out)
+    assert rec["stream_batches"] == 1
+    for k in ("n_input_lines", "n_quarantined", "n_staged", "n_dropped_null_fields", "funnel",
+              "n_kept", "kept_tokens", "n_packs"):
+        assert rec[k] == r1[k], k
+    again = curate_stream(spark, crash_dump, crash_out)
+    assert again["stream_batches"] == 0 and again["n_kept"] == r1["n_kept"]
 
     # --- run 2: one NEW file; old files poisoned in place ----------------
     _poison_in_place(dump)

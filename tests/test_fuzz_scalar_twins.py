@@ -332,10 +332,14 @@ def test_stream_search_equals_plain_on_constructed(spark, twin_dirs):
             tuple(r) for r in REGISTRY["protein_search"][0](spark, d).collect()
         )
         spark.catalog.clearCache()
-        streamed = sorted(
-            tuple(r)
-            for r in REGISTRY["protein_search_stream"][0](spark, d).collect()
-        )
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        streamed_df = REGISTRY["protein_search_stream"][0](spark, d)
+        # the stream has drained: every frame a micro-batch persisted was
+        # released after that batch's sink write (the flat-cache law a
+        # long-lived service needs)
+        after = spark.sparkContext._jsc.getPersistentRDDs().size()
+        assert after == before, f"seed{seed}: cache leak ({before} -> {after} persisted RDDs)"
+        streamed = sorted(tuple(r) for r in streamed_df.collect())
         assert streamed == plain, f"seed{seed}: stream/batch search drift"
         assert plain, f"seed{seed}: vacuous"
         spark.catalog.clearCache()

@@ -379,6 +379,34 @@ class TestIvfRecluster:
             ]
             assert got == want and len(got) > 0
 
+        # recall: on a corpus with real cluster structure (32 separated
+        # centers, 16 frozen seed centroids taken from the first vectors)
+        # reclustering must not lose probe recall@5 against brute force
+        import numpy as np
+
+        from petasearch_spark.operators.ivf import DIM
+        from petasearch_spark.operators.similarity import cosine_topk
+
+        centers = np.random.RandomState(0).normal(0, 1, (32, DIM))
+        centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+        rows = [
+            (i, (centers[i % 32] + np.random.RandomState(i).normal(0, 0.08, DIM)).tolist())
+            for i in range(2000)
+        ]
+        emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
+        seed_cent = rows[: len(cent0)]
+        q = emb.filter(F.col("vec_id") < 50).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+        truth = {tuple(r) for r in cosine_topk(q, emb).select("query_id", "neighbor_id").collect()}
+        clustered = os.path.join(str(tmp_path), "clustered")
+        write_ivf_index(emb, clustered, seed_cent)
+
+        def recall(cent):
+            got = probe_ivf_index(spark, clustered, q, cent).select("query_id", "neighbor_id").collect()
+            return len(truth & {tuple(r) for r in got}) / len(truth)
+
+        before = recall(seed_cent)
+        assert recall(recluster_ivf_index(spark, clustered, iters=2)) >= before
+
     def test_recluster_then_merge_delta_uses_new_quantizer(self, spark, tmp_path):
         import pytest
 

@@ -118,6 +118,23 @@ def test_semdedup_matches_oracle_and_measures_recall(spark):
     # remains the high-recall small-corpus path.
     assert recall >= 0.15, (len(dropped), len(droppable))
 
+    # the SemDeDup premise itself: a scaled copy (cosine exactly 1) always
+    # co-clusters with its original and folds into it. At tau = 0.7 random
+    # Gaussians never collide, so the drops are exactly the copies
+    import numpy as np
+
+    from petasearch_spark.operators.ivf import DIM, semdedup_frame
+
+    n, n_dups = 300, 12
+    vecs = [(i, np.random.RandomState(i).standard_normal(DIM).tolist()) for i in range(n)]
+    vecs += [(n + i, [2.0 * x for x in vecs[i * 7][1]]) for i in range(n_dups)]
+    emb = spark.createDataFrame(vecs, "vec_id long, v array<double>")
+    out = semdedup_frame(emb, n_centroids=16, threshold=0.7).collect()
+    assert len(out) == n + n_dups
+    assert {r["vec_id"]: r["dup_of"] for r in out if r["keep"] == 0} == {
+        n + i: i * 7 for i in range(n_dups)
+    }
+
 
 def test_embedding_profile_flags_corrupt_vectors(spark):
     """The audit paths the clean corpus never exercises: null vectors,

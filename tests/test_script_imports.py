@@ -1,16 +1,22 @@
 """Every ``petasearch_spark`` name a script under scripts/ imports must
 exist: a removed or renamed API then fails here, loudly, instead of
-leaving a smoke script broken until someone next runs it."""
+leaving a script broken until someone next runs it. And every
+``scripts/<name>.py`` the living docs name must exist, so a deleted
+script is never cited as runnable (a ``<rev>:scripts/<name>.py`` git
+history pointer is not a citation of the working tree)."""
 
 from __future__ import annotations
 
 import ast
 import importlib
 import os
+import re
 
 import pytest
 
-SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = os.path.join(REPO, "scripts")
+DOCS = ["README.md", "COVERAGE.md", os.path.join(".claude", "skills", "verify", "SKILL.md")]
 
 
 def _package_imports(path: str) -> list[tuple[str, str | None]]:
@@ -39,3 +45,11 @@ def test_script_package_imports_resolve(script):
         except ModuleNotFoundError:
             missing.append(f"from {module} import {name}")
     assert not missing, f"{script}: {missing}"
+
+
+@pytest.mark.parametrize("doc", DOCS)
+def test_docs_name_only_existing_scripts(doc):
+    with open(os.path.join(REPO, doc)) as fh:
+        named = set(re.findall(r"(?<![:\w/.-])scripts/(\w+\.py)", fh.read()))
+    missing = sorted(n for n in named if not os.path.isfile(os.path.join(SCRIPTS, n)))
+    assert not missing, f"{doc} names scripts that do not exist: {missing}"

@@ -87,6 +87,22 @@ def test_homolog_found_when_not_shadowed(spark):
     r = next(r for r in rows if r["target_accession"] == "t0")
     assert r["mismatch"] >= 1 and r["fident"] < 1.0
 
+    # the scale smokes' planted pair: the query itself AND a LONGER
+    # homolog (5 substitutions + 20 extra residues) in one target set.
+    # J2 hands every k-mer they share to the homolog, so the self-hit
+    # survives only through the k-mers the substitutions make unique to
+    # the query; both must be found
+    src = rand_seq(rng, 200)
+    hom = list(src)
+    for p in (20, 60, 100, 140, 180):
+        hom[p] = AMINO_ALPHABET[(AMINO_ALPHABET.index(hom[p]) + 1) % 20]
+    hom = "".join(hom) + rand_seq(rng, 20)
+    q = sequences_from_records(spark, [("q1 query", src)])
+    t = sequences_from_records(
+        spark, [("t_src self", src), ("t_hom longer homolog", hom)] + [(f"tn{i}", rand_seq(rng, 200)) for i in range(5)]
+    )
+    assert {r["target_accession"] for r in search(q, t).collect()} >= {"t_src", "t_hom"}
+
 
 def test_m8_projection(spark):
     rng = random.Random(3)
@@ -119,11 +135,13 @@ def test_multi_target_equals_per_target_union(spark):
     q = seqs.filter(F.col("seq_id") % 20 == 0)
     targets = [seqs.filter(F.col("seq_id") % 3 == i) for i in range(3)]
     cols = ["query_id", "target_id", "raw", "alnlen", "nident", "qstart", "tstart"]
-    multi = sorted(tuple(r) for r in search_multi_target(q, targets).select(*cols).collect())
-    per = []
-    for t in targets:
-        per.extend(tuple(r) for r in search(q, t).select(*cols).collect())
-    assert multi == sorted(per) and len(multi) > 0
+    # exact k-mers, and the reference's default similar-k-mer mode
+    for knobs in ({}, {"expand_similar": True}):
+        multi = sorted(tuple(r) for r in search_multi_target(q, targets, **knobs).select(*cols).collect())
+        per = []
+        for t in targets:
+            per.extend(tuple(r) for r in search(q, t, **knobs).select(*cols).collect())
+        assert multi == sorted(per) and len(multi) > 0, knobs
 
 
 def test_multi_target_query_kmers_computed_once(spark):

@@ -138,11 +138,11 @@ def test_bpe_train_hand_computed_merges(spark):
     hand-computed, including the greedy non-overlap fold on 'aaaa'."""
     # vocabulary (after lowercase a-z extraction): low x4, lowest x2, aaaa x1
     rows = [
-        (0, "low low LOW lowest."),
-        (1, "low!  lowest"),
-        (2, "aaaa"),
+        (0, "low low LOW lowest.", "s0"),
+        (1, "low!  lowest", "s0"),
+        (2, "aaaa", "s1"),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "source"])
     got = [tuple(r) for r in text.train_bpe(spark, docs, 4).collect()]
     # round 1 pairs: (l,o)=6 (o,w)=6 (w,e)=2 (e,s)=2 (s,t)=2 (a,a)=3
     #   (overlapping count: 'aaaa' has 3 adjacent (a,a) pairs)
@@ -228,11 +228,11 @@ def test_bpe_encode_corpus_hand_computed_and_matches_oracle(spark, tmp_path):
     import duckdb
 
     rows = [
-        (0, "low low LOW lowest."),
-        (1, "low!  lowest"),
-        (2, "aaaa"),
+        (0, "low low LOW lowest.", "s0"),
+        (1, "low!  lowest", "s0"),
+        (2, "aaaa", "s1"),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "source"])
     got = {r["doc_id"]: tuple(r)[1:] for r in text.encode_corpus(spark, docs, 4).collect()}
     # doc0: low low low lowest -> [low][low][low][low es t] -> 3 3 3 3 2 4
     assert got[0] == (4, 6, 1.5, "3 3 3 3 2 4")
@@ -252,6 +252,14 @@ def test_bpe_encode_corpus_hand_computed_and_matches_oracle(spark, tmp_path):
         r[0]: tuple(r)[1:] for r in con.execute(text._bpe_encode_sql(4)).fetchall()
     }
     assert got == want
+
+    # cross-operator conservation: bpe_fertility trains the same 4 rules
+    # over the same words, so its word and token totals equal the encoder's
+    # summed per-doc counts; ids stay within alphabet + merges
+    fert = text.bpe_fertility(spark, str(tmp_path), n_merges=4).collect()
+    assert sum(r["n_words"] for r in fert) == sum(v[0] for v in got.values()) == 7
+    assert sum(r["bpe_tokens"] for r in fert) == sum(v[1] for v in got.values()) == 12
+    assert max(int(i) for v in got.values() for i in v[3].split()) <= 26 + 4
 
 
 def test_bpe_encode_corpus_dry_and_empty_edges(spark):
