@@ -31,6 +31,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from petasearch_spark.deadpid import dead_pid_paths
 from petasearch_spark.functions.localframe import literal_df
 from petasearch_spark.session import cut_lineage
 
@@ -49,18 +50,8 @@ def _reap_dead_pid_siblings(prefix: str) -> None:
     """Remove ``<prefix><pid>`` dirs whose builder pid is dead — repeated
     bench runs must not accumulate /tmp debris (the staging-cache
     dead-pid sweep pattern)."""
-    import glob
-
-    for d in glob.glob(f"{prefix}*"):
-        pid_str = d[len(prefix):]
-        if not pid_str.isdigit() or int(pid_str) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid_str), 0)
-        except ProcessLookupError:
-            shutil.rmtree(d, ignore_errors=True)
-        except PermissionError:
-            continue
+    for d in dead_pid_paths(prefix):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # --- IVF lifecycle: build -> recluster -> probe-recall ---------------------

@@ -26,6 +26,8 @@ from petasearch_spark.functions.ordering import sort_via_exchange
 
 from petasearch_spark.functions.localframe import literal_df
 
+from petasearch_spark.deadpid import recover_swap
+
 from petasearch_spark.session import cut_lineage
 
 from petasearch_spark.operators.similarity import (
@@ -858,7 +860,7 @@ def merge_ivf_index_delta(spark: SparkSession, path: str, delta_emb: DataFrame, 
         # a recluster killed between its two renames leaves the live
         # index only at {path}.old<pid>; recover it here instead of
         # failing until the NEXT recluster call (round-5 ADVICE)
-        _recover_recluster_swap(path)
+        recover_swap(path, "recluster")
     payload = tuple(
         c for c in spark.read.parquet(path).columns if c not in ("vec_id", "v", "bucket")
     )
@@ -908,7 +910,7 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame, centroid
     if not os.path.exists(path):
         # cheap happy-path stat; see merge_ivf_index_delta — a probe
         # must not fail inside recluster's swap window (round-5 ADVICE)
-        _recover_recluster_swap(path)
+        recover_swap(path, "recluster")
     # createDataFrame, NOT literal_df: N_CENTROIDS x dim doubles embedded
     # as literal struct-array expressions bloat Catalyst analysis/codegen
     # of every probe plan (~2.5x on the filtered probe, round-10 VERDICT
@@ -1069,7 +1071,7 @@ def recluster_ivf_index(
     """
     import shutil
 
-    _recover_recluster_swap(path)
+    recover_swap(path, "recluster")
     stored = spark.read.parquet(path)
     payload = tuple(c for c in stored.columns if c not in ("vec_id", "v", "bucket"))
     vecs = stored.select("vec_id", "v", *payload)
@@ -1105,34 +1107,3 @@ def recluster_ivf_index(
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
     return cent_rows
-
-
-def _recover_recluster_swap(path: str) -> None:
-    """Crash recovery for recluster_ivf_index's two-rename swap: a kill
-    between the renames leaves the live index only at ``{path}.old<pid>``;
-    a kill mid-rewrite leaves ``{path}.recluster<pid>`` debris. On entry,
-    restore the newest dead-pid ``.old`` when ``path`` is missing, and
-    reap dead-pid debris of both kinds (the staging-cache dead-pid sweep
-    pattern — round-5 review finding)."""
-    import glob
-    import shutil
-
-    def _dead(pid_str: str) -> bool:
-        if not pid_str.isdigit() or int(pid_str) == os.getpid():
-            return False
-        try:
-            os.kill(int(pid_str), 0)
-            return False
-        except ProcessLookupError:
-            return True
-        except PermissionError:
-            return False
-
-    olds = [d for d in glob.glob(f"{path}.old*") if _dead(d.rsplit(".old", 1)[-1])]
-    if not os.path.exists(path) and olds:
-        os.rename(max(olds, key=os.path.getmtime), path)
-        olds = [d for d in olds if os.path.exists(d)]
-    for d in olds + [
-        d for d in glob.glob(f"{path}.recluster*") if _dead(d.rsplit(".recluster", 1)[-1])
-    ]:
-        shutil.rmtree(d, ignore_errors=True)

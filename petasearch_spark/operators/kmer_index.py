@@ -28,18 +28,20 @@ from __future__ import annotations
 
 import json
 import os
-import threading
-from collections import OrderedDict
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from petasearch_spark.deadpid import dead_pid_paths, recover_swap
 from petasearch_spark.functions.kmer import AMINO_ALPHABET, extract_kmers  # noqa: F401 (column-expr twin)
-from petasearch_spark.functions.localframe import literal_df
 
 DEFAULT_K = 9  # workflow default, /root/reference/src/workflow/petasearch.cpp:12
 
@@ -51,6 +53,44 @@ def _write_parts(spark, num_shards: int) -> int:
     coalesces the tiny exchange), never more than one task per shard,
     scaled from the session's parallelism — not a local constant."""
     return max(1, min(int(num_shards), spark.sparkContext.defaultParallelism))
+
+
+#: the two sidecar schemas: one 1-row parquet data file in each sharded
+#: dataset's ``_ps_meta/`` directory (index half, then store half)
+_INDEX_META = pa.schema(
+    [("num_shards", pa.int32()), ("k", pa.int32()), ("alphabet", pa.string())]
+)
+_STORE_META = pa.schema([
+    ("num_shards", pa.int32()), ("db_residues", pa.int64()),
+    ("max_seq_id", pa.int64()), ("schema_json", pa.string()),
+])
+
+
+def _write_sidecar(path: str, schema: pa.Schema, row: tuple) -> None:
+    """Write ``row`` as the ``_ps_meta`` sidecar of the dataset at
+    ``path``, on the driver: to a hidden temp name (skipped by Spark and
+    by :func:`_read_sidecar`), then ``os.replace``d into place, so a
+    reader sees a whole file or none."""
+    d = os.path.join(path, "_ps_meta")
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".part-00000.parquet.{os.getpid()}")
+    pq.write_table(pa.Table.from_pylist([dict(zip(schema.names, row))], schema=schema), tmp)
+    os.replace(tmp, os.path.join(d, "part-00000.parquet"))
+
+
+def _read_sidecar(path: str) -> dict:
+    """The ``_ps_meta`` sidecar of the dataset at ``path`` as a dict, read
+    on the driver. Hidden names (``_SUCCESS``, ``.crc``, a temp file) are
+    skipped as Spark skips them, so Spark-written sidecars of older
+    layouts read the same. A missing directory raises FileNotFoundError
+    (a mid-write or absent dataset fails loudly, never mis-prunes); a
+    directory that is not one data file of one row raises ValueError."""
+    d = os.path.join(path, "_ps_meta")
+    files = sorted(n for n in os.listdir(d) if not n.startswith(("_", ".")))
+    rows = pq.ParquetFile(os.path.join(d, files[0])).read().to_pylist() if len(files) == 1 else []
+    if len(rows) != 1:
+        raise ValueError(f"sidecar {d} must be one data file of one row; data files: {files}")
+    return rows[0]
 
 
 def check_kmer_width(k: int, alphabet: str = AMINO_ALPHABET) -> None:
@@ -266,78 +306,18 @@ def write_kmer_index_sharded(
     # k/alphabet travel with the index (round-10 review finding: a probe
     # built with different parameters would join on incompatible kmer
     # codes and return EMPTY results with exit 0 — record them so the
-    # reader can refuse loudly instead). literal_df: a Python-RDD-backed
-    # 1-row sidecar costs ~5 s per write (guide §4; measured round 10).
-    literal_df(
-        index.sparkSession,
-        [(int(num_shards), k, alphabet)],
-        "num_shards int, k int, alphabet string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_ps_meta")
-
-
-#: in-process sidecar meta cache (round 11): every probe (and, in the
-#: streaming twins, every MICRO-BATCH) re-read each generation's tiny
-#: _ps_meta parquet as a full Spark job — pure per-probe machinery.
-#: Published sidecars are immutable (layouts publish by rename and
-#: appends claim fresh generation dirs), so caching on the sidecar's
-#: CONTENT identity (file names + sizes + mtime_ns, the staged_cache
-#: fingerprint convention) is exact: a rebuilt/compacted layout gets a
-#: new key, a missing sidecar still fails loudly through the uncached
-#: Spark read. Bounded LRU: every append or rebuild adds a key, so a
-#: long-lived service would otherwise grow it without limit; an evicted
-#: sidecar is simply re-read. The lock: concurrent streaming queries
-#: probe from their own threads.
-_META_CACHE: OrderedDict[tuple, dict] = OrderedDict()
-_META_CACHE_SIZE = 64
-_META_LOCK = threading.Lock()
-
-
-def _meta_cache_get(ck: tuple | None) -> dict | None:
-    with _META_LOCK:
-        if ck is None or ck not in _META_CACHE:
-            return None
-        _META_CACHE.move_to_end(ck)
-        return dict(_META_CACHE[ck])
-
-
-def _meta_cache_put(ck: tuple | None, d: dict) -> None:
-    if ck is None:
-        return
-    with _META_LOCK:
-        _META_CACHE[ck] = dict(d)
-        _META_CACHE.move_to_end(ck)
-        while len(_META_CACHE) > _META_CACHE_SIZE:
-            _META_CACHE.popitem(last=False)
-
-
-def _sidecar_cache_key(path: str) -> tuple | None:
-    d = path + "/_ps_meta"
-    try:
-        names = sorted(os.listdir(d))
-        if not names:
-            return None
-        key: list = [os.path.abspath(d)]
-        for n in names:
-            st = os.stat(os.path.join(d, n))
-            key.append((n, st.st_size, st.st_mtime_ns))
-        return tuple(key)
-    except OSError:
-        return None  # absent/unreadable: let the Spark read raise loudly
+    # reader can refuse loudly instead)
+    _write_sidecar(path, _INDEX_META, (int(num_shards), k, alphabet))
 
 
 def read_kmer_index_meta(spark, path: str) -> dict:
     """The sharded index's sidecar as a plain dict (num_shards, and —
     for layouts written since round 10 — the k and alphabet the index
-    was built with; None on older layouts)."""
-    ck = _sidecar_cache_key(path)
-    cached = _meta_cache_get(ck)
-    if cached is not None:
-        return cached
-    row = spark.read.parquet(path + "/_ps_meta").head()
-    d = row.asDict()
+    was built with; None on older layouts). Read on the driver
+    (:func:`_read_sidecar`); ``spark`` is not used."""
+    d = _read_sidecar(path)
     d.setdefault("k", None)
     d.setdefault("alphabet", None)
-    _meta_cache_put(ck, d)
     return d
 
 
@@ -345,7 +325,6 @@ def read_kmer_index_pruned(
     spark,
     path: str,
     query_kmers: DataFrame,
-    meta: dict | None = None,
     shards: list[int] | None = None,
 ) -> DataFrame:
     """Read the sharded index PRUNED to the shards the given query
@@ -356,16 +335,13 @@ def read_kmer_index_pruned(
     min(num_shards, distinct query k-mers) integers (the interactive
     case this layout serves is a handful of queries), never by corpus
     size. Returns the standard index schema (kmer, seq_id, seq_len).
-    ``meta``: pass a read_kmer_index_meta result to skip the sidecar
-    re-read (the cascade reads it once for parameter validation).
     ``shards``: pass a precomputed shard list to skip the collect — a
     layout probe derives the lists of every modulus in ONE collect
     (query_shard_lists) and prunes every generation with them."""
-    if meta is None:
-        meta = read_kmer_index_meta(spark, path)
-    num_shards = int(meta["num_shards"])
     if shards is None:
-        shards = query_shard_list(query_kmers, num_shards)
+        shards = query_shard_list(
+            query_kmers, int(read_kmer_index_meta(spark, path)["num_shards"])
+        )
     # explicit schema: an EMPTY corpus writes a partitioned dataset with
     # no part files at all (just _SUCCESS), and schema inference fails on
     # it — the empty-input law is "0 rows", never an AnalysisException
@@ -445,11 +421,9 @@ def write_sequence_store_sharded(seqs: DataFrame, path: str, num_shards: int = 2
     stats = obs.get
     db_residues = int(stats["r"] or 0)
     max_seq_id = int(stats["m"]) if stats["m"] is not None else -1
-    literal_df(
-        spark,
-        [(int(num_shards), db_residues, max_seq_id, seqs.schema.json())],
-        "num_shards int, db_residues long, max_seq_id long, schema_json string",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_ps_meta")
+    _write_sidecar(
+        path, _STORE_META, (int(num_shards), db_residues, max_seq_id, seqs.schema.json())
+    )
 
 
 def write_sharded_layout(
@@ -464,41 +438,50 @@ def write_sharded_layout(
     when the root is shared."""
     seqs = seqs.persist()
     try:
-        # the two writes are INDEPENDENT jobs over the same cached input;
-        # submitted from a 2-thread pool they overlap (guide §2.6 — the
-        # store write's tasks back-fill executors freed by the index
-        # job's shuffle tail instead of waiting for it to drain). Job
-        # descriptions are thread-local, so each stays labelled; the
-        # block cache serves both readers (per-block compute-or-wait).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_idx = pool.submit(
-                write_kmer_index_sharded,
-                build_kmer_index(seqs, k=k, alphabet=alphabet),
-                f"{root}/index",
-                num_shards=num_shards,
-                k=k,
-                alphabet=alphabet,
-            )
-            f_store = pool.submit(
-                write_sequence_store_sharded, seqs, f"{root}/seqs", num_shards=num_shards
-            )
-            # surface BOTH outcomes: result() re-raises the first failure
-            # only after the pool has drained, so no half-running write is
-            # abandoned behind a propagating exception
-            f_idx.result()
-            f_store.result()
+        # the block cache serves both halves' readers (per-block
+        # compute-or-wait)
+        _write_generation(
+            root, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
+            num_shards, num_shards, k, alphabet,
+        )
     finally:
         seqs.unpersist()
+
+
+def _write_generation(
+    root: str, index: DataFrame, seqs: DataFrame, idx_shards: int,
+    seq_shards: int, k: int | None, alphabet: str | None,
+) -> None:
+    """Write one generation of the interactive layout under ``root`` —
+    a base (write_sharded_layout, compact_sharded_layout) or a delta
+    (append_sharded_layout): ``index`` as the kmer-sharded ``index/``
+    and ``seqs`` as the seq_id-sharded store ``seqs/``, each with its
+    sidecar. The two writes are INDEPENDENT jobs; submitted from a
+    2-thread pool they overlap (guide §2.6 — the store write's tasks
+    back-fill executors freed by the index job's shuffle tail instead
+    of waiting for it to drain). Job descriptions are thread-local, so
+    each stays labelled. Both outcomes surface, and only after the pool
+    has drained, so no half-running write is abandoned behind a
+    propagating exception."""
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(
+                write_kmer_index_sharded, index, os.path.join(root, "index"),
+                num_shards=idx_shards, k=k, alphabet=alphabet,
+            ),
+            pool.submit(
+                write_sequence_store_sharded, seqs, os.path.join(root, "seqs"),
+                num_shards=seq_shards,
+            ),
+        ]
+    for f in futures:
+        f.result()
 
 
 def is_sharded_layout(path: str) -> bool:
     """True iff ``path`` holds the interactive layout (both datasets'
     in-directory sidecars present — a half-published dir is NOT a
     layout; the staging protocol prevents one existing)."""
-    import os
-
     return os.path.isdir(os.path.join(path, "index", "_ps_meta")) and os.path.isdir(
         os.path.join(path, "seqs", "_ps_meta")
     )
@@ -508,26 +491,14 @@ def read_sequence_store_meta(spark, path: str) -> dict:
     """The sequence store's sidecar as a plain dict (num_shards,
     db_residues, schema_json, and — for stores written since the delta
     path landed — max_seq_id, None on older stores). A missing sidecar
-    means the store is mid-write or absent — loud AnalysisException,
-    never a silent mis-prune. Cached in-process on the sidecar's content
-    identity (see _META_CACHE)."""
-    ck = _sidecar_cache_key(path)
-    cached = _meta_cache_get(ck)
-    if cached is not None:
-        return cached
-    row = spark.read.parquet(path + "/_ps_meta").head()
-    d = row.asDict()
-    d.setdefault("max_seq_id", None)
-    out = {
-        k: d[k] for k in ("num_shards", "db_residues", "schema_json", "max_seq_id")
-    }
-    _meta_cache_put(ck, out)
-    return out
+    means the store is mid-write or absent — loud FileNotFoundError,
+    never a silent mis-prune. Read on the driver (:func:`_read_sidecar`);
+    ``spark`` is not used."""
+    d = _read_sidecar(path)
+    return {k: d.get(k) for k in ("num_shards", "db_residues", "schema_json", "max_seq_id")}
 
 
-def read_sequence_store_pruned(
-    spark, path: str, seq_ids: list[int], meta: dict | None = None
-) -> DataFrame:
+def read_sequence_store_pruned(spark, path: str, seq_ids: list[int]) -> DataFrame:
     """Read the sharded sequence store pruned to the given candidate ids:
     an INSET partition filter on ``sshard`` prunes directories and the
     pushed ``seq_id IN`` filter prunes row groups within them, so fetch
@@ -537,11 +508,8 @@ def read_sequence_store_pruned(
     interactive case this layout serves — mirroring
     read_kmer_index_pruned's bounded shard-list collect. The explicit
     schema (from the sidecar) keeps the empty-corpus law: 0 rows, never
-    an AnalysisException on an empty partitioned dataset. ``meta``:
-    pass a read_sequence_store_meta result to skip the sidecar re-read
-    (the cascade already holds it for db_residues)."""
-    if meta is None:
-        meta = read_sequence_store_meta(spark, path)
+    an AnalysisException on an empty partitioned dataset."""
+    meta = read_sequence_store_meta(spark, path)
     num_shards = int(meta["num_shards"])
     ids = sorted({int(i) for i in seq_ids})
     shards = sorted({i % num_shards for i in ids})
@@ -558,8 +526,6 @@ def _drop_managed_table(spark, table: str) -> None:
     in-memory catalog forgets tables between sessions but their location
     dirs persist, and saveAsTable then fails with LOCATION_ALREADY_EXISTS.
     (On a cluster with a real metastore the DROP alone suffices.)"""
-    import shutil
-
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     wh = spark.conf.get("spark.sql.warehouse.dir", "")
     if wh.startswith("file:"):
@@ -694,7 +660,6 @@ _DELTA_NAME_FMT = "delta_{:05d}"
 
 
 def _delta_generation_dirs(root: str) -> list[str]:
-    import os
     import re
 
     # \d{5,}: zero-padding stops at 99999 but generations keep going —
@@ -711,54 +676,16 @@ def _delta_generation_dirs(root: str) -> list[str]:
 
 
 def _recover_layout_swap(root: str) -> None:
-    """Crash recovery for compact_sharded_layout's two-rename swap (the
-    recluster_ivf_index protocol, operators/ivf.py): a kill between the
-    renames leaves the live layout only at ``{root}.old<pid>`` — restore
-    the newest dead-pid one when ``root`` is missing; reap dead-pid
-    ``.compact``/``.old`` swap debris and dead-pid ``.delta_build``
-    staging inside the root (a SIGKILLed append's half-written dir is
-    invisible to readers but would otherwise leak forever — round-10
-    review) either way. Every filesystem step tolerates losing a race
-    to a concurrent recoverer: two probes may both see the missing root
-    and restore — the rename loser re-checks instead of crashing the
-    read path."""
-    import glob
-    import os
-    import shutil
-
-    def _dead(pid_str: str) -> bool:
-        if not pid_str.isdigit() or int(pid_str) == os.getpid():
-            return False
-        try:
-            os.kill(int(pid_str), 0)
-            return False
-        except ProcessLookupError:
-            return True
-        except PermissionError:
-            return False
-
-    def _mtime(d: str) -> float:
-        try:
-            return os.path.getmtime(d)
-        except OSError:
-            return 0.0  # reaped by a concurrent sweeper mid-listing
-
-    olds = [d for d in glob.glob(f"{root}.old*") if _dead(d.rsplit(".old", 1)[-1])]
-    if not os.path.exists(root) and olds:
-        try:
-            os.rename(max(olds, key=_mtime), root)
-        except OSError:
-            if not os.path.isdir(root):
-                raise  # lost the race but nobody restored — real failure
-        olds = [d for d in olds if os.path.exists(d)]
-    for d in olds + [
-        d for d in glob.glob(f"{root}.compact*") if _dead(d.rsplit(".compact", 1)[-1])
-    ]:
-        shutil.rmtree(d, ignore_errors=True)
+    """Crash recovery for compact_sharded_layout's two-rename swap — the
+    recluster_ivf_index protocol, so the same deadpid.recover_swap with
+    the ``.compact`` staging tag — plus the layout's own debris: dead-pid
+    ``.delta_build`` staging inside the root (a SIGKILLed append's
+    half-written dir is invisible to readers but would otherwise leak
+    forever — round-10 review)."""
+    recover_swap(root, "compact")
     if os.path.isdir(root):
-        for d in glob.glob(os.path.join(root, ".delta_build*")):
-            if _dead(d.rsplit(".delta_build", 1)[-1]):
-                shutil.rmtree(d, ignore_errors=True)
+        for d in dead_pid_paths(os.path.join(root, ".delta_build")):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def list_layout_generations(root: str) -> list[str]:
@@ -819,8 +746,6 @@ def read_layout_index_pruned(
     generation's k/alphabet is checked against the base's — a
     hand-placed generation with drifted k-mer codes fails loudly
     instead of returning silently-wrong joins."""
-    import os
-
     if gens is None:
         gens = list_layout_generations(root)
     if idx_meta is None:
@@ -844,7 +769,6 @@ def read_layout_index_pruned(
             spark,
             os.path.join(gen, "index"),
             query_kmers,
-            meta=gmeta,
             shards=shards_by_mod[int(gmeta["num_shards"])],
         )
         union = part if union is None else union.unionAll(part)
@@ -869,17 +793,14 @@ def read_layout_store_pruned(
     generation sidecars' db_residues), which is what the e-value
     normalization needs — identical to a full rebuild's sidecar by
     construction."""
-    import os
-
     if gens is None:
         gens = list_layout_generations(root)
     union = None
     db_residues = 0
     for gen in gens:
         store = os.path.join(gen, "seqs")
-        meta = read_sequence_store_meta(spark, store)
-        db_residues += int(meta["db_residues"])
-        part = read_sequence_store_pruned(spark, store, seq_ids, meta=meta)
+        db_residues += int(read_sequence_store_meta(spark, store)["db_residues"])
+        part = read_sequence_store_pruned(spark, store, seq_ids)
         union = part if union is None else union.unionAll(part)
     return union, db_residues
 
@@ -896,8 +817,6 @@ _DISJOINT_COLLECT_CAP = 2_000
 
 
 def _check_ids_disjoint(spark, gens: list[str], new_seqs: DataFrame) -> None:
-    import os
-
     ids = [
         int(r["seq_id"])
         for r in new_seqs.select("seq_id")
@@ -978,9 +897,6 @@ def append_sharded_layout(
     generation): the fetch side unions generations without collision
     resolution, and the e-value's ``db_residues`` is the sum of
     generation sidecars — a replaced id would double-count."""
-    import os
-    import shutil
-
     from pyspark.sql.types import StructType
 
     gens = list_layout_generations(root)
@@ -1027,32 +943,11 @@ def append_sharded_layout(
         tmp = os.path.join(root, f".delta_build{os.getpid()}")
         shutil.rmtree(tmp, ignore_errors=True)
         try:
-            # same §2.6 overlap as write_sharded_layout: the generation's
-            # index and store writes are independent jobs over the cached
-            # delta — the store write back-fills the index job's tail
-            # instead of waiting behind it (the pool context drains both
-            # before any exception propagates to the rmtree below)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_idx = pool.submit(
-                    write_kmer_index_sharded,
-                    build_kmer_index(
-                        new_seqs, k=int(idx_meta["k"]), alphabet=idx_meta["alphabet"]
-                    ),
-                    os.path.join(tmp, "index"),
-                    num_shards=idx_shards,
-                    k=int(idx_meta["k"]),
-                    alphabet=idx_meta["alphabet"],
-                )
-                f_store = pool.submit(
-                    write_sequence_store_sharded,
-                    new_seqs,
-                    os.path.join(tmp, "seqs"),
-                    num_shards=seq_shards,
-                )
-                f_idx.result()
-                f_store.result()
+            k, alphabet = idx_meta["k"], idx_meta["alphabet"]
+            _write_generation(
+                tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
+                idx_shards, seq_shards, k, alphabet,
+            )
             nums = [int(os.path.basename(g).split("_", 1)[1]) for g in gens[1:]]
             n = (max(nums) + 1) if nums else 1  # gap-safe next slot
             while True:
@@ -1098,8 +993,6 @@ def layout_next_seq_id(spark, root: str) -> int:
     max(sidecar max_seq_id) + 1, O(generations) tiny reads. Falls back
     to a column-pruned max-scan for stores written before the sidecar
     carried max_seq_id (one pass, parquet statistics do most of it)."""
-    import os
-
     best = -1
     for gen in list_layout_generations(root):
         store = os.path.join(gen, "seqs")
@@ -1137,9 +1030,6 @@ def compact_sharded_layout(spark, root: str) -> int:
     root-missing swap window itself fails loudly on its claim rename
     (ENOENT), never silently. Returns the number of generations folded
     (0 = no deltas, nothing to do)."""
-    import os
-    import shutil
-
     gens = list_layout_generations(root)
     if len(gens) == 1:
         return 0
@@ -1165,16 +1055,9 @@ def compact_sharded_layout(spark, root: str) -> int:
     tmp = f"{root}.compact{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
-        write_kmer_index_sharded(
-            resolve_j2(idx_union),
-            os.path.join(tmp, "index"),
-            num_shards=int(idx_meta["num_shards"]),
-            k=int(idx_meta["k"]) if idx_meta["k"] is not None else None,
-            alphabet=idx_meta["alphabet"],
-        )
-        write_sequence_store_sharded(
-            seqs_union, os.path.join(tmp, "seqs"),
-            num_shards=int(store_meta["num_shards"]),
+        _write_generation(
+            tmp, resolve_j2(idx_union), seqs_union, idx_meta["num_shards"],
+            store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"],
         )
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)

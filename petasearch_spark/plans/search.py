@@ -294,11 +294,11 @@ def search_sharded_layout(
     # answers exactly like a full rebuild (tests/test_sharded_delta.py)
     gens = list_layout_generations(layout_root)
     alpha = _alphabet_params(kn.alphabet)[0]
-    # ONE sidecar read per dataset per probe (round-10 review finding):
-    # the index meta also validates build parameters — a probe with a
-    # different k or alphabet would join on incompatible kmer codes and
-    # return EMPTY results with exit 0, so refuse loudly instead
-    # (layouts written before round 10 carry no k/alphabet: no check)
+    # the index sidecar validates build parameters (round-10 review
+    # finding): a probe with a different k or alphabet would join on
+    # incompatible kmer codes and return EMPTY results with exit 0, so
+    # refuse loudly instead (layouts written before round 10 carry no
+    # k/alphabet: no check)
     idx_meta = read_kmer_index_meta(spark, os.path.join(layout_root, "index"))
     if idx_meta["k"] is not None and int(idx_meta["k"]) != kn.k:
         raise ValueError(

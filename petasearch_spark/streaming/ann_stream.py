@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from petasearch_spark.deadpid import pid_is_dead
 from petasearch_spark.functions.localframe import literal_df
 
 from petasearch_spark.operators.similarity import N_QUERIES, _as_double, cosine_topk
@@ -87,15 +88,8 @@ def _sweep_dead_sinks() -> None:
     for d in glob.glob(
         os.path.join(tempfile.gettempdir(), "ps_ann_stream_sink_*_*")
     ):
-        pid_part = d.rsplit("_", 1)[-1]
-        if not pid_part.isdigit() or int(pid_part) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid_part), 0)  # raises if the pid is gone
-        except ProcessLookupError:
+        if pid_is_dead(d.rsplit("_", 1)[-1]):
             shutil.rmtree(d, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another user — leave its sink alone
 
 
 def _run_foreach_stream(

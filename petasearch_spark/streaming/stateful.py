@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from petasearch_spark.deadpid import pid_is_dead
 from petasearch_spark.session import apply_session_defaults
 
 _LOG = logging.getLogger(__name__)
@@ -98,17 +99,11 @@ def _sweep_stale_siblings(root: str) -> None:
             continue  # the live root being claimed — never swept
         try:
             if sm.group("pid") is not None:
-                if int(sm.group("pid")) == os.getpid():
-                    continue
-                try:
-                    os.kill(int(sm.group("pid")), 0)
-                    continue  # builder still alive
-                except ProcessLookupError:
-                    # builder pid is gone — its half-built dir is ours to
-                    # sweep; logged so a cleanup pass is never invisible
-                    _LOG.debug("staged_cache: sweeping orphaned build dir %s", d)
-                except PermissionError:
-                    continue  # alive under another user
+                if not pid_is_dead(sm.group("pid")):
+                    continue  # builder still alive (or it is us)
+                # builder pid is gone — its half-built dir is ours to
+                # sweep; logged so a cleanup pass is never invisible
+                _LOG.debug("staged_cache: sweeping orphaned build dir %s", d)
             else:
                 if os.stat(d).st_mtime > horizon:
                     continue

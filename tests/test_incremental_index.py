@@ -462,7 +462,7 @@ class TestIvfRecluster:
         import os
         import shutil
 
-        from petasearch_spark.operators.ivf import _recover_recluster_swap
+        from petasearch_spark.deadpid import recover_swap
 
         _emb, _cent0, path = self._labeled_index(spark, tmp_path)
         n = spark.read.parquet(path).count()
@@ -471,11 +471,34 @@ class TestIvfRecluster:
         dead = 999_999_999
         os.rename(path, f"{path}.old{dead}")
         os.makedirs(f"{path}.recluster{dead}")
-        _recover_recluster_swap(path)
+        recover_swap(path, "recluster")
         assert spark.read.parquet(path).count() == n
         assert glob.glob(f"{path}.old*") == []
         assert glob.glob(f"{path}.recluster*") == []
         shutil.rmtree(path, ignore_errors=True)
+
+    def test_recluster_recovery_tolerates_losing_the_restore_race(self, tmp_path, monkeypatch):
+        """Two probes may both find the index missing and restore it from
+        the same dead-pid .old copy: the one whose rename loses (the
+        other already moved it back) returns without raising."""
+        import glob
+        import os
+
+        from petasearch_spark.deadpid import recover_swap
+
+        path = str(tmp_path / "ivf_idx")
+        os.makedirs(f"{path}.old999999999")
+        real_rename = os.rename
+
+        def rival_restores_first(src, dst):
+            monkeypatch.setattr(os, "rename", real_rename)
+            real_rename(src, dst)  # the concurrent restorer wins
+            real_rename(src, dst)  # ours: the source is gone
+
+        monkeypatch.setattr(os, "rename", rival_restores_first)
+        recover_swap(path, "recluster")
+        assert os.path.isdir(path)
+        assert glob.glob(f"{path}.old*") == []
 
 
 def test_probe_and_merge_recover_interrupted_recluster_swap(spark, tmp_path):

@@ -1,9 +1,10 @@
 """Every ``petasearch_spark`` name a script under scripts/ imports must
 exist: a removed or renamed API then fails here, loudly, instead of
 leaving a script broken until someone next runs it. And every
-``scripts/<name>.py`` the living docs name must exist, so a deleted
-script is never cited as runnable (a ``<rev>:scripts/<name>.py`` git
-history pointer is not a citation of the working tree)."""
+``scripts/<name>.py`` the living docs, bench.py and the package's
+docstrings and comments name must exist, so a deleted script is never
+cited as runnable (a ``<rev>:scripts/<name>.py`` git history pointer is
+not a citation of the working tree)."""
 
 from __future__ import annotations
 
@@ -17,6 +18,13 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = os.path.join(REPO, "scripts")
 DOCS = ["README.md", "COVERAGE.md", os.path.join(".claude", "skills", "verify", "SKILL.md")]
+#: docstrings and comments cite scripts too
+SOURCES = ["bench.py"] + sorted(
+    os.path.relpath(os.path.join(d, f), REPO)
+    for d, _, files in os.walk(os.path.join(REPO, "petasearch_spark"))
+    for f in files
+    if f.endswith(".py")
+)
 
 
 def _package_imports(path: str) -> list[tuple[str, str | None]]:
@@ -47,7 +55,7 @@ def test_script_package_imports_resolve(script):
     assert not missing, f"{script}: {missing}"
 
 
-@pytest.mark.parametrize("doc", DOCS)
+@pytest.mark.parametrize("doc", DOCS + SOURCES)
 def test_docs_name_only_existing_scripts(doc):
     with open(os.path.join(REPO, doc)) as fh:
         named = set(re.findall(r"(?<![:\w/.-])scripts/(\w+\.py)", fh.read()))

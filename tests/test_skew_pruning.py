@@ -203,35 +203,49 @@ def test_sharded_index_empty_query_and_meta(spark, tmp_path):
     assert read_kmer_index_pruned(spark, path, empty_qk).count() == 0
 
 
-def test_sidecar_meta_cache_is_bounded_lru(spark, tmp_path, monkeypatch):
-    """The in-process sidecar cache keeps at most _META_CACHE_SIZE
-    entries, least recently used out first, and an evicted sidecar is
-    read again from disk with its own values."""
-    from collections import OrderedDict
+def test_sidecar_format_compatible_both_ways(spark, tmp_path):
+    """The driver-written sidecar keeps the Spark-written format: (a) it
+    reads back through spark.read.parquet with the same schema the
+    Spark writer produced; (b) a Spark-written legacy sidecar holding
+    num_shards alone reads on the driver with k/alphabet = None; (c) a
+    _ps_meta/ holding two data files raises instead of picking one."""
+    import pytest as _pytest
 
-    from petasearch_spark.functions.localframe import literal_df
     from petasearch_spark.operators import kmer_index
+    from petasearch_spark.operators.kmer_index import (
+        read_kmer_index_meta,
+        read_sequence_store_meta,
+    )
 
-    monkeypatch.setattr(kmer_index, "_META_CACHE", OrderedDict())
-    monkeypatch.setattr(kmer_index, "_META_CACHE_SIZE", 2)
-    paths = []
-    for n in (10, 11, 12):
-        p = str(tmp_path / f"idx{n}")
-        literal_df(spark, [(n, 9, "ACDEFGHIKLMNPQRSTVWY")],
-                   "num_shards int, k int, alphabet string").write.parquet(p + "/_ps_meta")
-        paths.append(p)
+    # (a) new writer -> Spark reader
+    idx, store = str(tmp_path / "idx"), str(tmp_path / "store")
+    kmer_index._write_sidecar(idx, kmer_index._INDEX_META, (16, 9, "ACDEFGHIKLMNPQRSTVWY"))
+    kmer_index._write_sidecar(store, kmer_index._STORE_META, (8, 1234, 99, "{}"))
+    got = spark.read.parquet(idx + "/_ps_meta")
+    assert got.schema.simpleString() == "struct<num_shards:int,k:int,alphabet:string>"
+    assert tuple(got.head()) == (16, 9, "ACDEFGHIKLMNPQRSTVWY")
+    got = spark.read.parquet(store + "/_ps_meta")
+    assert got.schema.simpleString() == (
+        "struct<num_shards:int,db_residues:bigint,max_seq_id:bigint,schema_json:string>"
+    )
+    assert tuple(got.head()) == (8, 1234, 99, "{}")
+    assert read_sequence_store_meta(spark, store) == {
+        "num_shards": 8, "db_residues": 1234, "schema_json": "{}", "max_seq_id": 99,
+    }
 
-    def cached():
-        return [os.path.basename(os.path.dirname(key[0])) for key in kmer_index._META_CACHE]
+    # (b) Spark-written legacy sidecar -> driver reader
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame([(10,)], "num_shards int").coalesce(1).write.parquet(legacy + "/_ps_meta")
+    assert read_kmer_index_meta(spark, legacy) == {"num_shards": 10, "k": None, "alphabet": None}
 
-    for p in paths:
-        kmer_index.read_kmer_index_meta(spark, p)
-    assert cached() == ["idx11", "idx12"]  # idx10 evicted
-    assert kmer_index.read_kmer_index_meta(spark, paths[1])["num_shards"] == 11  # a hit
-    assert cached() == ["idx12", "idx11"]
-    meta = kmer_index.read_kmer_index_meta(spark, paths[0])  # re-read from disk
-    assert (meta["num_shards"], meta["k"]) == (10, 9)
-    assert cached() == ["idx11", "idx10"]
+    # (c) two data files: ambiguous, so loud
+    two = str(tmp_path / "two")
+    for n in (10, 11):
+        spark.createDataFrame([(n,)], "num_shards int").coalesce(1).write.mode(
+            "append"
+        ).parquet(two + "/_ps_meta")
+    with _pytest.raises(ValueError, match="one data file"):
+        read_kmer_index_meta(spark, two)
 
 
 def test_sequence_store_pruned_fetch(spark, tmp_path):

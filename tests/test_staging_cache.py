@@ -134,3 +134,25 @@ def test_sweep_reaps_dead_pid_debris_of_the_current_key(tmp_path):
     staged_cache(root, lambda tmp: (_ for _ in ()).throw(AssertionError("rebuild")))
     assert not own_key_debris.exists(), "dead-pid debris of the current key must be swept"
     assert os.path.isdir(root), "the live root itself is never touched"
+
+
+def test_search_index_path_honors_tmpdir_and_corpus(tmp_path, monkeypatch):
+    """The full-search bench split's prebuilt index is keyed like every
+    staged cache: it lives under TMPDIR, and a rewritten
+    documents.parquet gets a new path instead of a stale index."""
+    import tempfile
+
+    from petasearch_spark.operators.doc_search import _search_index_path
+
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    docs = sf / "documents.parquet"
+    docs.write_bytes(b"one")
+    tmp = tmp_path / "tmpdir"
+    tmp.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    first = _search_index_path(str(sf))
+    assert os.path.dirname(first) == str(tmp)
+    docs.write_bytes(b"rewritten")
+    assert _search_index_path(str(sf)) != first
