@@ -324,7 +324,7 @@ def read_kmer_index_meta(spark, path: str) -> dict:
 def read_kmer_index_pruned(
     spark,
     path: str,
-    query_kmers: DataFrame,
+    query_kmers: DataFrame | None,
     shards: list[int] | None = None,
 ) -> DataFrame:
     """Read the sharded index PRUNED to the shards the given query
@@ -337,20 +337,19 @@ def read_kmer_index_pruned(
     size. Returns the standard index schema (kmer, seq_id, seq_len).
     ``shards``: pass a precomputed shard list to skip the collect — a
     layout probe derives the lists of every modulus in ONE collect
-    (query_shard_lists) and prunes every generation with them."""
-    if shards is None:
+    (query_shard_lists) and prunes every generation with them; with
+    neither, every shard is read (compaction)."""
+    if shards is None and query_kmers is not None:
         shards = query_shard_list(
             query_kmers, int(read_kmer_index_meta(spark, path)["num_shards"])
         )
     # explicit schema: an EMPTY corpus writes a partitioned dataset with
     # no part files at all (just _SUCCESS), and schema inference fails on
     # it — the empty-input law is "0 rows", never an AnalysisException
-    return (
-        spark.read.schema("kmer long, seq_id long, seq_len int, kshard int")
-        .parquet(path)
-        .filter(F.col("kshard").isin(shards))
-        .select("kmer", "seq_id", "seq_len")
-    )
+    index = spark.read.schema("kmer long, seq_id long, seq_len int, kshard int").parquet(path)
+    if shards is not None:
+        index = index.filter(F.col("kshard").isin(shards))
+    return index.select("kmer", "seq_id", "seq_len")
 
 
 def query_shard_lists(query_kmers: DataFrame, moduli) -> dict[int, list[int]]:
@@ -498,27 +497,27 @@ def read_sequence_store_meta(spark, path: str) -> dict:
     return {k: d.get(k) for k in ("num_shards", "db_residues", "schema_json", "max_seq_id")}
 
 
-def read_sequence_store_pruned(spark, path: str, seq_ids: list[int]) -> DataFrame:
+def read_sequence_store_pruned(
+    spark, path: str, seq_ids: list[int] | None, shards: list[int] | None = None
+) -> DataFrame:
     """Read the sharded sequence store pruned to the given candidate ids:
     an INSET partition filter on ``sshard`` prunes directories and the
     pushed ``seq_id IN`` filter prunes row groups within them, so fetch
     I/O is proportional to the CANDIDATE set (itself bounded by the
-    prefilter funnel), not the corpus. ``seq_ids`` comes from a
-    driver-side collect bounded by queries x candidates-per-query — the
-    interactive case this layout serves — mirroring
-    read_kmer_index_pruned's bounded shard-list collect. The explicit
-    schema (from the sidecar) keeps the empty-corpus law: 0 rows, never
-    an AnalysisException on an empty partitioned dataset."""
+    prefilter funnel), not the corpus. ``shards`` replaces the ids'
+    ``sshard`` list; with ``seq_ids`` None only it prunes (the append's
+    id check), and with neither every shard is read (compaction). The
+    explicit schema (from the sidecar) keeps the empty-corpus law: 0
+    rows, never an AnalysisException on an empty partitioned dataset."""
     meta = read_sequence_store_meta(spark, path)
-    num_shards = int(meta["num_shards"])
-    ids = sorted({int(i) for i in seq_ids})
-    shards = sorted({i % num_shards for i in ids})
-    return (
-        spark.read.schema(_store_read_schema(meta["schema_json"]))
-        .parquet(path)
-        .filter(F.col("sshard").isin(shards) & F.col("seq_id").isin(ids))
-        .drop("sshard")
-    )
+    ids = None if seq_ids is None else sorted({int(i) for i in seq_ids})
+    if shards is None and ids is not None:
+        shards = sorted({i % int(meta["num_shards"]) for i in ids})
+    store = spark.read.schema(_store_read_schema(meta["schema_json"])).parquet(path)
+    if shards is not None:
+        keep = F.col("sshard").isin(shards)
+        store = store.filter(keep if ids is None else keep & F.col("seq_id").isin(ids))
+    return store.drop("sshard")
 
 
 def _drop_managed_table(spark, table: str) -> None:
@@ -666,13 +665,31 @@ def _delta_generation_dirs(root: str) -> list[str]:
     # an exact-width pattern would make generation 100000 invisible to
     # every reader while append kept returning success (round-10
     # review); numeric sort, since lexicographic breaks at mixed widths
-    pat = re.compile(r"^delta_(\d{5,})$")
-    found = []
-    for n in os.listdir(root):
-        m = pat.match(n)
-        if m:
-            found.append((int(m.group(1)), n))
-    return [os.path.join(root, n) for _, n in sorted(found)]
+    pat = re.compile(r"^delta_\d{5,}$")
+    return sorted(
+        (os.path.join(root, n) for n in os.listdir(root) if pat.match(n)), key=_slot_number
+    )
+
+
+def _slot_number(gen: str) -> int:
+    """The slot number of a published ``delta_NNNNN`` generation path."""
+    return int(os.path.basename(gen).split("_", 1)[1])
+
+
+def _claim_slot(src: str, root: str, n: int) -> str:
+    """Publish the directory ``src`` as generation ``n`` of ``root`` by
+    atomic rename, moving up to the next slot while a concurrent
+    appender holds the one tried; returns the claimed path. Any other
+    rename failure (e.g. a root missing mid-compaction) raises."""
+    while True:
+        target = os.path.join(root, _DELTA_NAME_FMT.format(n))
+        try:
+            os.rename(src, target)
+            return target
+        except OSError:
+            if not os.path.isdir(target):
+                raise  # not a slot collision — surface it
+            n += 1
 
 
 def _recover_layout_swap(root: str) -> None:
@@ -763,15 +780,9 @@ def read_layout_index_pruned(
                     " never write this); rebuild it"
                 )
     shards_by_mod = query_shard_lists(query_kmers, [m["num_shards"] for m in metas])
-    union = None
-    for gen, gmeta in zip(gens, metas):
-        part = read_kmer_index_pruned(
-            spark,
-            os.path.join(gen, "index"),
-            query_kmers,
-            shards=shards_by_mod[int(gmeta["num_shards"])],
-        )
-        union = part if union is None else union.unionAll(part)
+    union = _read_generations(
+        spark, gens, "index", [shards_by_mod[int(m["num_shards"])] for m in metas]
+    )
     if len(gens) == 1:
         return union
     # narrow to the query's own k-mers BEFORE re-resolving: the probed
@@ -795,65 +806,82 @@ def read_layout_store_pruned(
     construction."""
     if gens is None:
         gens = list_layout_generations(root)
+    db_residues = sum(
+        int(read_sequence_store_meta(spark, os.path.join(g, "seqs"))["db_residues"])
+        for g in gens
+    )
+    return _read_generations(spark, gens, "seqs", seq_ids=seq_ids), db_residues
+
+
+def _read_generations(
+    spark, gens: list[str], half: str, shards: list[list[int]] | None = None,
+    seq_ids: list[int] | None = None, tag: str | None = None,
+) -> DataFrame:
+    """The union of one half of every generation in ``gens``, the
+    ``"index"`` (read_kmer_index_pruned) or the ``"seqs"`` store
+    (read_sequence_store_pruned): the one place generations are
+    unioned. ``shards`` gives each generation the prune list of ITS
+    modulus (parallel to ``gens``); ``seq_ids`` prunes the store to those
+    ids; ``tag`` names an int column holding each row's index in ``gens``."""
     union = None
-    db_residues = 0
-    for gen in gens:
-        store = os.path.join(gen, "seqs")
-        db_residues += int(read_sequence_store_meta(spark, store)["db_residues"])
-        part = read_sequence_store_pruned(spark, store, seq_ids)
+    for i, gen in enumerate(gens):
+        path = os.path.join(gen, half)
+        gen_shards = None if shards is None else shards[i]
+        if half == "index":
+            part = read_kmer_index_pruned(spark, path, None, shards=gen_shards)
+        else:
+            part = read_sequence_store_pruned(spark, path, seq_ids, shards=gen_shards)
+        if tag is not None:
+            part = part.withColumn(tag, F.lit(i))
         union = part if union is None else union.unionAll(part)
-    return union, db_residues
+    return union
 
 
-#: above this many distinct delta seq_ids the append's id-disjointness
-#: check switches from a driver-bounded pruned read to a distributed
-#: semi-join (one column-pruned pass over the stored sequence ids —
-#: cheaper than the delta's own index build at that size). Keep this
-#: SMALL: the pruned path materializes the ids as an `isin` literal
-#: list, and a round-10 1M measurement showed a 100k-literal filter
-#: costing more in plan handling than the entire delta index build;
-#: 2k literals is interactive-append scale and planning-free.
-_DISJOINT_COLLECT_CAP = 2_000
+class SeqIdCollision(ValueError):
+    """An append's sequence ids already live in the layout: ``matched``
+    of the delta's ``distinct`` ids were found, in ``generations``."""
+
+    def __init__(self, seq_id: int, gen: str, matched: int, distinct: int, generations: list[str]):
+        self.matched, self.distinct, self.generations = matched, distinct, generations
+        super().__init__(
+            f"append_sharded_layout: seq_id {seq_id} already exists in generation {gen}"
+            f" ({matched} of the delta's {distinct} ids, in {generations}) — delta"
+            " sequence ids must be NEW (the fetch side unions generations without"
+            " collision resolution; re-id the delta before appending)"
+        )
 
 
 def _check_ids_disjoint(spark, gens: list[str], new_seqs: DataFrame) -> None:
-    ids = [
-        int(r["seq_id"])
-        for r in new_seqs.select("seq_id")
-        .distinct()
-        .limit(_DISJOINT_COLLECT_CAP + 1)
-        .collect()
-    ]
-    if len(ids) <= _DISJOINT_COLLECT_CAP:
-        for gen in gens:
-            clash = (
-                read_sequence_store_pruned(spark, os.path.join(gen, "seqs"), ids)
-                .select("seq_id")
-                .take(1)
-            )
-            if clash:
-                raise ValueError(
-                    f"append_sharded_layout: seq_id {clash[0]['seq_id']} already"
-                    f" exists in generation {gen} — delta sequence ids must be"
-                    " NEW (the layout's fetch side unions generations without"
-                    " collision resolution; re-id the delta before appending)"
-                )
-    else:
-        existing = None
-        for gen in gens:
-            meta = read_sequence_store_meta(spark, os.path.join(gen, "seqs"))
-            part = (
-                spark.read.schema(_store_read_schema(meta["schema_json"]))
-                .parquet(os.path.join(gen, "seqs"))
-                .select("seq_id")
-            )
-            existing = part if existing is None else existing.unionAll(part)
-        clash = new_seqs.join(existing, "seq_id", "left_semi").select("seq_id").take(1)
-        if clash:
-            raise ValueError(
-                f"append_sharded_layout: seq_id {clash[0]['seq_id']} already"
-                " exists in the layout — delta sequence ids must be NEW"
-            )
+    """Raise :class:`SeqIdCollision` if any id of ``new_seqs`` is stored in
+    ``gens``. Two Spark actions, whatever the number of generations: one
+    aggregation over the delta counts its distinct ids and gives its
+    ``seq_id % m`` list for every store modulus (query_shard_lists' lists
+    plus the count the stream fold's replay test needs), then one query
+    semi-joins the pruned stores' ids against the broadcast delta ids.
+    Only the ``seq_id`` column of the touched shards is read, and no id
+    travels as a literal."""
+    metas = [read_sequence_store_meta(spark, os.path.join(g, "seqs")) for g in gens]
+    mods = sorted({int(m["num_shards"]) for m in metas})
+    delta = new_seqs.agg(F.count_distinct("seq_id"), *[
+        F.collect_set(F.pmod(F.col("seq_id"), F.lit(m)).cast("int")) for m in mods
+    ]).first()
+    shards = [sorted(delta[1 + mods.index(int(m["num_shards"]))]) for m in metas]
+    stored = _read_generations(spark, gens, "seqs", shards, tag="gen")
+    hits = (
+        stored.select("seq_id", "gen")
+        .join(F.broadcast(new_seqs.select("seq_id")), "seq_id", "left_semi")
+        .agg(
+            F.min(F.struct("seq_id", "gen")).alias("first"),
+            F.count_distinct("seq_id").alias("matched"),
+            F.sort_array(F.collect_set("gen")).alias("gens"),
+        )
+        .first()
+    )
+    if hits["matched"]:
+        raise SeqIdCollision(
+            hits["first"]["seq_id"], gens[hits["first"]["gen"]], hits["matched"],
+            delta[0], [gens[i] for i in hits["gens"]],
+        )
 
 
 #: generation fanout auto-sizing (the LSM L0 shape): a delta's shard
@@ -889,14 +917,16 @@ def append_sharded_layout(
     (no generation written). ``num_shards`` overrides the auto-sizing
     for both datasets (e.g. a bulk daily delta sized like a base).
 
-    Sequence ids must be NEW (checked, driver-bounded for interactive
-    deltas / distributed above _DISJOINT_COLLECT_CAP; re-checked after
-    publish against generations claimed concurrently — two racing
-    appenders with colliding ids resolve deterministically, the lower
-    slot survives and the higher aborts loudly, removing its own
-    generation): the fetch side unions generations without collision
-    resolution, and the e-value's ``db_residues`` is the sum of
-    generation sidecars — a replaced id would double-count."""
+    Sequence ids must be NEW, or :class:`SeqIdCollision` (a ValueError)
+    is raised: checked before the write by one shard-pruned semi-join
+    whose cost does not grow with the number of generations
+    (_check_ids_disjoint), and re-checked after publish against
+    generations claimed concurrently — two racing appenders with
+    colliding ids resolve deterministically, the lower slot survives and
+    the higher aborts loudly, removing its own generation. The fetch
+    side unions generations without collision resolution, and the
+    e-value's ``db_residues`` is the sum of generation sidecars — a
+    replaced id would double-count."""
     from pyspark.sql.types import StructType
 
     gens = list_layout_generations(root)
@@ -948,17 +978,7 @@ def append_sharded_layout(
                 tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
                 idx_shards, seq_shards, k, alphabet,
             )
-            nums = [int(os.path.basename(g).split("_", 1)[1]) for g in gens[1:]]
-            n = (max(nums) + 1) if nums else 1  # gap-safe next slot
-            while True:
-                target = os.path.join(root, _DELTA_NAME_FMT.format(n))
-                try:
-                    os.rename(tmp, target)
-                    break
-                except OSError:
-                    if not os.path.isdir(target):
-                        raise  # not a slot collision — surface it
-                    n += 1  # concurrent appender claimed this slot
+            target = _claim_slot(tmp, root, max(map(_slot_number, gens[1:]), default=0) + 1)
             # the disjointness check above is check-then-publish: a rival
             # appender may have published between the check and our claim
             # (round-10 review). Re-check against generations we did not
@@ -966,17 +986,13 @@ def append_sharded_layout(
             # only inspect lower slots — the rival inspecting US sees a
             # lower slot and keeps), so exactly one survives,
             # deterministically, with no lock
-            known = set(gens)
             rivals = [
-                g
-                for g in _delta_generation_dirs(root)
-                if g not in known
-                and g != target
-                and int(os.path.basename(g).split("_", 1)[1]) < n
+                g for g in _delta_generation_dirs(root)
+                if g not in gens and _slot_number(g) < _slot_number(target)
             ]
-            for g in rivals:
+            if rivals:
                 try:
-                    _check_ids_disjoint(spark, [g], new_seqs)
+                    _check_ids_disjoint(spark, rivals, new_seqs)
                 except ValueError:
                     shutil.rmtree(target, ignore_errors=True)
                     raise
@@ -1035,28 +1051,12 @@ def compact_sharded_layout(spark, root: str) -> int:
         return 0
     idx_meta = read_kmer_index_meta(spark, os.path.join(root, "index"))
     store_meta = read_sequence_store_meta(spark, os.path.join(root, "seqs"))
-    schema = "kmer long, seq_id long, seq_len int, kshard int"
-    idx_union = None
-    seqs_union = None
-    for gen in gens:
-        part = (
-            spark.read.schema(schema)
-            .parquet(os.path.join(gen, "index"))
-            .select("kmer", "seq_id", "seq_len")
-        )
-        idx_union = part if idx_union is None else idx_union.unionAll(part)
-        smeta = read_sequence_store_meta(spark, os.path.join(gen, "seqs"))
-        seq_part = (
-            spark.read.schema(_store_read_schema(smeta["schema_json"]))
-            .parquet(os.path.join(gen, "seqs"))
-            .drop("sshard")
-        )
-        seqs_union = seq_part if seqs_union is None else seqs_union.unionAll(seq_part)
     tmp = f"{root}.compact{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
         _write_generation(
-            tmp, resolve_j2(idx_union), seqs_union, idx_meta["num_shards"],
+            tmp, resolve_j2(_read_generations(spark, gens, "index")),
+            _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
             store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"],
         )
     except BaseException:
@@ -1073,18 +1073,8 @@ def compact_sharded_layout(spark, root: str) -> int:
     folded = {os.path.basename(g) for g in gens}
     n = 1
     for g in _delta_generation_dirs(old):
-        if os.path.basename(g) in folded:
-            continue
-        while True:
-            slot = os.path.join(root, _DELTA_NAME_FMT.format(n))
-            try:
-                os.rename(g, slot)
-                break
-            except OSError:
-                if not os.path.isdir(slot):
-                    raise
-                n += 1
-        n += 1
+        if os.path.basename(g) not in folded:
+            n = _slot_number(_claim_slot(g, root, n)) + 1
     shutil.rmtree(old, ignore_errors=True)
     return len(gens) - 1
 

@@ -319,7 +319,12 @@ def search_sharded_layout(
         return df
 
     def fetch_targets(pairs: DataFrame):
-        # the pairs feed both the candidate-id collect and the kernel
+        # the pairs feed both the candidate-id collect and the kernel.
+        # The fetch stays a literal `seq_id IN` list, not a semi-join: up
+        # to spark.sql.parquet.pushdown.inFilterThreshold (10) ids parquet
+        # pushes it as equality filters, so a one-query probe reads about
+        # one row group per candidate in each touched shard; a semi-join
+        # would read the touched shards whole.
         pairs = keep(pairs)
         candidate_ids = [
             int(r["target_id"]) for r in pairs.select("target_id").distinct().collect()

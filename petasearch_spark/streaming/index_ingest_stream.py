@@ -20,17 +20,20 @@ oracle verbatim.
 Exactly-once: append is all-or-nothing, so a batch REPLAYED after a
 crash (sink-side work done, checkpoint commit lost) either finds none
 of its ids (the rename never happened — re-append is safe) or all of
-them (the generation is live — skip). The id-disjointness check that
-append performs anyway IS the replay detector; the fold turns that
-loud collision into the documented skip (pinned by
+them in one generation (it is live — skip). The id-disjointness check
+that append performs anyway IS the replay detector: its SeqIdCollision
+counts the matched ids and their generations, and the fold skips only
+that exact case; a partly colliding batch raises, since a skip would
+lose its new ids (pinned by
 tests/test_sharded_delta.py::test_stream_fold_batch_replay_is_exactly_once).
 
 Scale shape: per-batch cost is append's — extraction + groupBy over the
 BATCH, a generation write whose fanout is auto-sized to the batch
-(LSM L0), and an id-disjointness probe bounded by the batch's ids.
-Nothing rescans the corpus; compaction (compact_sharded_layout) is the
-scheduled maintenance job that bounds generation count, exactly like
-the IVF recluster loop (operators/ivf.py).
+(LSM L0), and an id-disjointness query that reads only the ``seq_id``
+column of the store shards the batch's ids hash to. Nothing rescans
+the corpus; compaction (compact_sharded_layout) is the scheduled
+maintenance job that bounds generation count, exactly like the IVF
+recluster loop (operators/ivf.py).
 """
 
 from __future__ import annotations
@@ -46,16 +49,16 @@ def fold_batch_into_layout(spark: SparkSession, root: str, batch_seqs: DataFrame
     """Fold one micro-batch of target sequences into the layout —
     append_sharded_layout plus the replay-skip law (see module doc).
     Returns the generation path, None for an empty or replayed batch."""
-    from petasearch_spark.operators.kmer_index import append_sharded_layout
+    from petasearch_spark.operators.kmer_index import SeqIdCollision, append_sharded_layout
 
     try:
         return append_sharded_layout(spark, root, batch_seqs)
-    except ValueError as exc:
-        if "already exists" not in str(exc):
-            raise
-        # replayed batch: appends are atomic, so any surviving id means
-        # THIS batch's generation is already live — exactly-once by skip
-        return None
+    except SeqIdCollision as exc:
+        # replayed batch: appends are atomic, so a batch whose ids ALL
+        # live in one generation is that generation — exactly-once by skip
+        if exc.matched == exc.distinct and len(exc.generations) == 1:
+            return None
+        raise
 
 
 def _ingest_root(sf_dir: str) -> str:

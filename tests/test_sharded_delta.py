@@ -161,20 +161,17 @@ def test_append_claims_next_slot_and_empty_is_noop(spark, tmp_path):
     assert not [n for n in os.listdir(root) if n.startswith(".delta_build")]
 
 
-def test_append_refuses_duplicate_seq_ids(spark, tmp_path, monkeypatch):
+def test_append_refuses_duplicate_seq_ids(spark, tmp_path):
     root = str(tmp_path / "root")
     write_sharded_layout(_seqs(spark, _rand_rows(9, range(6))), root, num_shards=8, k=_K, alphabet=_ALPHA)
     append_sharded_layout(spark, root, _seqs(spark, _rand_rows(10, range(10, 13))))
-    # collision with the BASE (driver-bounded pruned-read path)
+    # collision with the BASE
     with pytest.raises(ValueError, match="already exists"):
         append_sharded_layout(spark, root, _seqs(spark, _rand_rows(11, [3, 99])))
     # collision with an earlier DELTA generation
     with pytest.raises(ValueError, match="already exists"):
         append_sharded_layout(spark, root, _seqs(spark, _rand_rows(12, [11])))
-    # distributed path (cap forced to 1): same refusal law
-    import petasearch_spark.operators.kmer_index as ki
-
-    monkeypatch.setattr(ki, "_DISJOINT_COLLECT_CAP", 1)
+    # new ids beside one clashing id: same refusal law
     with pytest.raises(ValueError, match="already exists"):
         append_sharded_layout(spark, root, _seqs(spark, _rand_rows(13, [200, 201, 3])))
     # a failed append leaves no generation and no staging debris
@@ -373,9 +370,11 @@ def test_dead_pid_delta_build_debris_is_swept(spark, tmp_path):
 def test_stream_fold_batch_replay_is_exactly_once(spark, tmp_path):
     """The streaming ingest's exactly-once law: a micro-batch REPLAYED
     after a crash (the append's rename landed, the checkpoint commit
-    didn't) is skipped — append is all-or-nothing, so any surviving id
-    means the whole batch's generation is live. A genuinely new batch
-    still appends, and a genuine (non-replay) error still raises."""
+    didn't) is skipped — append is all-or-nothing, so a batch whose ids
+    all live in one generation is that generation. A batch that only
+    partly collides is not a replay and raises (a skip would lose its
+    new ids). A genuinely new batch still appends, and a genuine
+    (non-replay) error still raises."""
     from petasearch_spark.streaming.index_ingest_stream import fold_batch_into_layout
 
     root = str(tmp_path / "root")
@@ -386,6 +385,10 @@ def test_stream_fold_batch_replay_is_exactly_once(spark, tmp_path):
     before = list_layout_generations(root)
     # replay: same batch again -> skip, layout untouched
     assert fold_batch_into_layout(spark, root, batch) is None
+    assert list_layout_generations(root) == before
+    # partial collision (id 3 is in the base, 100 and 101 are new): raise
+    with pytest.raises(ValueError, match="already exists"):
+        fold_batch_into_layout(spark, root, _seqs(spark, _rand_rows(45, [3, 100, 101])))
     assert list_layout_generations(root) == before
     # a new batch still appends
     assert fold_batch_into_layout(spark, root, _seqs(spark, _rand_rows(42, [50, 51]))) is not None
