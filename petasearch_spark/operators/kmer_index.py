@@ -37,7 +37,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from petasearch_spark.deadpid import dead_pid_paths, recover_swap
@@ -370,7 +370,9 @@ def query_shard_list(query_kmers: DataFrame, num_shards: int) -> list[int]:
     return query_shard_lists(query_kmers, [num_shards])[int(num_shards)]
 
 
-def write_sequence_store_sharded(seqs: DataFrame, path: str, num_shards: int = 256) -> None:
+def write_sequence_store_sharded(
+    seqs: DataFrame, path: str, num_shards: int, db_residues: int, max_seq_id: int
+) -> None:
     """Persist a SEQUENCE STORE directory-partitioned by ``sshard =
     seq_id % num_shards`` — the fetch-side twin of the sharded k-mer
     index (round 10): after a shard-pruned prefilter yields candidate
@@ -379,89 +381,93 @@ def write_sequence_store_sharded(seqs: DataFrame, path: str, num_shards: int = 2
     candidates by offset into the target DB, never a full pass —
     /root/reference/src/sra/blockalign.cpp:387-417). The ``_ps_meta``
     sidecar (inside the directory, so a publish-by-rename moves data+meta
-    atomically) carries the modulus, the store's schema, and
-    ``db_residues`` — the CORPUS-total residue count the e-value
-    normalization needs (reference keeps it in the DB header); computing
-    it at query time from a pruned fetch would skew e-values, and from
-    the full store would defeat the prune. ``max_seq_id`` (round 10)
-    rides along so an APPEND can auto-offset fresh ids in O(generations)
-    sidecar reads instead of an O(corpus) max-scan."""
-    from pyspark.sql import Observation
-
+    atomically) carries the modulus, the store's schema, ``db_residues``
+    — the CORPUS-total residue count the e-value normalization needs
+    (reference keeps it in the DB header); computing it at query time
+    from a pruned fetch would skew e-values, and from the full store
+    would defeat the prune — and ``max_seq_id``, so an APPEND can
+    auto-offset fresh ids in O(generations) sidecar reads. The caller
+    passes both (:func:`_admit`, or compaction's generation sidecars)."""
     spark = seqs.sparkSession
-    # db_residues/max_seq_id ride the WRITE itself via observe (round-10
-    # optimization, guide §1/§5: the separate .agg().collect() was one
-    # more full pass over seqs — observed metrics are collected from the
-    # same tasks that write the store, exactly-once per successful task)
-    obs = Observation("ps_store_stats")
     (
         seqs.withColumn("sshard", F.pmod(F.col("seq_id"), F.lit(num_shards)).cast("int"))
         # explicit count: see write_kmer_index_sharded (AQE would
         # serialize the num_shards-directory write into one task)
         .repartition(_write_parts(spark, num_shards), F.col("sshard"))
-        .sortWithinPartitions("seq_id")
-        # observe ABOVE the exchange boundary, i.e. inside the WRITE's
-        # result stage (round-11, ADVICE r10): accumulator updates are
-        # exactly-once only for result-stage tasks — observed below the
-        # repartition they ride the shuffle-MAP stage, where a fetch-
-        # failure resubmission or speculative duplicate double-counts
-        # the sum and silently inflates the persisted Karlin-Altschul
-        # normalization constant. Same single pass, now retry-exact.
-        .observe(
-            obs,
-            F.sum(F.length("sequence")).alias("r"),
-            F.max("seq_id").alias("m"),
-        )
+        # sshard first: the planned write sorts by it, and would drop a
+        # seq_id-only sort (row-group pruning reads the seq_id order)
+        .sortWithinPartitions("sshard", "seq_id")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("sshard")
         .parquet(path)
     )
-    stats = obs.get
-    db_residues = int(stats["r"] or 0)
-    max_seq_id = int(stats["m"]) if stats["m"] is not None else -1
-    _write_sidecar(
-        path, _STORE_META, (int(num_shards), db_residues, max_seq_id, seqs.schema.json())
-    )
+    meta = (int(num_shards), int(db_residues), int(max_seq_id), seqs.schema.json())
+    _write_sidecar(path, _STORE_META, meta)
 
 
 def write_sharded_layout(
     seqs: DataFrame, root: str, num_shards: int = 256, k: int = DEFAULT_K,
     alphabet: str = AMINO_ALPHABET,
 ) -> None:
-    """Write BOTH halves of the interactive layout under ``root``: the
+    """Write ``seqs`` as a fresh interactive layout at ``root``: the
     kmer-sharded index (``index/``) and the seq_id-sharded sequence
     store (``seqs/``, round 10 — carries db_residues for e-value parity
-    with the full-scan path). One pass over ``seqs`` feeds both; pair
-    with a publish-by-rename staging (streaming.stateful.staged_cache)
-    when the root is shared."""
+    with the full-scan path). One persisted pass over ``seqs`` feeds the
+    admission (:func:`_admit`) and both halves. The whole root is
+    replaced (:func:`_publish_root`): an old layout's delta generations
+    are superseded with it."""
     seqs = seqs.persist()
     try:
-        # the block cache serves both halves' readers (per-block
-        # compute-or-wait)
-        _write_generation(
-            root, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
-            num_shards, num_shards, k, alphabet,
-        )
+        admitted = _admit(seqs)
+        _publish_root(root, lambda tmp: _write_generation(
+            tmp, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
+            num_shards, num_shards, k, alphabet, admitted,
+        ))
     finally:
         seqs.unpersist()
 
 
+def _admit(seqs: DataFrame, moduli=()) -> Row:
+    """The one admission aggregation of a layout write, over the frame it
+    persists: a Row of the row count ``n``, the summed sequence lengths
+    ``residues``, ``max_seq_id`` (-1 when empty) and, as ``m<m>``, the
+    ``seq_id % m`` values of every ``m`` in ``moduli``. Ids must be unique
+    (the fetch returns every row of an id, and db_residues counts each):
+    a repeated or null id raises ValueError naming it, found by a query
+    run only then."""
+    row = seqs.agg(
+        F.count(F.lit(1)).alias("n"), F.count_distinct("seq_id").alias("distinct"),
+        F.coalesce(F.sum(F.length("sequence")), F.lit(0)).alias("residues"),
+        F.coalesce(F.max("seq_id"), F.lit(-1)).alias("max_seq_id"),
+        *[F.collect_set(F.pmod("seq_id", F.lit(m)).cast("int")).alias(f"m{m}")
+          for m in sorted({int(m) for m in moduli})],
+    ).first()
+    if row["n"] != row["distinct"]:
+        dup = seqs.groupBy("seq_id").count().where("count > 1 OR seq_id IS NULL")
+        dup = dup.orderBy("seq_id").first()
+        raise ValueError(
+            f"sharded layout: seq_id {dup[0]} appears {dup[1]} times in the sequences"
+            " being written; layout ids must be unique and non-null"
+        )
+    return row
+
+
 def _write_generation(
     root: str, index: DataFrame, seqs: DataFrame, idx_shards: int,
-    seq_shards: int, k: int | None, alphabet: str | None,
+    seq_shards: int, k: int | None, alphabet: str | None, stats: Row,
 ) -> None:
-    """Write one generation of the interactive layout under ``root`` —
-    a base (write_sharded_layout, compact_sharded_layout) or a delta
-    (append_sharded_layout): ``index`` as the kmer-sharded ``index/``
-    and ``seqs`` as the seq_id-sharded store ``seqs/``, each with its
-    sidecar. The two writes are INDEPENDENT jobs; submitted from a
-    2-thread pool they overlap (guide §2.6 — the store write's tasks
-    back-fill executors freed by the index job's shuffle tail instead
-    of waiting for it to drain). Job descriptions are thread-local, so
-    each stays labelled. Both outcomes surface, and only after the pool
-    has drained, so no half-running write is abandoned behind a
-    propagating exception."""
+    """Write one generation of the interactive layout under ``root`` — a base
+    (write_sharded_layout, compact_sharded_layout) or a delta
+    (append_sharded_layout): ``index`` as the kmer-sharded ``index/`` and
+    ``seqs`` as the seq_id-sharded store ``seqs/``, each with its sidecar
+    (``stats`` gives the store's ``residues`` and ``max_seq_id``). The two
+    writes are INDEPENDENT jobs; submitted from a 2-thread pool they overlap
+    (guide §2.6 — the store write's tasks back-fill executors freed by the
+    index job's shuffle tail instead of waiting for it to drain). Job
+    descriptions are thread-local, so each stays labelled. Both outcomes
+    surface, and only after the pool has drained, so no half-running write
+    is abandoned behind a propagating exception."""
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [
             pool.submit(
@@ -470,11 +476,42 @@ def _write_generation(
             ),
             pool.submit(
                 write_sequence_store_sharded, seqs, os.path.join(root, "seqs"),
-                num_shards=seq_shards,
+                seq_shards, stats["residues"], stats["max_seq_id"],
             ),
         ]
     for f in futures:
         f.result()
+
+
+def _publish_root(root: str, write, folded: set[str] | None = None) -> None:
+    """The one publish path of a whole layout: ``write(tmp)`` builds it in the
+    pid-unique sibling ``root.compact<pid>``, swapped in by renaming root to
+    ``root.old<pid>`` and the sibling to root (a missing root takes the
+    second rename alone; readers' :func:`_recover_layout_swap` undoes a kill
+    between them). The old root goes with its generations, except that given
+    compaction's snapshot ``folded``, those it does not name were published
+    while the fold ran and are re-claimed into the new root (their ids are
+    disjoint from the base by append's check). An appender racing the
+    root-missing window fails loudly on its claim rename (ENOENT)."""
+    root = os.path.normpath(root)
+    tmp = f"{root}.compact{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    old = f"{root}.old{os.getpid()}"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(root):
+        os.rename(root, old)
+    os.rename(tmp, root)
+    if folded is not None:
+        n = 1
+        for g in _delta_generation_dirs(old):
+            if os.path.basename(g) not in folded:
+                n = _slot_number(_claim_slot(g, root, n)) + 1
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def is_sharded_layout(path: str) -> bool:
@@ -693,12 +730,10 @@ def _claim_slot(src: str, root: str, n: int) -> str:
 
 
 def _recover_layout_swap(root: str) -> None:
-    """Crash recovery for compact_sharded_layout's two-rename swap — the
-    recluster_ivf_index protocol, so the same deadpid.recover_swap with
-    the ``.compact`` staging tag — plus the layout's own debris: dead-pid
-    ``.delta_build`` staging inside the root (a SIGKILLed append's
-    half-written dir is invisible to readers but would otherwise leak
-    forever — round-10 review)."""
+    """Crash recovery for :func:`_publish_root`'s two-rename swap
+    (deadpid.recover_swap with the ``.compact`` staging tag), plus dead-pid
+    ``.delta_build`` staging inside the root: a SIGKILLed append's dir is
+    invisible to readers but would otherwise leak forever."""
     recover_swap(root, "compact")
     if os.path.isdir(root):
         for d in dead_pid_paths(os.path.join(root, ".delta_build")):
@@ -790,8 +825,9 @@ def read_layout_index_pruned(
     # this the multi-generation groupBy shuffles all of them; the only
     # consumer is the prefilter's kmer equi-join, which drops non-query
     # k-mers anyway, so the semi-join keeps the resolution input bounded
-    # by query k-mers x generations (round-10 review)
-    union = union.join(query_kmers.select("kmer").distinct(), "kmer", "left_semi")
+    # by query k-mers x generations (round-10 review); inner, since Spark
+    # pushes a left-semi join below the union: one exchange per generation
+    union = union.join(query_kmers.select("kmer").distinct(), "kmer")
     return resolve_j2(union)
 
 
@@ -806,11 +842,15 @@ def read_layout_store_pruned(
     construction."""
     if gens is None:
         gens = list_layout_generations(root)
-    db_residues = sum(
+    return _read_generations(spark, gens, "seqs", seq_ids=seq_ids), _db_residues(spark, gens)
+
+
+def _db_residues(spark, gens: list[str]) -> int:
+    """The summed ``db_residues`` of the generations' store sidecars."""
+    return sum(
         int(read_sequence_store_meta(spark, os.path.join(g, "seqs"))["db_residues"])
         for g in gens
     )
-    return _read_generations(spark, gens, "seqs", seq_ids=seq_ids), db_residues
 
 
 def _read_generations(
@@ -851,25 +891,24 @@ class SeqIdCollision(ValueError):
         )
 
 
-def _check_ids_disjoint(spark, gens: list[str], new_seqs: DataFrame) -> None:
-    """Raise :class:`SeqIdCollision` if any id of ``new_seqs`` is stored in
-    ``gens``. Two Spark actions, whatever the number of generations: one
-    aggregation over the delta counts its distinct ids and gives its
-    ``seq_id % m`` list for every store modulus (query_shard_lists' lists
-    plus the count the stream fold's replay test needs), then one query
-    semi-joins the pruned stores' ids against the broadcast delta ids.
-    Only the ``seq_id`` column of the touched shards is read, and no id
-    travels as a literal."""
+def _admit_delta(spark, gens: list[str], new_seqs: DataFrame) -> Row | None:
+    """An append's admission in two Spark actions at any number of
+    generations: :func:`_admit` over every store modulus in ``gens`` (an
+    empty delta stops here: None), then :class:`SeqIdCollision` if an id
+    is stored in ``gens``, from the stores' ``seq_id`` column, each pruned
+    by the delta's shard list of its modulus, joined to the broadcast
+    delta ids. They are distinct, so an inner join keeps a semi-join's
+    rows, and one broadcast: a left-semi join is pushed below the union,
+    one broadcast per generation. Returns the admission Row."""
     metas = [read_sequence_store_meta(spark, os.path.join(g, "seqs")) for g in gens]
-    mods = sorted({int(m["num_shards"]) for m in metas})
-    delta = new_seqs.agg(F.count_distinct("seq_id"), *[
-        F.collect_set(F.pmod(F.col("seq_id"), F.lit(m)).cast("int")) for m in mods
-    ]).first()
-    shards = [sorted(delta[1 + mods.index(int(m["num_shards"]))]) for m in metas]
+    admitted = _admit(new_seqs, [m["num_shards"] for m in metas])
+    if not admitted["n"]:
+        return None
+    shards = [sorted(admitted[f"m{m['num_shards']}"]) for m in metas]
     stored = _read_generations(spark, gens, "seqs", shards, tag="gen")
     hits = (
         stored.select("seq_id", "gen")
-        .join(F.broadcast(new_seqs.select("seq_id")), "seq_id", "left_semi")
+        .join(F.broadcast(new_seqs.select("seq_id")), "seq_id")
         .agg(
             F.min(F.struct("seq_id", "gen")).alias("first"),
             F.count_distinct("seq_id").alias("matched"),
@@ -880,8 +919,9 @@ def _check_ids_disjoint(spark, gens: list[str], new_seqs: DataFrame) -> None:
     if hits["matched"]:
         raise SeqIdCollision(
             hits["first"]["seq_id"], gens[hits["first"]["gen"]], hits["matched"],
-            delta[0], [gens[i] for i in hits["gens"]],
+            admitted["n"], [gens[i] for i in hits["gens"]],
         )
+    return admitted
 
 
 #: generation fanout auto-sizing (the LSM L0 shape): a delta's shard
@@ -917,16 +957,11 @@ def append_sharded_layout(
     (no generation written). ``num_shards`` overrides the auto-sizing
     for both datasets (e.g. a bulk daily delta sized like a base).
 
-    Sequence ids must be NEW, or :class:`SeqIdCollision` (a ValueError)
-    is raised: checked before the write by one shard-pruned semi-join
-    whose cost does not grow with the number of generations
-    (_check_ids_disjoint), and re-checked after publish against
-    generations claimed concurrently — two racing appenders with
-    colliding ids resolve deterministically, the lower slot survives and
-    the higher aborts loudly, removing its own generation. The fetch
-    side unions generations without collision resolution, and the
-    e-value's ``db_residues`` is the sum of generation sidecars — a
-    replaced id would double-count."""
+    Sequence ids must be distinct and NEW (:func:`_admit_delta` raises
+    ValueError or :class:`SeqIdCollision`), checked before the write and
+    re-checked after publish against generations claimed concurrently:
+    of two racing appenders with colliding ids the lower slot survives
+    and the higher aborts loudly, removing its own generation."""
     from pyspark.sql.types import StructType
 
     gens = list_layout_generations(root)
@@ -953,46 +988,37 @@ def append_sharded_layout(
         )
     new_seqs = new_seqs.select(*base_cols).persist()
     try:
-        stats = new_seqs.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.length("sequence")).alias("r")
-        ).collect()[0]
-        if not stats["n"]:
+        admitted = _admit_delta(spark, gens, new_seqs)
+        if admitted is None:
             return None
         if num_shards is None:
             idx_shards = min(
-                int(idx_meta["num_shards"]),
-                int(stats["r"] or 0) // _DELTA_KMER_ROWS_PER_SHARD + 1,
+                int(idx_meta["num_shards"]), admitted["residues"] // _DELTA_KMER_ROWS_PER_SHARD + 1
             )
             seq_shards = min(
-                int(store_meta["num_shards"]),
-                int(stats["n"]) // _DELTA_SEQS_PER_SHARD + 1,
+                int(store_meta["num_shards"]), admitted["n"] // _DELTA_SEQS_PER_SHARD + 1
             )
         else:
             idx_shards = seq_shards = int(num_shards)
-        _check_ids_disjoint(spark, gens, new_seqs)
         tmp = os.path.join(root, f".delta_build{os.getpid()}")
         shutil.rmtree(tmp, ignore_errors=True)
         try:
             k, alphabet = idx_meta["k"], idx_meta["alphabet"]
             _write_generation(
                 tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
-                idx_shards, seq_shards, k, alphabet,
+                idx_shards, seq_shards, k, alphabet, admitted,
             )
             target = _claim_slot(tmp, root, max(map(_slot_number, gens[1:]), default=0) + 1)
-            # the disjointness check above is check-then-publish: a rival
-            # appender may have published between the check and our claim
-            # (round-10 review). Re-check against generations we did not
-            # see before claiming; on a clash the HIGHER slot aborts (we
-            # only inspect lower slots — the rival inspecting US sees a
-            # lower slot and keeps), so exactly one survives,
-            # deterministically, with no lock
+            # check-then-publish: a rival may have published since the
+            # check (round-10 review). Only lower unseen slots are checked,
+            # so of two clashing appenders the higher aborts, with no lock
             rivals = [
                 g for g in _delta_generation_dirs(root)
                 if g not in gens and _slot_number(g) < _slot_number(target)
             ]
             if rivals:
                 try:
-                    _check_ids_disjoint(spark, rivals, new_seqs)
+                    _admit_delta(spark, rivals, new_seqs)
                 except ValueError:
                     shutil.rmtree(target, ignore_errors=True)
                     raise
@@ -1006,24 +1032,24 @@ def append_sharded_layout(
 
 def layout_next_seq_id(spark, root: str) -> int:
     """The smallest seq_id guaranteed fresh across ALL generations —
-    max(sidecar max_seq_id) + 1, O(generations) tiny reads. Falls back
-    to a column-pruned max-scan for stores written before the sidecar
-    carried max_seq_id (one pass, parquet statistics do most of it)."""
-    best = -1
-    for gen in list_layout_generations(root):
-        store = os.path.join(gen, "seqs")
-        meta = read_sequence_store_meta(spark, store)
-        if meta["max_seq_id"] is not None:
-            best = max(best, int(meta["max_seq_id"]))
-        else:
-            m = (
-                spark.read.schema(_store_read_schema(meta["schema_json"]))
-                .parquet(store)
-                .agg(F.max("seq_id"))
-                .collect()[0][0]
-            )
-            best = max(best, int(m) if m is not None else -1)
-    return best + 1
+    max(generation max_seq_id) + 1 (:func:`_max_seq_id`)."""
+    return max(_max_seq_id(spark, g) for g in list_layout_generations(root)) + 1
+
+
+def _max_seq_id(spark, gen: str) -> int:
+    """A generation's largest stored seq_id (-1 if none): its sidecar's,
+    or a column-pruned max-scan for a store whose sidecar predates it."""
+    store = os.path.join(gen, "seqs")
+    meta = read_sequence_store_meta(spark, store)
+    if meta["max_seq_id"] is not None:
+        return int(meta["max_seq_id"])
+    m = (
+        spark.read.schema(_store_read_schema(meta["schema_json"]))
+        .parquet(store)
+        .agg(F.max("seq_id"))
+        .collect()[0][0]
+    )
+    return int(m) if m is not None else -1
 
 
 def compact_sharded_layout(spark, root: str) -> int:
@@ -1033,49 +1059,23 @@ def compact_sharded_layout(spark, root: str) -> int:
     unions the STORED per-generation indexes and re-resolves J2 (one
     groupBy over ~|distinct k-mers| rows — skipping extraction, which
     dominates build cost), the fetch side is a plain union (ids are
-    disjoint by append's check), and db_residues re-derives from the
-    union (equal to the sidecar sum by construction). The new layout is
-    built in a pid-unique sibling and swapped in with two renames
-    (recluster_ivf_index's protocol; readers recover via
-    list_layout_generations -> _recover_layout_swap). Generations
-    published by concurrent appenders WHILE the fold ran are not lost
-    (round-10 review: the old root's rmtree used to take them with it):
-    the root rename carries them into the ``.old`` sibling, and they
-    are ADOPTED into the new root — re-claimed under fresh slot numbers
-    — before the sibling is deleted. An appender racing the brief
-    root-missing swap window itself fails loudly on its claim rename
-    (ENOENT), never silently. Returns the number of generations folded
-    (0 = no deltas, nothing to do)."""
+    disjoint by append's check), and db_residues and max_seq_id are the
+    sum and max of the generation sidecars'. :func:`_publish_root` swaps
+    the new root in and adopts generations appended while the fold ran.
+    Returns the number of generations folded (0 = no deltas)."""
     gens = list_layout_generations(root)
     if len(gens) == 1:
         return 0
     idx_meta = read_kmer_index_meta(spark, os.path.join(root, "index"))
     store_meta = read_sequence_store_meta(spark, os.path.join(root, "seqs"))
-    tmp = f"{root}.compact{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        _write_generation(
-            tmp, resolve_j2(_read_generations(spark, gens, "index")),
-            _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
-            store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"],
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{root}.old{os.getpid()}"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(root, old)
-    os.rename(tmp, root)
-    # adopt generations that landed AFTER our snapshot — they rode into
-    # `old` with the first rename and would be silently destroyed by the
-    # cleanup below (round-10 review). Their ids are disjoint from the
-    # folded base by append's own check, so a plain re-claim is exact.
-    folded = {os.path.basename(g) for g in gens}
-    n = 1
-    for g in _delta_generation_dirs(old):
-        if os.path.basename(g) not in folded:
-            n = _slot_number(_claim_slot(g, root, n)) + 1
-    shutil.rmtree(old, ignore_errors=True)
+    stats = Row(
+        residues=_db_residues(spark, gens), max_seq_id=max(_max_seq_id(spark, g) for g in gens)
+    )
+    _publish_root(root, lambda tmp: _write_generation(
+        tmp, resolve_j2(_read_generations(spark, gens, "index")),
+        _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
+        store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"], stats,
+    ), folded={os.path.basename(g) for g in gens})
     return len(gens) - 1
 
 

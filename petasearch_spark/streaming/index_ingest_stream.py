@@ -19,20 +19,19 @@ oracle verbatim.
 
 Exactly-once: append is all-or-nothing, so a batch REPLAYED after a
 crash (sink-side work done, checkpoint commit lost) either finds none
-of its ids (the rename never happened — re-append is safe) or all of
-them in one generation (it is live — skip). The id-disjointness check
-that append performs anyway IS the replay detector: its SeqIdCollision
-counts the matched ids and their generations, and the fold skips only
-that exact case; a partly colliding batch raises, since a skip would
-lose its new ids (pinned by
+of its ids (re-append is safe) or all of them in one generation (it is
+live — skip). Append's admission IS the replay detector: its
+SeqIdCollision counts the matched ids and their generations, and the
+fold skips only that exact case. A partly colliding batch, or one that
+repeats an id within itself (a plain ValueError), raises (pinned by
 tests/test_sharded_delta.py::test_stream_fold_batch_replay_is_exactly_once).
 
-Scale shape: per-batch cost is append's — extraction + groupBy over the
-BATCH, a generation write whose fanout is auto-sized to the batch
-(LSM L0), and an id-disjointness query that reads only the ``seq_id``
-column of the store shards the batch's ids hash to. Nothing rescans
-the corpus; compaction (compact_sharded_layout) is the scheduled
-maintenance job that bounds generation count, exactly like the IVF
+Scale shape: per-batch cost is append's — one admission aggregation,
+extraction + groupBy over the BATCH, a generation write whose fanout is
+auto-sized to the batch (LSM L0), and an id check that reads only the
+``seq_id`` column of the store shards the batch's ids hash to. Nothing
+rescans the corpus; compaction (compact_sharded_layout) is the
+scheduled maintenance job that bounds generation count, like the IVF
 recluster loop (operators/ivf.py).
 """
 

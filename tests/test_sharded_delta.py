@@ -298,8 +298,8 @@ def test_compaction_adopts_concurrently_published_generation(spark, tmp_path, mo
     real_write = ki.write_sequence_store_sharded
     state = {"fired": False}
 
-    def write_and_race(seqs, path, num_shards=256):
-        real_write(seqs, path, num_shards=num_shards)
+    def write_and_race(seqs, path, *args):
+        real_write(seqs, path, *args)
         # after compaction finishes building its sibling's store (the
         # last fold step before the swap), a rival appender publishes —
         # exactly the window whose data the old cleanup destroyed
@@ -331,18 +331,19 @@ def test_append_rival_collision_higher_slot_aborts(spark, tmp_path, monkeypatch)
     write_sharded_layout(_seqs(spark, _rand_rows(63, range(5))), root, num_shards=8, k=_K, alphabet=_ALPHA)
     rival_rows = _rand_rows(64, [50, 51])
 
-    real_check = ki._check_ids_disjoint
+    real_check = ki._admit_delta
     state = {"fired": False}
 
     def check_then_rival(sp, gens, new_seqs):
-        real_check(sp, gens, new_seqs)
+        admitted = real_check(sp, gens, new_seqs)
         if not state["fired"]:
             state["fired"] = True
             # rival publishes the SAME ids right after our check passes
-            monkeypatch.setattr(ki, "_check_ids_disjoint", real_check)
+            monkeypatch.setattr(ki, "_admit_delta", real_check)
             append_sharded_layout(spark, root, _seqs(spark, rival_rows))
+        return admitted
 
-    monkeypatch.setattr(ki, "_check_ids_disjoint", check_then_rival)
+    monkeypatch.setattr(ki, "_admit_delta", check_then_rival)
     with pytest.raises(ValueError, match="already exists"):
         append_sharded_layout(spark, root, _seqs(spark, _rand_rows(65, [51, 52])))
     gens = list_layout_generations(root)
@@ -372,9 +373,9 @@ def test_stream_fold_batch_replay_is_exactly_once(spark, tmp_path):
     after a crash (the append's rename landed, the checkpoint commit
     didn't) is skipped — append is all-or-nothing, so a batch whose ids
     all live in one generation is that generation. A batch that only
-    partly collides is not a replay and raises (a skip would lose its
-    new ids). A genuinely new batch still appends, and a genuine
-    (non-replay) error still raises."""
+    partly collides, or repeats an id within itself, is not a replay and
+    raises (a skip would lose its new ids). A genuinely new batch still
+    appends, and a genuine (non-replay) error still raises."""
     from petasearch_spark.streaming.index_ingest_stream import fold_batch_into_layout
 
     root = str(tmp_path / "root")
@@ -389,6 +390,10 @@ def test_stream_fold_batch_replay_is_exactly_once(spark, tmp_path):
     # partial collision (id 3 is in the base, 100 and 101 are new): raise
     with pytest.raises(ValueError, match="already exists"):
         fold_batch_into_layout(spark, root, _seqs(spark, _rand_rows(45, [3, 100, 101])))
+    assert list_layout_generations(root) == before
+    # a batch repeating an id within itself is no replay: raise
+    with pytest.raises(ValueError, match="seq_id 102 appears 2 times"):
+        fold_batch_into_layout(spark, root, _seqs(spark, _rand_rows(46, [102, 102])))
     assert list_layout_generations(root) == before
     # a new batch still appends
     assert fold_batch_into_layout(spark, root, _seqs(spark, _rand_rows(42, [50, 51]))) is not None

@@ -260,7 +260,7 @@ def test_sequence_store_pruned_fetch(spark, tmp_path):
     from petasearch_spark.operators.kmer_index import (
         read_sequence_store_meta,
         read_sequence_store_pruned,
-        write_sequence_store_sharded,
+        write_sharded_layout,
     )
     from petasearch_spark.sources.fasta import sequences_from_records
 
@@ -272,8 +272,8 @@ def test_sequence_store_pruned_fetch(spark, tmp_path):
             for i in range(50)
         ],
     )
-    path = str(tmp_path / "seq_store")
-    write_sequence_store_sharded(seqs, path, num_shards=16)
+    write_sharded_layout(seqs, str(tmp_path / "layout"), num_shards=16)
+    path = str(tmp_path / "layout" / "seqs")
 
     meta = read_sequence_store_meta(spark, path)
     assert meta["num_shards"] == 16
