@@ -18,7 +18,7 @@ import argparse
 import json
 import sys
 
-from petasearch_spark.session import get_spark
+from petasearch_spark.session import get_spark, release_lineage_cuts
 
 
 def _add_search_args(p: argparse.ArgumentParser) -> None:
@@ -227,6 +227,9 @@ def _curate_report(spark, input_path: str, out_dir: str, resume: bool = False) -
         recompute_rest = True
         funnel = corpus_curation_funnel(spark, staging)
         funnel.write.mode("overwrite").option("compression", "zstd").parquet(funnel_path)
+        # every later stage reads funnel_path, so the quality verdicts'
+        # checkpoint under this plan is done with
+        release_lineage_cuts(funnel)
     fun = spark.read.parquet(funnel_path)
     counts = fun.agg(
         F.count(F.lit(1)).alias("n_docs"),

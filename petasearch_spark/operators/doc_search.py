@@ -8,8 +8,9 @@ engine join/index semantics are oracle-verified, not just pytest-verified.
   longest doc, ties -> smallest id; /root/reference/src/sra/createkmertable.cpp:142-190)
 * doc_prefilter      == comparekmertables (J1 equi-join + A1 HAVING count > θ;
   /root/reference/src/sra/comparekmertables.cpp:473-572, 46-67)
-* protein_prefilter  == the same over real k=9 char windows of
-  deterministically derived "protein" sequences.
+* protein_prefilter  == the same with the engine's own k=9 integer k-mer
+  path over deterministically derived "protein" sequences; its oracle
+  restates it with 9-char window strings in SQL.
 """
 
 from __future__ import annotations
@@ -130,16 +131,10 @@ ORDER BY query_doc, target_doc
 _FROM = "abcdefghijklmnopqrstuvwxyz"
 _TO = "ACDEFGHIKLMNPQRSTVWYACDEFG"
 
-#: F1 for the string-window family: a window is a k-mer only if all 9
-#: residues are in the 20-letter alphabet — uppercase B/J/O/U/X/Z pass
-#: the [^A-Z] derivation scrub but are INVALID residues the integer
-#: encoder (functions/kmer.py:54) skips; the string path must agree
-#: (round-8 constructed-corpus finding). SQL twin: VALID_KMER_SQL.
-#: the 6 uppercase letters OUTSIDE the 20-letter alphabet — the derived
-#: sequence is A-Z-only by construction ([^A-Z] scrubbed), so validity
-#: reduces to "contains none of these"
-_INVALID_RESIDUES = "BJOUXZ"
-VALID_KMER_RE = "^[ACDEFGHIKLMNPQRSTVWY]{9}$"
+#: F1 in the SQL oracles: a 9-char window is a k-mer only if every
+#: residue is in the 20-letter alphabet — uppercase B/J/O/U/X/Z pass the
+#: [^A-Z] derivation scrub but are INVALID residues the integer encoder
+#: (operators/kmer_index.extract_kmers_batch) skips
 VALID_KMER_SQL = "regexp_matches(kmer, '^[ACDEFGHIKLMNPQRSTVWY]{9}$')"
 
 
@@ -199,49 +194,7 @@ def one_rep_idx_cte(src: str) -> str:
 )"""
 
 
-def _window_kmer_tables(seqs: DataFrame, query_mod: int = 20):
-    """Shared T1+J2 construction for the string-window prefilter family:
-    (kmers, one-representative index, %query_mod query side). Both
-    protein_prefilter and protein_prefilter_funnel ride this ONE helper
-    so the representative rule / window semantics cannot drift between
-    the gate query and the funnel that claims to summarize it.
-
-    F1 applies here exactly as in the integer-kmer path (round-8: the
-    constructed-corpus bucketed-vs-plain equivalence caught the string
-    path KEEPING windows with invalid residues — uppercase B/J/O/U/X/Z
-    survive the text->sequence derivation — while the integer encoder
-    skips them, reference comparekmertables.cpp:247-254 via
-    FixedKmerGenerator; the two registry rows share one oracle, so the
-    string path must implement the same window-skip rule)."""
-    k = 9
-    # F1 without any per-window work: split each sequence into its
-    # maximal VALID runs (one regex pass per SEQUENCE), then window
-    # within runs — the multiset of valid k-windows equals the union of
-    # each run's windows, and qk/index need no positions, so this is
-    # strictly cheaper than filtering 10M+ exploded windows (the first
-    # round-8 cut, a per-window translate check, cost ~60% on the
-    # funnel's sf0.1 wall time). seq_len stays the ORIGINAL sequence
-    # length — it is J2's representative tie-break.
-    runs = seqs.select(
-        "seq_id",
-        F.length("sequence").cast("int").alias("seq_len"),
-        F.explode(F.split("sequence", f"[{_INVALID_RESIDUES}]")).alias("run"),
-    ).filter(F.length("run") >= k)
-    win = F.transform(
-        F.sequence(F.lit(0), F.length("run") - k),
-        lambda i: F.col("run").substr(i + 1, F.lit(k)),
-    )
-    kmers = runs.select("seq_id", "seq_len", F.explode(win).alias("kmer"))
-    index = kmers.groupBy("kmer").agg(
-        F.max_by(F.col("seq_id"), F.struct(F.col("seq_len"), (-F.col("seq_id")).alias("neg_id"))).alias("target_id")
-    )
-    qk = kmers.filter(F.col("seq_id") % query_mod == 0).select(
-        F.col("seq_id").alias("query_id"), "kmer"
-    )
-    return kmers, index, qk
-
-
-#: the SQL twin of _window_kmer_tables — one fragment, two oracles
+#: the oracle's k-mer tables as SQL — one fragment, two oracles
 WINDOW_KMER_CTES_SQL = f"""kmers AS (
     -- positions from the DATA (select-list UNNEST over len(sequence)),
     -- not a range(1, N) constant: the old 8191-start cap silently
@@ -249,7 +202,7 @@ WINDOW_KMER_CTES_SQL = f"""kmers AS (
     -- while the engine extracted them all (round-6 fuzz; the
     -- enumeration-cap law, data-derived form)
     -- F1 (round-8): invalid-residue windows are skipped, as in the
-    -- integer-kmer engine path — see VALID_KMER_RE (the wrapper
+    -- integer-kmer engine path — see VALID_KMER_SQL (the wrapper
     -- subquery exists because the window alias from a select-list
     -- UNNEST is not filterable in the same scope)
     SELECT * FROM (
@@ -262,21 +215,29 @@ WINDOW_KMER_CTES_SQL = f"""kmers AS (
 , qk AS (SELECT seq_id AS query_id, kmer FROM kmers WHERE seq_id % 20 = 0)"""
 
 
-def protein_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real k=9 prefilter (T1+J2+J1+A1) over derived sequences, with
-    k-mers as 9-char window STRINGS (portable to SQL; the integer encoding
-    of functions/kmer.py is a bijection, so semantics are identical).
-    Queries: every 20th doc. Targets: all docs. Matches the reference's
-    count>2 HAVING."""
+def _protein_prefilter_inputs(spark: SparkSession, sf_dir: str):
+    """The gated k=9 prefilter's two sides over derived sequences, on the
+    engine's integer k-mer path: query k-mers of every 20th doc
+    (extract_query_kmers) and the J2 index over all docs
+    (build_kmer_index). Returns (queries, query k-mers, index)."""
+    from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
+
     docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    _, index, qk = _window_kmer_tables(derived_sequences(docs))
-    pairs = F.broadcast(qk).join(index, "kmer", "inner")
-    return (
-        pairs.groupBy("query_id", "target_id")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-        .filter(F.col("n_matches") > REQ_MATCHES)
-        .orderBy("query_id", "target_id")
-    )
+    seqs = derived_sequences(docs).drop("source").persist()
+    queries = seqs.filter(F.col("seq_id") % 20 == 0)
+    return queries, extract_query_kmers(queries), build_kmer_index(seqs)
+
+
+def protein_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The real k=9 prefilter (T1+J2+J1+A1) over derived sequences: the
+    same integer k-mer path as dna_prefilter and the cascade. Queries:
+    every 20th doc. Targets: all docs. Matches the reference's count>2
+    HAVING. The oracle restates it with 9-char window strings (the
+    integer encoding is a bijection on valid windows)."""
+    from petasearch_spark.operators.prefilter import prefilter_counts
+
+    _, qk, index = _protein_prefilter_inputs(spark, sf_dir)
+    return prefilter_counts(qk, index).orderBy("query_id", "target_id")
 
 
 PROTEIN_PREFILTER_SQL = f"""
@@ -295,17 +256,15 @@ def protein_prefilter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's comparekmertables-side reduction counters (query/index/
     equal k-mers, rows and pairs after the strict-> HAVING —
     /root/reference/src/sra/comparekmertables.cpp:463,495,587,616-619)
-    over the same derived-sequence corpus protein_prefilter gates. The
+    over the same integer k-mer frames protein_prefilter gates. The
     oracle recomputes every counter as scalar subqueries over the same
     CTEs, so funnel drift is caught cross-engine at both SFs — on top of
     tests/test_funnel_golden.py's independent scalar enumeration over
     the committed FASTA."""
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).persist()
-    _, index, qk = _window_kmer_tables(seqs)
+    queries, qk, index = _protein_prefilter_inputs(spark, sf_dir)
     qk = qk.persist()
     matches = F.broadcast(qk).join(index, "kmer", "inner").persist()
-    pair = matches.groupBy("query_id", "target_id").agg(F.count(F.lit(1)).alias("n"))
+    pair = matches.groupBy("query_id", "seq_id").agg(F.count(F.lit(1)).alias("n"))
     surv = pair.filter(F.col("n") > REQ_MATCHES)
     return (
         qk.agg(F.count(F.lit(1)).alias("query_kmers"))
@@ -317,9 +276,7 @@ def protein_prefilter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("prefilter_pairs"),
             )
         )
-        .crossJoin(
-            seqs.filter(F.col("seq_id") % 20 == 0).agg(F.count(F.lit(1)).alias("n_queries"))
-        )
+        .crossJoin(queries.agg(F.count(F.lit(1)).alias("n_queries")))
     )
 
 
@@ -459,10 +416,9 @@ def protein_prefilter_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The prefilter through the BUCKETED physical layout — the plan the
     100 TB story actually ships (SURVEY §4.2): build + steady-state query
     (split above so the bench can time the one-time write and the
-    per-batch join separately). Logical output is identical to
-    protein_prefilter, so it shares that query's DuckDB oracle — the
-    engine integer-kmer path and the oracle's string-kmer path are
-    bijective."""
+    per-batch join separately). Same integer k-mer path and logical
+    output as protein_prefilter, so it shares that query's DuckDB
+    oracle."""
     protein_prefilter_bucketed_build(spark, sf_dir)
     return protein_prefilter_bucketed_query(spark, sf_dir)
 
@@ -564,9 +520,9 @@ def _sharded_pruned_pairs(
 def protein_prefilter_sharded_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Steady-state prefilter against the sharded layout: shard-pruned
     scan (kmer_index.read_kmer_index_pruned) + broadcast equi-join.
-    Output is identical to protein_prefilter (integer and string k-mer
-    paths are bijective), so the combined registry entry shares its
-    DuckDB oracle; builds the layout first if missing."""
+    Output is identical to protein_prefilter (the same integer k-mer
+    path), so the combined registry entry shares its DuckDB oracle;
+    builds the layout first if missing."""
     from petasearch_spark.operators.kmer_index import extract_query_kmers
 
     root = _ensure_sharded_layout(spark, sf_dir)
@@ -736,10 +692,31 @@ GOLDEN_DIR = os.path.join(
 )
 
 
+def _expanded_prefilter(spark: SparkSession, sf_dir: str, compo_bias: bool) -> DataFrame:
+    """The expansion rows' engine path: the cascade's query side
+    (build_query_kmers, expand_similar on) over every 100th derived
+    sequence, prefiltered in the fused count form against the full k-mer
+    index — the same GROUP BY/HAVING relation as the oracles."""
+    from petasearch_spark.operators.kmer_index import build_kmer_index
+    from petasearch_spark.operators.prefilter import prefilter_counts
+    from petasearch_spark.plans.search import SearchKnobs, build_query_kmers
+
+    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
+    seqs = derived_sequences(docs).drop("source").persist()
+    eqk = build_query_kmers(
+        seqs.filter(F.col("seq_id") % 100 == 0),
+        SearchKnobs(expand_similar=True, compo_bias=compo_bias),
+    )
+    return prefilter_counts(eqk, build_kmer_index(seqs)).orderBy(
+        "query_id", "target_id"
+    )
+
+
 def protein_expand_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 similar-k-mer expansion under the DuckDB oracle (VERDICT r1 item
-    3): the engine path runs extract_query_kmers -> expand_query_kmers
-    (bound screen + exact top-N at the calibrated --k-score 225 default) ->
+    3): the engine path runs the search cascade's own query side
+    (plans.search.build_query_kmers with expand_similar — extraction, then
+    bound screen + exact top-N at the calibrated --k-score 225 default) ->
     prefilter against the full k-mer index; the oracle derives the exact
     query k-mers in SQL and takes the similar ones from the committed
     expansion golden — generated by tests.golden_tools.brute_expand, an
@@ -750,19 +727,7 @@ def protein_expand_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Queries are every 100th doc (the expansion table stays small); match
     counting includes the reference's duplicate-exact-kmer behavior
     (comparekmertables.cpp:256-275)."""
-    from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-    from petasearch_spark.operators.prefilter import prefilter_counts
-    from petasearch_spark.operators.similar_kmers import expand_query_kmers
-
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
-    eqk = expand_query_kmers(extract_query_kmers(queries))
-    # fused count form (round 11): same GROUP BY/HAVING as the oracle,
-    # no member-row window sort + re-count
-    return prefilter_counts(eqk, build_kmer_index(seqs)).orderBy(
-        "query_id", "target_id"
-    )
+    return _expanded_prefilter(spark, sf_dir, compo_bias=False)
 
 
 PROTEIN_EXPAND_PREFILTER_SQL = f"""
@@ -771,7 +736,7 @@ WITH {DERIVED_SEQ_SQL}
     -- data-derived positions; see WINDOW_KMER_CTES_SQL (round-6 fuzz)
     -- F1 (round-8): the engine side of these ops extracts via the
     -- integer encoder, which SKIPS invalid-residue windows; the oracle
-    -- must too — see VALID_KMER_RE
+    -- must too — see VALID_KMER_SQL
     SELECT * FROM (
         SELECT seq_id, seq_len, pos, substr(sequence, pos + 1, 9) AS kmer
         FROM (SELECT seq_id, sequence, len(sequence) AS seq_len,
@@ -848,7 +813,7 @@ WITH {DERIVED_SEQ_SQL}
     -- data-derived positions; see WINDOW_KMER_CTES_SQL (round-6 fuzz)
     -- F1 (round-8): the engine side of these ops extracts via the
     -- integer encoder, which SKIPS invalid-residue windows; the oracle
-    -- must too — see VALID_KMER_RE
+    -- must too — see VALID_KMER_SQL
     SELECT * FROM (
         SELECT seq_id, seq_len, pos, substr(sequence, pos + 1, 9) AS kmer
         FROM (SELECT seq_id, sequence, len(sequence) AS seq_len,
@@ -1038,24 +1003,10 @@ def protein_prefilter_biased(spark: SparkSession, sf_dir: str) -> DataFrame:
     kbias integers from the committed bias golden — generated by
     tests.golden_tools.composition_bias_scalar, a plain-loop twin
     independent of the numpy cumsum/einsum kernel. Queries every 100th
-    doc, reusing the expansion golden's k-mer universe."""
-    from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
-    from petasearch_spark.operators.prefilter import prefilter_counts
-    from petasearch_spark.operators.similar_kmers import (
-        composition_bias_kmer,
-        expand_query_kmers,
-    )
-
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
-    queries = seqs.filter(F.col("seq_id") % 100 == 0)
-    eqk = expand_query_kmers(
-        extract_query_kmers(queries), bias=composition_bias_kmer(queries)
-    )
-    # fused count form (round 11) — see protein_expand_prefilter
-    return prefilter_counts(eqk, build_kmer_index(seqs)).orderBy(
-        "query_id", "target_id"
-    )
+    doc, reusing the expansion golden's k-mer universe. The engine side is
+    the cascade's own query side with compo_bias on
+    (plans.search.build_query_kmers)."""
+    return _expanded_prefilter(spark, sf_dir, compo_bias=True)
 
 
 PROTEIN_PREFILTER_BIASED_SQL = f"""
@@ -1064,7 +1015,7 @@ WITH {DERIVED_SEQ_SQL}
     -- data-derived positions; see WINDOW_KMER_CTES_SQL (round-6 fuzz)
     -- F1 (round-8): the engine side of these ops extracts via the
     -- integer encoder, which SKIPS invalid-residue windows; the oracle
-    -- must too — see VALID_KMER_RE
+    -- must too — see VALID_KMER_SQL
     SELECT * FROM (
         SELECT seq_id, seq_len, pos, substr(sequence, pos + 1, 9) AS kmer
         FROM (SELECT seq_id, sequence, len(sequence) AS seq_len,

@@ -8,10 +8,12 @@ first under that sort, i.e. the longest sequence containing it, ties to the
 smallest id (179-190) -> delta-encode + write (229-245).
 
 Spark design:
-* extraction is a codegen'd explode (functions.kmer.extract_kmers — no UDF);
-* the distinct-representative rule (J2) is `max_by` over
-  struct(seq_len, -seq_id) — a single hash aggregation with map-side partial
-  combine, no window/sort needed;
+* extraction is one Arrow stage, a numpy sliding-window matmul per
+  sequence (:func:`extract_kmers_batch`);
+* the distinct-representative rule (J2) is a primitive ``max`` over
+  (seq_len, -seq_id) packed into one BIGINT (:func:`aggregate_kmer_index`,
+  the engine's one J2 aggregation) — a single hash aggregation with
+  map-side partial combine, no window/sort needed;
 * the physical sorted layout (O1) becomes `repartitionByRange('kmer')` +
   `sortWithinPartitions` + parquet: range-partitioned, internally sorted
   files whose min/max statistics let the search join prune, the exact Spark
@@ -41,7 +43,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from petasearch_spark.deadpid import dead_pid_paths, recover_swap
-from petasearch_spark.functions.kmer import AMINO_ALPHABET, extract_kmers  # noqa: F401 (column-expr twin)
+from petasearch_spark.functions.kmer import AMINO_ALPHABET
 
 DEFAULT_K = 9  # workflow default, /root/reference/src/workflow/petasearch.cpp:12
 
@@ -206,43 +208,51 @@ def build_kmer_index(
     return aggregate_kmer_index(extract_kmers_arrow(sequences, k=k, alphabet=alphabet))
 
 
-def aggregate_kmer_index(
-    kmers: DataFrame, extra_keys: tuple[str, ...] = ()
-) -> DataFrame:
-    """The J2 packed-max aggregation over an already-extracted
-    ``(seq_id, seq_len, kmer[, ...])`` frame — factored out of
-    :func:`build_kmer_index` (round 11) so the fused multi-target cascade
-    can aggregate ONE unioned extraction pass per-DB: with
-    ``extra_keys=("_set",)`` the representative is resolved within each
-    target DB (groupBy(kmer, _set)), which is exactly N per-set
-    ``build_kmer_index`` calls in one exchange."""
-    packed = F.when(
-        (F.col("seq_id") < 0)
-        | (F.col("seq_id") > _REP_ID_MASK)
-        | (F.col("seq_len") >= _REP_MAX_LEN),
+def _pack_rep(seq_id, seq_len):
+    """The J2 key of a ``(seq_id, seq_len)`` column pair as ONE BIGINT,
+    ``seq_len << 40 | (2^40-1 - seq_id)``, whose ``max`` is the
+    representative (longest sequence, ties to the smallest id). NULL in,
+    NULL out (``greatest`` then skips that side); an id or length outside
+    the bit budget fails the query via raise_error."""
+    return F.when(
+        (seq_id < 0) | (seq_id > _REP_ID_MASK) | (seq_len >= _REP_MAX_LEN),
         F.raise_error(
             F.format_string(
                 "build_kmer_index: seq_id/seq_len out of packed-rep range "
                 f"(seq_id=%s seq_len=%s; need 0 <= seq_id <= {_REP_ID_MASK}, "
                 f"seq_len < {_REP_MAX_LEN})",
-                F.col("seq_id"),
-                F.col("seq_len"),
+                seq_id,
+                seq_len,
             )
         ).cast("long"),
-    ).otherwise(
-        F.col("seq_len").cast("long") * F.lit(1 << _REP_ID_BITS)
-        + (F.lit(_REP_ID_MASK) - F.col("seq_id"))
-    )
+    ).otherwise(seq_len.cast("long") * F.lit(1 << _REP_ID_BITS) + (F.lit(_REP_ID_MASK) - seq_id))
+
+
+def _unpack_rep(p) -> list:
+    """The ``seq_id`` and ``seq_len`` columns of a :func:`_pack_rep` key."""
+    return [
+        (F.lit(_REP_ID_MASK) - p.bitwiseAND(F.lit(_REP_ID_MASK))).alias("seq_id"),
+        F.shiftright(p, _REP_ID_BITS).cast("int").alias("seq_len"),
+    ]
+
+
+def aggregate_kmer_index(
+    kmers: DataFrame, extra_keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The engine's one J2 aggregation: the packed max (:func:`_pack_rep`)
+    per k-mer over a ``(seq_id, seq_len, kmer[, ...])`` frame — an
+    extraction (:func:`build_kmer_index`) or a union of stored index rows
+    (a layout probe or compaction; exact there because the max of
+    per-generation maxima IS the global max). With
+    ``extra_keys=("_set",)`` the representative is resolved within each
+    target DB (groupBy(kmer, _set)), which is exactly N per-set
+    ``build_kmer_index`` calls in one exchange — the fused multi-target
+    cascade aggregates ONE unioned extraction pass that way."""
     return (
-        kmers.select("kmer", *extra_keys, packed.alias("p"))
+        kmers.select("kmer", *extra_keys, _pack_rep(F.col("seq_id"), F.col("seq_len")).alias("p"))
         .groupBy("kmer", *extra_keys)
         .agg(F.max("p").alias("p"))
-        .select(
-            "kmer",
-            *extra_keys,
-            (F.lit(_REP_ID_MASK) - F.col("p").bitwiseAND(F.lit(_REP_ID_MASK))).alias("seq_id"),
-            F.shiftright("p", _REP_ID_BITS).cast("int").alias("seq_len"),
-        )
+        .select("kmer", *extra_keys, *_unpack_rep(F.col("p")))
     )
 
 
@@ -272,8 +282,11 @@ def write_kmer_index_sharded(
     count, not the corpus. At 100 TB this is the difference between a
     full-index scan per interactive query (the bucketed layout's cost —
     right for large batches, wrong for one protein) and reading
-    ~n_query_kmers/num_shards of the index. Within each shard the rows
-    stay kmer-sorted (row-group min/max stats remain usable). Shard
+    ~n_query_kmers/num_shards of the index. Within each shard file the
+    rows are kmer-sorted (row-group min/max stats stay usable) because
+    the sort leads with ``kshard``: the planned write sorts by its
+    partition column and keeps a sort it finds already leading with it,
+    but replaces a ``kmer``-only one. Shard
     count rides a 1-row ``_ps_meta`` parquet INSIDE the dataset directory
     (underscore-prefixed names are invisible to Spark's file listing, the
     ``_SUCCESS`` convention) so readers never guess it from directory
@@ -297,7 +310,8 @@ def write_kmer_index_sharded(
         .repartition(
             _write_parts(index.sparkSession, num_shards), F.col("kshard")
         )
-        .sortWithinPartitions("kmer")
+        # kshard first, as in the store write: see the docstring
+        .sortWithinPartitions("kshard", "kmer")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("kshard")
@@ -655,20 +669,13 @@ def merge_kmer_index_delta(
     )
     base = spark.table(base_table).alias("b")
     delta = spark.table(delta_table).alias("d")
-    # J2 collision rule as a coalescing comparator: delta wins iff it is
-    # strictly better under (seq_len DESC, seq_id ASC)
-    delta_wins = (F.col("b.seq_id").isNull()) | (
-        F.col("d.seq_id").isNotNull()
-        & (
-            (F.col("d.seq_len") > F.col("b.seq_len"))
-            | ((F.col("d.seq_len") == F.col("b.seq_len")) & (F.col("d.seq_id") < F.col("b.seq_id")))
-        )
+    # J2 per k-mer: the greater packed key; greatest skips the NULL
+    # side a k-mer present in one table only leaves
+    best = F.greatest(
+        _pack_rep(F.col("b.seq_id"), F.col("b.seq_len")),
+        _pack_rep(F.col("d.seq_id"), F.col("d.seq_len")),
     )
-    merged = base.join(delta, "kmer", "full_outer").select(
-        "kmer",
-        F.when(delta_wins, F.col("d.seq_id")).otherwise(F.col("b.seq_id")).alias("seq_id"),
-        F.when(delta_wins, F.col("d.seq_len")).otherwise(F.col("b.seq_len")).alias("seq_len"),
-    )
+    merged = base.join(delta, "kmer", "full_outer").select("kmer", *_unpack_rep(best))
     write_kmer_index_bucketed(merged, out_table, num_buckets=num_buckets)
     return delta_sequences.sparkSession.table(out_table)
 
@@ -750,34 +757,6 @@ def list_layout_generations(root: str) -> list[str]:
     return [root] + _delta_generation_dirs(root)
 
 
-def resolve_j2(index: DataFrame) -> DataFrame:
-    """Re-derive the ONE-representative rule (J2: longest sequence, ties
-    to smallest id) over a UNION of per-generation index rows. Exact by
-    associativity: each generation's row is already the argmax of the
-    packed ``seq_len << 40 | (2^40-1 - seq_id)`` key over ITS sequences
-    (build_kmer_index), and max-of-maxima is the global max, so the
-    resolved union is byte-identical to a full rebuild's index. Inputs
-    come from stored indexes whose ranges build_kmer_index already
-    enforced, so no re-validation here. The bound on this groupBy is
-    whatever the CALLER feeds it: read_layout_index_pruned semi-joins
-    the pruned union down to the query's k-mers first (query k-mers x
-    generations); compaction feeds the full stored indexes (~|distinct
-    k-mers| — still no re-extraction)."""
-    packed = F.col("seq_len").cast("long") * F.lit(1 << _REP_ID_BITS) + (
-        F.lit(_REP_ID_MASK) - F.col("seq_id")
-    )
-    return (
-        index.select("kmer", packed.alias("p"))
-        .groupBy("kmer")
-        .agg(F.max("p").alias("p"))
-        .select(
-            "kmer",
-            (F.lit(_REP_ID_MASK) - F.col("p").bitwiseAND(F.lit(_REP_ID_MASK))).alias("seq_id"),
-            F.shiftright("p", _REP_ID_BITS).cast("int").alias("seq_len"),
-        )
-    )
-
-
 def read_layout_index_pruned(
     spark,
     root: str,
@@ -787,8 +766,9 @@ def read_layout_index_pruned(
 ) -> DataFrame:
     """GENERATION-AWARE pruned index read: the shard lists are derived
     ONCE from the query k-mers and prune every generation's scan; the
-    pruned union is J2-re-resolved (resolve_j2 — exact by associativity)
-    so downstream sees exactly the index a full rebuild would produce.
+    pruned union is J2-re-resolved (aggregate_kmer_index — exact by
+    associativity) so downstream sees exactly the index a full rebuild
+    would produce.
     With no deltas this IS read_kmer_index_pruned — same plan, zero new
     nodes (the no-delta probe's pinned plan shape is unchanged).
     Generations may carry DIFFERENT moduli (append auto-sizes a small
@@ -828,7 +808,7 @@ def read_layout_index_pruned(
     # by query k-mers x generations (round-10 review); inner, since Spark
     # pushes a left-semi join below the union: one exchange per generation
     union = union.join(query_kmers.select("kmer").distinct(), "kmer")
-    return resolve_j2(union)
+    return aggregate_kmer_index(union)
 
 
 def read_layout_store_pruned(
@@ -1072,7 +1052,7 @@ def compact_sharded_layout(spark, root: str) -> int:
         residues=_db_residues(spark, gens), max_seq_id=max(_max_seq_id(spark, g) for g in gens)
     )
     _publish_root(root, lambda tmp: _write_generation(
-        tmp, resolve_j2(_read_generations(spark, gens, "index")),
+        tmp, aggregate_kmer_index(_read_generations(spark, gens, "index")),
         _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
         store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"], stats,
     ), folded={os.path.basename(g) for g in gens})

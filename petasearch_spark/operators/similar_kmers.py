@@ -203,7 +203,10 @@ def composition_bias_kmer(
     pback: np.ndarray = SEED_PBACK,
 ) -> DataFrame:
     """T4 per-(query, pos) k-mer bias (:func:`kmer_bias` per sequence).
-    Returns (query_id, pos, kbias)."""
+    Returns (query_id, pos, kbias). No package code calls it — the search
+    cascade computes bias inside plans.search.build_query_kmers; it stays
+    as the staged reference twin tests/test_query_kmers.py compares that
+    fused query side against."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             qids, poss, kbs = [], [], []
@@ -282,7 +285,10 @@ def expand_query_kmers(
     running :func:`expand_kmers` per Arrow batch — the exact row always,
     plus the similar rows. With `bias` (T4, :func:`composition_bias_kmer`)
     the (query_id, pos, kbias) rows are broadcast-joined onto the k-mer
-    rows first (a missing kbias counts as 0)."""
+    rows first (a missing kbias counts as 0). No package code calls it —
+    the search cascade and the gated expansion rows expand inside
+    plans.search.build_query_kmers; it stays for perfbench's staged
+    query side and as tests/test_query_kmers.py's reference twin."""
     rows = query_kmers.select("query_id", "kmer", "pos")
     with_bias = bias is not None
     if with_bias:

@@ -134,3 +134,18 @@ def cut_lineage(df, eager: bool = True):
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def release_lineage_cuts(df) -> None:
+    """Unpersist the blocks of every :func:`cut_lineage` frame under
+    ``df``'s plan, for a caller that has written ``df``'s result and
+    reads it back from there. ``clearCache()`` cannot release them: a
+    checkpoint's RDD is registered outside the cache manager, and a
+    ``localCheckpoint`` one stays until JVM GC runs the context cleaner
+    (a long-lived service would keep one per run). Reading ``df``, or any
+    frame over the same cut, afterwards fails."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD" and leaf.rdd().isCheckpointed():
+            leaf.rdd().unpersist(False)

@@ -11,7 +11,7 @@ full createkmertable rerun (/root/reference/src/sra/createkmertable.cpp).
 Equivalence: each arriving document lands in exactly one micro-batch,
 an append is atomic (generation claimed by rename), the probe-time J2
 re-resolution over generations is exact (packed-max associativity,
-operators/kmer_index.resolve_j2), and the e-value's db_residues is the
+operators/kmer_index.aggregate_kmer_index), and the e-value's db_residues is the
 sum of generation sidecars — so after the stream drains, a probe
 answers byte-identically to a layout built over the full corpus in one
 shot. The registered twin therefore shares protein_search's golden

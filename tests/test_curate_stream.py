@@ -68,7 +68,14 @@ def test_curate_stream_incremental_parse_and_recurate(spark, tmp_path, capsys, m
     ).text(os.path.join(dump, "day1"))
 
     out = str(tmp_path / "out")
+    spark.catalog.clearCache()
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
     r1 = curate_stream(spark, dump, out)
+    # a follow service recurates on every poll: no checkpoint RDD may
+    # outlive the call (clearCache cannot release one)
+    spark.catalog.clearCache()
+    after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert after == before, f"{before} -> {after} persisted RDDs"
     assert r1["stream_batches"] >= 1
     n_bad1 = first.filter(F.col("doc_id") % MALFORMED_MOD == 7).count()
     assert r1["n_quarantined"] == n_bad1

@@ -4,7 +4,7 @@ already live in the layout is refused, naming the generation that holds
 them, whether the clash is with the base, with a delta, or one id among
 more than 2,000 new ones; a delta or a base that repeats an id is
 refused; a rebuilt root keeps none of its old generations; the store
-stays ``seq_id``-sorted; and neither an append's admission nor a probe's
+files stay ``seq_id``-sorted and the index files ``kmer``-sorted; and neither an append's admission nor a probe's
 index read costs more Spark work as generations accumulate."""
 
 from __future__ import annotations
@@ -172,8 +172,27 @@ def test_store_files_are_seq_id_sorted(spark, tmp_path):
     write_sharded_layout(
         _seqs(spark, ids, 42).repartition(3), root, num_shards=4, k=_K, alphabet=_ALPHA
     )
-    files = glob.glob(os.path.join(root, "seqs", "sshard=*", "*.parquet"))
-    assert len(files) >= 4
+    _assert_files_sorted(os.path.join(root, "seqs", "sshard=*"), "seq_id", 4)
+
+
+def _assert_files_sorted(shard_glob: str, column: str, min_files: int) -> None:
+    files = glob.glob(os.path.join(shard_glob, "*.parquet"))
+    assert len(files) >= min_files
     for f in files:
-        col = pq.read_table(f, columns=["seq_id"]).column("seq_id").to_pylist()
+        col = pq.read_table(f, columns=[column]).column(column).to_pylist()
         assert len(col) > 1 and col == sorted(col), f
+
+
+def test_index_files_are_kmer_sorted(spark, tmp_path):
+    """A probe's row-group pruning reads the index files' min/max ``kmer``
+    statistics, so each shard file must be sorted. Spark's planned write
+    sorts by the partition column and drops a ``kmer``-only sort below
+    it, so the order holds only if the write's sort leads with
+    ``kshard``."""
+    ids = list(range(400))
+    random.Random(43).shuffle(ids)
+    root = str(tmp_path / "root")
+    write_sharded_layout(
+        _seqs(spark, ids, 44).repartition(3), root, num_shards=16, k=_K, alphabet=_ALPHA
+    )
+    _assert_files_sorted(os.path.join(root, "index", "kshard=*"), "kmer", 16)

@@ -1,5 +1,5 @@
 """Delta generations for the sharded interactive layout (round 10):
-append_sharded_layout / list_layout_generations / resolve_j2 /
+append_sharded_layout / list_layout_generations / aggregate_kmer_index /
 compact_sharded_layout laws.
 
 The core claim under test: a layout GROWN BY APPEND answers every probe
@@ -23,6 +23,7 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from petasearch_spark.operators.kmer_index import (
+    aggregate_kmer_index,
     append_sharded_layout,
     build_kmer_index,
     compact_sharded_layout,
@@ -30,7 +31,6 @@ from petasearch_spark.operators.kmer_index import (
     read_kmer_index_meta,
     read_layout_index_pruned,
     read_sequence_store_meta,
-    resolve_j2,
     write_sharded_layout,
 )
 
@@ -132,13 +132,14 @@ def test_j2_collision_rules_across_generations(spark, tmp_path):
     assert want == rows
 
 
-def test_resolve_j2_is_exact_on_union(spark):
-    """resolve_j2 over per-part indexes == build_kmer_index over the
-    union — the associativity argument as an executable property."""
+def test_aggregate_kmer_index_is_exact_on_union(spark):
+    """aggregate_kmer_index over the union of per-part indexes ==
+    build_kmer_index over the union of the parts — the associativity
+    argument as an executable property."""
     a = _seqs(spark, _rand_rows(7, range(0, 10)))
     b = _seqs(spark, _rand_rows(8, range(10, 20)))
     both = _seqs(spark, _rand_rows(7, range(0, 10)) + _rand_rows(8, range(10, 20)))
-    merged = resolve_j2(
+    merged = aggregate_kmer_index(
         build_kmer_index(a, k=_K, alphabet=_ALPHA).unionAll(
             build_kmer_index(b, k=_K, alphabet=_ALPHA)
         )
