@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from petasearch_spark import maintenance_bench  # noqa: E402
 from petasearch_spark.operators import doc_search  # noqa: E402
 from petasearch_spark.registry import REGISTRY  # noqa: E402
-from petasearch_spark.session import get_spark  # noqa: E402
+from petasearch_spark.session import get_spark, release_lineage_cuts  # noqa: E402
 
 #: bench-only entries: the bucketed prefilter's ONE-TIME layout build and
 #: its STEADY-STATE bucket-local join, timed separately (the combined
@@ -296,6 +296,20 @@ def probe_mps(spark) -> float:
     return round(best, 0)
 
 
+def run_entry(spark, name: str, sf_dir: str) -> float:
+    """Run bench entry ``name`` over ``sf_dir`` into the noop sink and
+    return its wall time in seconds. Then, untimed, release the blocks of
+    the entry's cut_lineage checkpoints, which clearCache() cannot: later
+    entries would otherwise run beside them."""
+    t0 = time.perf_counter()
+    fn = BENCH_ONLY[name] if name in BENCH_ONLY else REGISTRY[name][0]
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - t0
+    release_lineage_cuts(df)
+    return elapsed
+
+
 def _load_bands() -> dict:
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_BANDS.json")
     try:
@@ -412,8 +426,7 @@ def main() -> None:
     else:
         for name in WARMUP_QUERIES:
             try:
-                fn = BENCH_ONLY[name] if name in BENCH_ONLY else REGISTRY[name][0]
-                fn(spark, WARMUP_SF_DIR).write.format("noop").mode("overwrite").save()
+                run_entry(spark, name, WARMUP_SF_DIR)
             except Exception as exc:  # noqa: BLE001
                 warmup_failed += 1
                 print(f"bench: warm-up {name} failed: {exc!r}", file=sys.stderr)
@@ -431,14 +444,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     failed: list[str] = []
     for name in BENCH_QUERIES:
-        t0 = time.perf_counter()
         try:
             # lookup INSIDE the try: a tombstoned/renamed registry entry
             # (KeyError) must degrade to one "failed" key, not kill the
             # whole record (round-5 review finding)
-            fn = BENCH_ONLY[name] if name in BENCH_ONLY else REGISTRY[name][0]
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[BENCH_KEYS[name]] = round(time.perf_counter() - t0, 2)
+            timings[BENCH_KEYS[name]] = round(run_entry(spark, name, sf_dir), 2)
         except Exception as exc:  # noqa: BLE001
             # one broken entry must not cost the round's WHOLE per-query
             # record (the driver keeps only the final line; an uncaught

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from petasearch_spark.session import get_spark, release_lineage_cuts
@@ -66,8 +67,6 @@ def _stage_done(path: str) -> bool:
     """A curate stage artifact is COMPLETE iff Spark's commit protocol
     published its _SUCCESS marker — a killed run's partial directory
     (files without the marker) is recomputed, never trusted."""
-    import os
-
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
@@ -78,9 +77,7 @@ def _input_fingerprint(input_path: str) -> str:
     CHANGED input even when every stage marker is intact (round-5 ADVICE:
     markers alone would silently pair old staging counts with a new
     input path)."""
-    import os
-
-    from petasearch_spark.streaming.stateful import source_fingerprint
+    from petasearch_spark.storage import source_fingerprint
 
     if os.path.isdir(input_path):
         parts = sorted(
@@ -126,8 +123,6 @@ def _curate_report(spark, input_path: str, out_dir: str, resume: bool = False) -
     artifacts of one generation or a missing/unreadable sidecar that
     forces recomputation. A stage killed mid-write has no marker and is
     recomputed — partial directories are never trusted."""
-    import os
-
     from pyspark.sql import functions as F
 
     from petasearch_spark.operators.corpus import (
@@ -279,6 +274,8 @@ def _curate_report(spark, input_path: str, out_dir: str, resume: bool = False) -
 
 
 def main(argv: list[str] | None = None) -> int:
+    from petasearch_spark.operators.kmer_index import DEFAULT_NUM_SHARDS
+
     top = argparse.ArgumentParser(prog="petasearch_spark")
     sub = top.add_subparsers(dest="cmd", required=True)
 
@@ -321,7 +318,7 @@ def main(argv: list[str] | None = None) -> int:
         " needs no target_fasta",
     )
     p.add_argument(
-        "--num-shards", type=int, default=256,
+        "--num-shards", type=int, default=DEFAULT_NUM_SHARDS,
         help="directory-shard count for --layout sharded (size so one"
         " shard ~ one storage block at your corpus scale)",
     )
@@ -462,7 +459,10 @@ def main(argv: list[str] | None = None) -> int:
                 alphabet=alpha,
             )
         else:
-            write_kmer_index(build_kmer_index(seqs, k=args.k, alphabet=alpha), args.index_dir)
+            write_kmer_index(
+                build_kmer_index(seqs, k=args.k, alphabet=alpha), args.index_dir,
+                k=args.k, alphabet=alpha,
+            )
         print(json.dumps({"index": args.index_dir, "k": args.k, "layout": args.layout}))
         return 0
 
@@ -518,7 +518,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "easy-search":
         res = search(queries, load_target(spark, args.target_fasta), **_search_kwargs(args))
     elif args.cmd == "searchindex":
-        from petasearch_spark.operators.kmer_index import is_sharded_layout
+        from petasearch_spark.operators.kmer_index import is_sharded_layout, read_kmer_index_meta
+        from petasearch_spark.plans.search import SearchKnobs, check_index_params
 
         if is_sharded_layout(args.index_dir):
             # interactive layout: index scan AND sequence fetch pruned to
@@ -535,6 +536,12 @@ def main(argv: list[str] | None = None) -> int:
                     file=sys.stderr,
                 )
                 return 2
+            if os.path.isdir(os.path.join(args.index_dir, "_ps_meta")):
+                # a range index written before it carried a sidecar reads unchecked
+                check_index_params(
+                    read_kmer_index_meta(spark, args.index_dir),
+                    SearchKnobs(**_search_kwargs(args)), f"index at {args.index_dir}",
+                )
             res = search(
                 queries,
                 load_target(spark, args.target_fasta),

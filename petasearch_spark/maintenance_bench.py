@@ -31,11 +31,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from petasearch_spark.deadpid import dead_pid_paths
 from petasearch_spark.functions.localframe import literal_df
 from petasearch_spark.session import cut_lineage
 
 from petasearch_spark.sources.tables import load_table
+from petasearch_spark.storage import reap_dead, source_fingerprint, staged_cache
 
 #: per-process state shared between the entries of one group, keyed by
 #: sf_dir so a multi-SF process never cross-wires artifacts
@@ -44,14 +44,6 @@ _STATE: dict[str, dict] = {}
 
 def _state(sf_dir: str) -> dict:
     return _STATE.setdefault(sf_dir, {})
-
-
-def _reap_dead_pid_siblings(prefix: str) -> None:
-    """Remove ``<prefix><pid>`` dirs whose builder pid is dead — repeated
-    bench runs must not accumulate /tmp debris (the staging-cache
-    dead-pid sweep pattern)."""
-    for d in dead_pid_paths(prefix):
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # --- IVF lifecycle: build -> recluster -> probe-recall ---------------------
@@ -73,7 +65,7 @@ def ivf_maint_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter(F.col("vec_id") < N_CENTROIDS).select("vec_id", "v").collect()
     ]
     prefix = os.path.join(tempfile.gettempdir(), "ps_maint_ivf_")
-    _reap_dead_pid_siblings(prefix)
+    reap_dead(prefix)  # repeated bench runs must not accumulate debris
     path = f"{prefix}{os.getpid()}"
     shutil.rmtree(path, ignore_errors=True)
     write_ivf_index(emb, path, cent_rows, extra_cols=("label",))
@@ -145,7 +137,7 @@ def curate_cold_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.cli import _curate
 
     prefix = os.path.join(tempfile.gettempdir(), "ps_maint_curate_")
-    _reap_dead_pid_siblings(prefix)
+    reap_dead(prefix)  # repeated bench runs must not accumulate debris
     out_dir = f"{prefix}{os.getpid()}"
     shutil.rmtree(out_dir, ignore_errors=True)
     # the accounting line is _curate's contract output; swallow it here —
@@ -191,8 +183,6 @@ def curate_resume_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staging_root(sf_dir: str) -> str:
-    from petasearch_spark.streaming.stateful import source_fingerprint
-
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"), "maint_pair")
     return os.path.join(tempfile.gettempdir(), f"ps_maintstage_{fp}")
 
@@ -201,8 +191,6 @@ def staging_cache_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cold claim: build + atomic-rename publish of a content-keyed
     staging cache (the JSONL export the streaming-ingest fixtures use).
     The root is removed first so every bench run pays the build."""
-    from petasearch_spark.streaming.stateful import staged_cache
-
     root = _staging_root(sf_dir)
     shutil.rmtree(root, ignore_errors=True)
 
@@ -221,8 +209,6 @@ def staging_cache_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def staging_cache_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm claim of the same key: pure cache-hit overhead (mtime
     refresh + sibling TTL sweep + path return; the build must NOT run)."""
-    from petasearch_spark.streaming.stateful import staged_cache
-
     root = _staging_root(sf_dir)
 
     def must_not_build(tmp: str) -> None:

@@ -36,6 +36,7 @@ from petasearch_spark.functions.localframe import literal_df
 from petasearch_spark.operators.quality import WINDOW_MAX_STARTS
 from petasearch_spark.operators.portable import TOKENS_SQL, tokens
 from petasearch_spark.sources.tables import load_table
+from petasearch_spark.storage import write_bucketed
 
 K1 = 1.2
 B = 0.75
@@ -163,22 +164,17 @@ def write_postings_bucketed(docs: DataFrame, prefix: str, num_buckets: int = POS
     the df aggregation and any term-bucketed candidate join — bucket-
     local: NO Exchange above the postings scan (the same layout economics
     as the bucketed k-mer index, kmer_index.write_kmer_index_bucketed).
+    The doclens table is bucketed by doc_id through the same writer.
     """
-    from petasearch_spark.operators.kmer_index import _drop_managed_table
+    _write_state(docs, prefix, num_buckets, "overwrite")
 
-    spark = docs.sparkSession
+
+def _write_state(docs: DataFrame, prefix: str, num_buckets: int, mode: str) -> None:
+    """Write (``mode`` overwrite) or append (``mode`` append) the postings
+    and doclens of ``docs`` as the ``prefix`` index tables."""
     posting, doclen = _build_postings(docs)
-    _drop_managed_table(spark, f"{prefix}_postings")
-    _drop_managed_table(spark, f"{prefix}_doclens")
-    (
-        posting.write.mode("overwrite")
-        .format("parquet")
-        .option("compression", "zstd")
-        .bucketBy(num_buckets, "term")
-        .sortBy("term")
-        .saveAsTable(f"{prefix}_postings")
-    )
-    doclen.write.mode("overwrite").format("parquet").saveAsTable(f"{prefix}_doclens")
+    write_bucketed(posting, f"{prefix}_postings", "term", num_buckets, mode)
+    write_bucketed(doclen, f"{prefix}_doclens", "doc_id", num_buckets, mode)
 
 
 def merge_postings_delta(
@@ -186,7 +182,6 @@ def merge_postings_delta(
     prefix: str,
     delta_docs: DataFrame,
     num_buckets: int = POSTINGS_BUCKETS,
-    validate_disjoint: bool = True,
 ) -> None:
     """Incremental BM25 index maintenance — the fourth member of the
     delta-merge family (kmer_index.merge_kmer_index_delta,
@@ -201,14 +196,11 @@ def merge_postings_delta(
     documents correctly shift as the corpus grows (the property the
     rebuild-equivalence test pins; a stats-frozen index would drift).
 
-    ``validate_disjoint`` (default ON) fails loudly when the delta
-    re-submits an existing doc_id — a silent append would double that
-    document's postings/doclen rows and inflate n_docs/total_tokens,
-    corrupting every later probe score (round-4 ADVICE). The check is
-    one semi-join of the (small) delta id set against the 1-row-per-doc
-    doclens table; pass ``validate_disjoint=False`` only when the caller
-    guarantees disjointness upstream (e.g. a monotone id allocator) and
-    the extra doclens scan matters.
+    A delta that re-submits an existing doc_id fails loudly — a silent
+    append would double that document's postings/doclen rows and inflate
+    n_docs/total_tokens, corrupting every later probe score (round-4
+    ADVICE). The check is one semi-join of the (small) delta id set
+    against the 1-row-per-doc doclens table.
 
     The delta projection is persisted for the duration of the merge, so
     an expensive delta lineage (a filtered/joined frame) evaluates once
@@ -217,30 +209,20 @@ def merge_postings_delta(
     """
     delta = delta_docs.select("doc_id", "text").persist()
     try:
-        if validate_disjoint:
-            dup = (
-                delta.select("doc_id")
-                .join(spark.table(f"{prefix}_doclens"), "doc_id", "left_semi")
-                .limit(5)
-                .collect()
-            )
-            if dup:
-                ids = sorted(r["doc_id"] for r in dup)
-                raise ValueError(
-                    f"merge_postings_delta: delta doc_ids already present in "
-                    f"{prefix}_doclens (e.g. {ids}); the merge is append-only — "
-                    f"re-submitting a document would double its postings"
-                )
-        posting, doclen = _build_postings(delta)
-        (
-            posting.write.mode("append")
-            .format("parquet")
-            .option("compression", "zstd")
-            .bucketBy(num_buckets, "term")
-            .sortBy("term")
-            .saveAsTable(f"{prefix}_postings")
+        dup = (
+            delta.select("doc_id")
+            .join(spark.table(f"{prefix}_doclens"), "doc_id", "left_semi")
+            .limit(5)
+            .collect()
         )
-        doclen.write.mode("append").format("parquet").saveAsTable(f"{prefix}_doclens")
+        if dup:
+            ids = sorted(r["doc_id"] for r in dup)
+            raise ValueError(
+                f"merge_postings_delta: delta doc_ids already present in "
+                f"{prefix}_doclens (e.g. {ids}); the merge is append-only — "
+                f"re-submitting a document would double its postings"
+            )
+        _write_state(delta, prefix, num_buckets, "append")
     finally:
         delta.unpersist()
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from petasearch_spark.session import cut_lineage
+from petasearch_spark.session import cut_lineage, release_lineage_cuts
 
 from petasearch_spark.operators.portable import (
     TOKENS_SQL,
@@ -31,6 +31,7 @@ from petasearch_spark.operators.portable import (
     shingles_sql,
 )
 from petasearch_spark.sources.tables import load_table
+from petasearch_spark.storage import write_bucketed
 
 N_HASHES = 16
 BAND_ROWS = 4  # 4 bands × 4 rows
@@ -517,6 +518,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).repartition(n_parts)
     edges = cut_lineage(edges)
+    cuts = [edges]
     labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("label")
     )
@@ -537,6 +539,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         upd = cut_lineage(upd)
+        cuts.append(upd)
         labels = upd.select("doc_id", "label")
         # early exit on convergence (round 11, guide §2 iterative plans):
         # min-label propagation is monotone, so a round with zero label
@@ -549,6 +552,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (pinned by the fuzz parity suite).
         if upd.agg(F.max(F.coalesce(F.col("_chg"), F.lit(False)))).collect()[0][0] is not True:
             break
+    # the returned frame reads only the last cut: the earlier ones are
+    # released here, since no caller can reach them
+    for c in cuts[:-1]:
+        release_lineage_cuts(c)
     from pyspark.sql import Window
 
     # window count, not a groupBy+self-join: one shuffle, no second branch
@@ -687,20 +694,10 @@ def write_dedup_ledger(docs: DataFrame, table: str, num_buckets: int = 32) -> No
     """Persist the exact-dedup state — (content_hash, canonical_doc_id,
     n_copies) — BUCKETED by content_hash, so delta merges and membership
     probes are bucket-local."""
-    from petasearch_spark.operators.kmer_index import _drop_managed_table
-
     ledger = docs.groupBy(F.md5("text").alias("content_hash")).agg(
         F.min("doc_id").alias("canonical_doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
-    _drop_managed_table(docs.sparkSession, table)
-    (
-        ledger.write.mode("overwrite")
-        .format("parquet")
-        .option("compression", "zstd")
-        .bucketBy(num_buckets, "content_hash")
-        .sortBy("content_hash")
-        .saveAsTable(table)
-    )
+    write_bucketed(ledger, table, "content_hash", num_buckets)
 
 
 def merge_dedup_ledger(
@@ -726,8 +723,6 @@ def merge_dedup_ledger(
     bucket-aligned; the only shuffle anywhere is the delta's own groupBy.
 
     Returns the merged ledger (already persisted to ``out_table``)."""
-    from petasearch_spark.operators.kmer_index import _drop_managed_table
-
     spark = delta_docs.sparkSession
     write_dedup_ledger(delta_docs, delta_table, num_buckets=num_buckets)
     base = spark.table(base_table).alias("b")
@@ -739,13 +734,5 @@ def merge_dedup_ledger(
             F.coalesce(F.col("b.n_copies"), F.lit(0)) + F.coalesce(F.col("d.n_copies"), F.lit(0))
         ).alias("n_copies"),
     )
-    _drop_managed_table(spark, out_table)
-    (
-        merged.write.mode("overwrite")
-        .format("parquet")
-        .option("compression", "zstd")
-        .bucketBy(num_buckets, "content_hash")
-        .sortBy("content_hash")
-        .saveAsTable(out_table)
-    )
+    write_bucketed(merged, out_table, "content_hash", num_buckets)
     return spark.table(out_table)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from petasearch_spark.functions.localframe import literal_df
 from petasearch_spark.operators.portable import shingles_sql, tokens, word_shingles
 from petasearch_spark.sources.tables import load_table
+from petasearch_spark.storage import source_fingerprint, staged_cache
 
 REQ_MATCHES = 2  # --req-kmer-matches 2, strict > (LocalParameters.h:144)
 
@@ -433,16 +434,8 @@ def _sharded_index_path(sf_dir: str) -> str:
     so one atomic publish covers everything an interactive probe needs."""
     import tempfile
 
-    from petasearch_spark.streaming.stateful import source_fingerprint
-
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"), "sharded-v2")
     return os.path.join(tempfile.gettempdir(), f"ps_sharded_idx_{fp}")
-
-
-#: shard count for the bench-SF layout: ~190k distinct k-mers at sf0.1
-#: -> ~750 rows/shard; at 100 TB you size this so one shard ~ one HDFS
-#: block and prune via the same IN filter
-SHARDED_NUM_SHARDS = 256
 
 
 def _build_sharded_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -451,19 +444,14 @@ def _build_sharded_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
     from petasearch_spark.operators.kmer_index import write_sharded_layout
 
     docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    write_sharded_layout(
-        derived_sequences(docs).drop("source"), out_dir, num_shards=SHARDED_NUM_SHARDS
-    )
+    write_sharded_layout(derived_sequences(docs).drop("source"), out_dir)
 
 
 def _ensure_sharded_layout(spark: SparkSession, sf_dir: str) -> str:
     """Return the published layout root, building it first if absent —
-    via the claim-by-rename staging protocol (streaming.stateful.
-    staged_cache), so a reader can never observe a half-written layout
-    (ADVICE r9: the old bare isdir admission raced a concurrent
-    mode=overwrite build)."""
-    from petasearch_spark.streaming.stateful import staged_cache
-
+    via :func:`storage.staged_cache`, so a reader can never observe a
+    half-written layout (ADVICE r9: the old bare isdir admission raced a
+    concurrent mode=overwrite build)."""
     return staged_cache(
         _sharded_index_path(sf_dir),
         lambda tmp: _build_sharded_layout(spark, sf_dir, tmp),
@@ -472,19 +460,17 @@ def _ensure_sharded_layout(spark: SparkSession, sf_dir: str) -> str:
 
 def protein_prefilter_sharded_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-TIME build of the SHARDED interactive layout (round 9; round
-    10 adds the sequence store): directory-partitioned by kmer % 256 so
+    10 adds the sequence store): directory-partitioned by kmer % 256
+    (kmer_index.DEFAULT_NUM_SHARDS) so
     a small query batch reads only the shards its k-mers hash to
     (kmer_index.write_kmer_index_sharded). Complements the bucketed
     layout: bucketed = zero-shuffle joins for LARGE query batches;
     sharded = I/O proportional to the QUERY for small/interactive ones
     (the reference's own headline use-case — a few proteins against a
     huge SRA index, README.md:1-3). As a bench entry (k125) this ALWAYS
-    performs the full write — staged_cache(force_build=True): built in a
-    pid-unique sibling, published by rename only if no complete layout
-    is live (discarded otherwise), so the timing stays honest and
+    performs the full write — staged_cache(force_build=True), published
+    only if no complete layout is live, so the timing stays honest and
     concurrent readers never see a torn overwrite (ADVICE r9)."""
-    from petasearch_spark.streaming.stateful import staged_cache
-
     root = staged_cache(
         _sharded_index_path(sf_dir),
         lambda tmp: _build_sharded_layout(spark, sf_dir, tmp),
@@ -634,8 +620,6 @@ def _sharded_delta_root(sf_dir: str) -> str:
     other sharded entries share is never mutated."""
     import tempfile
 
-    from petasearch_spark.streaming.stateful import source_fingerprint
-
     # v2: delta generations auto-size their fanout (mixed-moduli layout)
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"), "sharded-delta-v2")
     return os.path.join(tempfile.gettempdir(), f"ps_sharded_delta_{fp}")
@@ -653,9 +637,7 @@ def _build_sharded_delta_layout(spark: SparkSession, sf_dir: str, out_dir: str) 
     docs = load_table(spark, "documents", sf_dir, widen_scan=True)
     seqs = derived_sequences(docs).drop("source")
     arrived = F.col("seq_id") % _DELTA_SPLIT_MOD == _DELTA_SPLIT_REM
-    write_sharded_layout(
-        seqs.filter(~arrived), out_dir, num_shards=SHARDED_NUM_SHARDS
-    )
+    write_sharded_layout(seqs.filter(~arrived), out_dir)
     append_sharded_layout(spark, out_dir, seqs.filter(arrived))
 
 
@@ -672,8 +654,6 @@ def protein_search_sharded_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is protein_search's VERBATIM — same query set, same golden
     oracle; any append-path drift (missed generation, wrong
     representative, residue miscount) breaks the driver's value hash."""
-    from petasearch_spark.streaming.stateful import staged_cache
-
     root = staged_cache(
         _sharded_delta_root(sf_dir),
         lambda tmp: _build_sharded_delta_layout(spark, sf_dir, tmp),
@@ -1087,22 +1067,17 @@ def _search_index_path(sf_dir: str) -> str:
     its own index instead of reading a stale one."""
     import tempfile
 
-    from petasearch_spark.streaming.stateful import source_fingerprint
-
     fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"), "search-idx-v1")
     return os.path.join(tempfile.gettempdir(), f"ps_bench_search_idx_{fp}")
 
 
 def _ensure_search_index(spark: SparkSession, sf_dir: str, force_build: bool = False) -> str:
     """Return the published prebuilt index, building it first if absent
-    (or always, with ``force_build``) through the claim-by-rename
-    staging protocol (streaming.stateful.staged_cache)."""
+    (or always, with ``force_build``) through :func:`storage.staged_cache`."""
     from petasearch_spark.operators.kmer_index import (
         build_kmer_index,
         write_kmer_index,
     )
-    from petasearch_spark.streaming.stateful import staged_cache
-
     def build(tmp: str) -> None:
         docs = load_table(spark, "documents", sf_dir, widen_scan=True)
         write_kmer_index(build_kmer_index(derived_sequences(docs).drop("source")), tmp)

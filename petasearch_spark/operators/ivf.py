@@ -26,7 +26,7 @@ from petasearch_spark.functions.ordering import sort_via_exchange
 
 from petasearch_spark.functions.localframe import literal_df
 
-from petasearch_spark.deadpid import recover_swap
+from petasearch_spark.storage import recover, source_fingerprint, staged_cache, swap_in
 
 from petasearch_spark.session import cut_lineage
 
@@ -857,10 +857,10 @@ def merge_ivf_index_delta(spark: SparkSession, path: str, delta_emb: DataFrame, 
     from petasearch_spark.operators.similarity import nearest_centroid_udf
 
     if not os.path.exists(path):
-        # a recluster killed between its two renames leaves the live
-        # index only at {path}.old<pid>; recover it here instead of
-        # failing until the NEXT recluster call (round-5 ADVICE)
-        recover_swap(path, "recluster")
+        # a recluster killed inside its swap leaves no index at path;
+        # recover it here instead of failing until the NEXT recluster
+        # call (round-5 ADVICE)
+        recover(path)
     payload = tuple(
         c for c in spark.read.parquet(path).columns if c not in ("vec_id", "v", "bucket")
     )
@@ -910,7 +910,7 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame, centroid
     if not os.path.exists(path):
         # cheap happy-path stat; see merge_ivf_index_delta — a probe
         # must not fail inside recluster's swap window (round-5 ADVICE)
-        recover_swap(path, "recluster")
+        recover(path)
     # createDataFrame, NOT literal_df: N_CENTROIDS x dim doubles embedded
     # as literal struct-array expressions bloat Catalyst analysis/codegen
     # of every probe plan (~2.5x on the filtered probe, round-10 VERDICT
@@ -968,8 +968,6 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 8). Quantizer, queries, ranking = ann_ivf_topk exactly.
     """
     import tempfile
-
-    from petasearch_spark.streaming.stateful import source_fingerprint, staged_cache
 
     emb = admit_indexed(load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
@@ -1060,24 +1058,20 @@ def recluster_ivf_index(
     recenter, the same plan shape as the registered ann_ivf_kmeans — one
     broadcast join + one aggregation per round; cells that lose all
     members are dropped, as FAISS does). The index is then REWRITTEN
-    partitioned by the refined buckets: built in a pid-unique sibling and
-    swapped in with two renames (a real deployment would commit through a
-    table format; the brief swap window is the /tmp-index trade-off, same
-    as the bucketed-table rebuilds). Payload columns (e.g. ``label``
+    partitioned by the refined buckets and swapped in (storage.swap_in; a
+    real deployment would commit through a table format, and the brief
+    swap window is the /tmp-index trade-off). Payload columns (e.g. ``label``
     from write_ivf_index's extra_cols) ride through the rewrite, so
     filtered probes keep working. Returns the refined (cent_id, vector)
     rows — the new quantizer every subsequent probe/merge must use; the
     collect is bounded by the centroid count.
     """
-    import shutil
-
-    recover_swap(path, "recluster")
+    recover(path)
     stored = spark.read.parquet(path)
     payload = tuple(c for c in stored.columns if c not in ("vec_id", "v", "bucket"))
     vecs = stored.select("vec_id", "v", *payload)
     kept: list = []
     cent = _recenter(stored.select("vec_id", "v", F.col("bucket").alias("cent_id")))
-    tmp = f"{path}.recluster{os.getpid()}"
     try:
         cent = cent.persist()
         kept.append(cent)
@@ -1090,20 +1084,8 @@ def recluster_ivf_index(
         cent_rows = sorted(
             (int(r["cent_id"]), list(map(float, r["cv"]))) for r in cent.collect()
         )
-        shutil.rmtree(tmp, ignore_errors=True)
-        write_ivf_index(vecs, tmp, cent_rows, extra_cols=payload)
-    except BaseException:
-        # a failed rewrite must not strand its pid-unique build dir — a
-        # fresh process would never reuse this pid, so nobody else could
-        # ever clean it (round-5 review finding)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        swap_in(path, lambda tmp: write_ivf_index(vecs, tmp, cent_rows, extra_cols=payload))
     finally:
         for c in kept:
             c.unpersist()
-    old = f"{path}.old{os.getpid()}"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
     return cent_rows

@@ -42,10 +42,15 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from petasearch_spark.deadpid import dead_pid_paths, recover_swap
 from petasearch_spark.functions.kmer import AMINO_ALPHABET
+from petasearch_spark.storage import build_staged, reap_staging, recover, swap_in, write_bucketed
 
 DEFAULT_K = 9  # workflow default, /root/reference/src/workflow/petasearch.cpp:12
+
+#: directory-shard count of a sharded layout's base (``createindex
+#: --num-shards``): ~190k distinct k-mers at sf0.1 -> ~750 rows/shard; at
+#: 100 TB size it so one shard ~ one storage block
+DEFAULT_NUM_SHARDS = 256
 
 
 def _write_parts(spark, num_shards: int) -> int:
@@ -256,9 +261,15 @@ def aggregate_kmer_index(
     )
 
 
-def write_kmer_index(index: DataFrame, path: str, num_ranges: int = 32) -> None:
+def write_kmer_index(
+    index: DataFrame, path: str, num_ranges: int = 32, k: int | None = None,
+    alphabet: str | None = None,
+) -> None:
     """Persist the index range-partitioned and sorted by kmer (O1) so the
-    search join gets pruned, co-located scans."""
+    search join gets pruned, co-located scans. The ``_ps_meta`` sidecar
+    records the k and alphabet the index was built with, when given, so
+    a search with other ones is refused (plans.search.check_index_params)
+    instead of joining on incompatible k-mer codes."""
     (
         index.repartitionByRange(num_ranges, "kmer")
         .sortWithinPartitions("kmer")
@@ -266,12 +277,13 @@ def write_kmer_index(index: DataFrame, path: str, num_ranges: int = 32) -> None:
         .option("compression", "zstd")
         .parquet(path)
     )
+    _write_sidecar(path, _INDEX_META, (None, k, alphabet))
 
 
 def write_kmer_index_sharded(
     index: DataFrame,
     path: str,
-    num_shards: int = 1024,
+    num_shards: int,
     k: int | None = None,
     alphabet: str | None = None,
 ) -> None:
@@ -421,7 +433,7 @@ def write_sequence_store_sharded(
 
 
 def write_sharded_layout(
-    seqs: DataFrame, root: str, num_shards: int = 256, k: int = DEFAULT_K,
+    seqs: DataFrame, root: str, num_shards: int = DEFAULT_NUM_SHARDS, k: int = DEFAULT_K,
     alphabet: str = AMINO_ALPHABET,
 ) -> None:
     """Write ``seqs`` as a fresh interactive layout at ``root``: the
@@ -429,12 +441,12 @@ def write_sharded_layout(
     store (``seqs/``, round 10 — carries db_residues for e-value parity
     with the full-scan path). One persisted pass over ``seqs`` feeds the
     admission (:func:`_admit`) and both halves. The whole root is
-    replaced (:func:`_publish_root`): an old layout's delta generations
+    replaced (:func:`storage.swap_in`): an old layout's delta generations
     are superseded with it."""
     seqs = seqs.persist()
     try:
         admitted = _admit(seqs)
-        _publish_root(root, lambda tmp: _write_generation(
+        swap_in(root, lambda tmp: _write_generation(
             tmp, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
             num_shards, num_shards, k, alphabet, admitted,
         ))
@@ -497,37 +509,6 @@ def _write_generation(
         f.result()
 
 
-def _publish_root(root: str, write, folded: set[str] | None = None) -> None:
-    """The one publish path of a whole layout: ``write(tmp)`` builds it in the
-    pid-unique sibling ``root.compact<pid>``, swapped in by renaming root to
-    ``root.old<pid>`` and the sibling to root (a missing root takes the
-    second rename alone; readers' :func:`_recover_layout_swap` undoes a kill
-    between them). The old root goes with its generations, except that given
-    compaction's snapshot ``folded``, those it does not name were published
-    while the fold ran and are re-claimed into the new root (their ids are
-    disjoint from the base by append's check). An appender racing the
-    root-missing window fails loudly on its claim rename (ENOENT)."""
-    root = os.path.normpath(root)
-    tmp = f"{root}.compact{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        write(tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{root}.old{os.getpid()}"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(root):
-        os.rename(root, old)
-    os.rename(tmp, root)
-    if folded is not None:
-        n = 1
-        for g in _delta_generation_dirs(old):
-            if os.path.basename(g) not in folded:
-                n = _slot_number(_claim_slot(g, root, n)) + 1
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def is_sharded_layout(path: str) -> bool:
     """True iff ``path`` holds the interactive layout (both datasets'
     in-directory sidecars present — a half-published dir is NOT a
@@ -571,17 +552,6 @@ def read_sequence_store_pruned(
     return store.drop("sshard")
 
 
-def _drop_managed_table(spark, table: str) -> None:
-    """DROP TABLE IF EXISTS plus local-warehouse orphan cleanup: an
-    in-memory catalog forgets tables between sessions but their location
-    dirs persist, and saveAsTable then fails with LOCATION_ALREADY_EXISTS.
-    (On a cluster with a real metastore the DROP alone suffices.)"""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        shutil.rmtree(f"{wh.removeprefix('file:')}/{table.lower()}", ignore_errors=True)
-
-
 def write_kmer_index_bucketed(
     index: DataFrame, table: str, num_buckets: int = 32
 ) -> None:
@@ -591,15 +561,7 @@ def write_kmer_index_bucketed(
     sides. This is the Spark analogue of the reference's sorted
     table + streamed merge join, and the layout you want when the same
     100 TB index serves many query batches."""
-    _drop_managed_table(index.sparkSession, table)
-    (
-        index.write.mode("overwrite")
-        .format("parquet")
-        .option("compression", "zstd")
-        .bucketBy(num_buckets, "kmer")
-        .sortBy("kmer")
-        .saveAsTable(table)
-    )
+    write_bucketed(index, table, "kmer", num_buckets)
 
 
 def write_query_kmers_bucketed(
@@ -607,14 +569,7 @@ def write_query_kmers_bucketed(
 ) -> None:
     """Bucket the probe side identically so the prefilter join is
     bucket-local (zero shuffle on either side)."""
-    _drop_managed_table(query_kmers.sparkSession, table)
-    (
-        query_kmers.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, "kmer")
-        .sortBy("kmer")
-        .saveAsTable(table)
-    )
+    write_bucketed(query_kmers, table, "kmer", num_buckets)
 
 
 def extract_query_kmers(
@@ -697,9 +652,10 @@ def merge_kmer_index_delta(
 # batch-only, /root/reference/src/sra/createkmertable.cpp).
 
 #: published delta generations: root/delta_NNNNN (rename-claimed, so a
-#: matching dir is complete by construction); pid-unique build staging
-#: lives at root/.delta_build<pid>, invisible to this pattern
+#: matching dir is complete by construction); an append builds in the
+#: staging of root/.delta (storage.build_staged), invisible to this pattern
 _DELTA_NAME_FMT = "delta_{:05d}"
+_DELTA_STAGE = ".delta"
 
 
 def _delta_generation_dirs(root: str) -> list[str]:
@@ -736,24 +692,16 @@ def _claim_slot(src: str, root: str, n: int) -> str:
             n += 1
 
 
-def _recover_layout_swap(root: str) -> None:
-    """Crash recovery for :func:`_publish_root`'s two-rename swap
-    (deadpid.recover_swap with the ``.compact`` staging tag), plus dead-pid
-    ``.delta_build`` staging inside the root: a SIGKILLed append's dir is
-    invisible to readers but would otherwise leak forever."""
-    recover_swap(root, "compact")
-    if os.path.isdir(root):
-        for d in dead_pid_paths(os.path.join(root, ".delta_build")):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def list_layout_generations(root: str) -> list[str]:
     """All live generations of a sharded layout, fold order: the base
     (``root`` itself) first, then each published ``delta_NNNNN``. Every
     entry holds the same two datasets (``index/`` + ``seqs/``) with the
     same modulus/k/alphabet (append_sharded_layout enforces at write
-    time). Runs swap-crash recovery first, mirroring probe_ivf_index."""
-    _recover_layout_swap(root)
+    time). Recovers an interrupted swap of the root first
+    (:func:`storage.recover`), and reaps the staging of killed appends,
+    which readers never see but nobody else would delete."""
+    recover(root)
+    reap_staging(os.path.join(root, _DELTA_STAGE))
     return [root] + _delta_generation_dirs(root)
 
 
@@ -921,7 +869,6 @@ def append_sharded_layout(
     spark,
     root: str,
     new_seqs: DataFrame,
-    num_shards: int | None = None,
 ) -> str | None:
     """Fold newly-arrived sequences into a published sharded layout as a
     NEW GENERATION — cost proportional to the DELTA (its own extraction
@@ -929,13 +876,11 @@ def append_sharded_layout(
     delta), never the corpus. The generation is a complete mini layout
     (``index/`` + ``seqs/``) written with the BASE's k/alphabet (read
     from its sidecar, so a drifted append is impossible), built in a
-    pid-unique ``.delta_build`` dir inside the root and claimed by
-    atomic rename to the next ``delta_NNNNN`` slot — a probe can never
-    observe a half-written generation, and two concurrent appenders
-    claim distinct slots (the rename loser retries on the next number).
-    Returns the published generation path, or None for an empty delta
-    (no generation written). ``num_shards`` overrides the auto-sizing
-    for both datasets (e.g. a bulk daily delta sized like a base).
+    staging dir inside the root and claimed by atomic rename to the next
+    ``delta_NNNNN`` slot — a probe can never observe a half-written
+    generation, and two concurrent appenders claim distinct slots (the
+    rename loser retries on the next number). Returns the published
+    generation path, or None for an empty delta (no generation written).
 
     Sequence ids must be distinct and NEW (:func:`_admit_delta` raises
     ValueError or :class:`SeqIdCollision`), checked before the write and
@@ -971,41 +916,36 @@ def append_sharded_layout(
         admitted = _admit_delta(spark, gens, new_seqs)
         if admitted is None:
             return None
-        if num_shards is None:
-            idx_shards = min(
-                int(idx_meta["num_shards"]), admitted["residues"] // _DELTA_KMER_ROWS_PER_SHARD + 1
-            )
-            seq_shards = min(
-                int(store_meta["num_shards"]), admitted["n"] // _DELTA_SEQS_PER_SHARD + 1
-            )
-        else:
-            idx_shards = seq_shards = int(num_shards)
-        tmp = os.path.join(root, f".delta_build{os.getpid()}")
-        shutil.rmtree(tmp, ignore_errors=True)
+        idx_shards = min(
+            int(idx_meta["num_shards"]), admitted["residues"] // _DELTA_KMER_ROWS_PER_SHARD + 1
+        )
+        seq_shards = min(
+            int(store_meta["num_shards"]), admitted["n"] // _DELTA_SEQS_PER_SHARD + 1
+        )
+        k, alphabet = idx_meta["k"], idx_meta["alphabet"]
+        tmp = build_staged(os.path.join(root, _DELTA_STAGE), lambda tmp: _write_generation(
+            tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
+            idx_shards, seq_shards, k, alphabet, admitted,
+        ))
         try:
-            k, alphabet = idx_meta["k"], idx_meta["alphabet"]
-            _write_generation(
-                tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
-                idx_shards, seq_shards, k, alphabet, admitted,
-            )
             target = _claim_slot(tmp, root, max(map(_slot_number, gens[1:]), default=0) + 1)
-            # check-then-publish: a rival may have published since the
-            # check (round-10 review). Only lower unseen slots are checked,
-            # so of two clashing appenders the higher aborts, with no lock
-            rivals = [
-                g for g in _delta_generation_dirs(root)
-                if g not in gens and _slot_number(g) < _slot_number(target)
-            ]
-            if rivals:
-                try:
-                    _admit_delta(spark, rivals, new_seqs)
-                except ValueError:
-                    shutil.rmtree(target, ignore_errors=True)
-                    raise
-            return target
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
+        # check-then-publish: a rival may have published since the
+        # check (round-10 review). Only lower unseen slots are checked,
+        # so of two clashing appenders the higher aborts, with no lock
+        rivals = [
+            g for g in _delta_generation_dirs(root)
+            if g not in gens and _slot_number(g) < _slot_number(target)
+        ]
+        if rivals:
+            try:
+                _admit_delta(spark, rivals, new_seqs)
+            except ValueError:
+                shutil.rmtree(target, ignore_errors=True)
+                raise
+        return target
     finally:
         new_seqs.unpersist()
 
@@ -1040,9 +980,13 @@ def compact_sharded_layout(spark, root: str) -> int:
     groupBy over ~|distinct k-mers| rows — skipping extraction, which
     dominates build cost), the fetch side is a plain union (ids are
     disjoint by append's check), and db_residues and max_seq_id are the
-    sum and max of the generation sidecars'. :func:`_publish_root` swaps
-    the new root in and adopts generations appended while the fold ran.
-    Returns the number of generations folded (0 = no deltas)."""
+    sum and max of the generation sidecars'. :func:`storage.swap_in`
+    swaps the new root in; generations appended while the fold ran are
+    not in its snapshot, and are re-claimed from the old root into the
+    new one (their ids are disjoint from the base by append's check).
+    An appender racing the root-missing window between the renames
+    fails loudly on its claim rename (ENOENT). Returns the number of
+    generations folded (0 = no deltas)."""
     gens = list_layout_generations(root)
     if len(gens) == 1:
         return 0
@@ -1051,11 +995,19 @@ def compact_sharded_layout(spark, root: str) -> int:
     stats = Row(
         residues=_db_residues(spark, gens), max_seq_id=max(_max_seq_id(spark, g) for g in gens)
     )
-    _publish_root(root, lambda tmp: _write_generation(
+    folded = {os.path.basename(g) for g in gens}
+
+    def adopt(old: str) -> None:
+        n = 1
+        for g in _delta_generation_dirs(old):
+            if os.path.basename(g) not in folded:
+                n = _slot_number(_claim_slot(g, root, n)) + 1
+
+    swap_in(root, lambda tmp: _write_generation(
         tmp, aggregate_kmer_index(_read_generations(spark, gens, "index")),
         _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
         store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"], stats,
-    ), folded={os.path.basename(g) for g in gens})
+    ), adopt=adopt)
     return len(gens) - 1
 
 

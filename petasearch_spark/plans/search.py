@@ -259,6 +259,26 @@ def search(
     return _full_scan(queries, targets, target_index, SearchKnobs(**knobs)).hits
 
 
+def check_index_params(meta: dict, knobs: SearchKnobs, index: str) -> None:
+    """Refuse a search whose k or alphabet differ from the ones the index
+    was built with (``meta``, its sidecar as read by
+    kmer_index.read_kmer_index_meta; ``index`` names it in the message).
+    The k-mer codes would be incompatible, and the join would return
+    nothing with exit 0. A field the sidecar does not record (an index
+    written before it did) is not checked."""
+    alpha = _alphabet_params(knobs.alphabet)[0]
+    if meta["k"] is not None and int(meta["k"]) != knobs.k:
+        raise ValueError(
+            f"{index} was built with k={meta['k']} but the search asked"
+            f" k={knobs.k} — rebuild the index or match --k"
+        )
+    if meta["alphabet"] is not None and meta["alphabet"] != alpha:
+        raise ValueError(
+            f"{index} was built with alphabet {meta['alphabet']!r} but the"
+            f" search asked {alpha!r} — rebuild the index or match --alphabet"
+        )
+
+
 def search_sharded_layout(
     queries: DataFrame,
     layout_root: str,
@@ -293,24 +313,8 @@ def search_sharded_layout(
     # probes resolve the J2 rule over the pruned union, so a grown layout
     # answers exactly like a full rebuild (tests/test_sharded_delta.py)
     gens = list_layout_generations(layout_root)
-    alpha = _alphabet_params(kn.alphabet)[0]
-    # the index sidecar validates build parameters (round-10 review
-    # finding): a probe with a different k or alphabet would join on
-    # incompatible kmer codes and return EMPTY results with exit 0, so
-    # refuse loudly instead (layouts written before round 10 carry no
-    # k/alphabet: no check)
     idx_meta = read_kmer_index_meta(spark, os.path.join(layout_root, "index"))
-    if idx_meta["k"] is not None and int(idx_meta["k"]) != kn.k:
-        raise ValueError(
-            f"sharded layout at {layout_root} was built with k={idx_meta['k']}"
-            f" but the probe asked k={kn.k} — rebuild the layout or match --k"
-        )
-    if idx_meta["alphabet"] is not None and idx_meta["alphabet"] != alpha:
-        raise ValueError(
-            f"sharded layout at {layout_root} was built with alphabet"
-            f" {idx_meta['alphabet']!r} but the probe asked {alpha!r} —"
-            f" rebuild the layout or match --alphabet"
-        )
+    check_index_params(idx_meta, kn, f"sharded layout at {layout_root}")
 
     def keep(df: DataFrame) -> DataFrame:
         df = df.persist()

@@ -94,7 +94,7 @@ def _stage_events_csv(spark: SparkSession, sf_dir: str) -> str:
     """events -> a CSV staging dir with planted bad-value rows, cached
     per source CONTENT + corruption constants (the jsonl staging
     economics: no /tmp accumulation, stale-data-proof)."""
-    from petasearch_spark.streaming.stateful import source_fingerprint, staged_cache
+    from petasearch_spark.storage import source_fingerprint, staged_cache
 
     src = os.path.join(sf_dir, "events.parquet")
     key = source_fingerprint(src, f"mod={CSV_BREAK_MOD}|at={CSV_BREAK_AT}|v=2")

@@ -28,17 +28,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from petasearch_spark.deadpid import pid_is_dead
 from petasearch_spark.functions.localframe import literal_df
 
 from petasearch_spark.operators.similarity import N_QUERIES, _as_double, cosine_topk
 from petasearch_spark.sources.tables import load_table
-from petasearch_spark.streaming.stateful import (
-    _stage_two_files,
-    run_replay,
-    source_fingerprint,
-    staged_cache,
-)
+from petasearch_spark.storage import reap_dead, source_fingerprint, staged_cache
+from petasearch_spark.streaming.stateful import _stage_two_files, run_replay
 
 #: output schema of both probes — used to return a TYPED empty frame when
 #: the stream produced no sink files (empty corpus / empty query set: a
@@ -77,21 +72,6 @@ def _query_stream(spark: SparkSession, emb: DataFrame, sf_dir: str) -> DataFrame
     )
 
 
-def _sweep_dead_sinks() -> None:
-    """Remove pid-suffixed sinks left by processes that no longer exist.
-    A sink must outlive its own run (the returned DataFrame reads it
-    lazily), so each process cleans up after its PREDECESSORS instead of
-    itself — without this, every fresh pid would leave one result-set
-    dir in /tmp forever (round-4 review finding)."""
-    import glob
-
-    for d in glob.glob(
-        os.path.join(tempfile.gettempdir(), "ps_ann_stream_sink_*_*")
-    ):
-        if pid_is_dead(d.rsplit("_", 1)[-1]):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def _run_foreach_stream(
     stream: DataFrame,
     sink_tag: str,
@@ -111,11 +91,15 @@ def _run_foreach_stream(
     the batch write. A continuous stream's cache thus stays flat without
     the previous session-wide clearCache(), which evicted every cache the
     CALLER held (e.g. a long-lived service's persisted corpus would have
-    been re-read cold every micro-batch)."""
-    _sweep_dead_sinks()
-    sink = os.path.join(
-        tempfile.gettempdir(), f"ps_ann_stream_sink_{sink_tag}_{os.getpid()}"
-    )
+    been re-read cold every micro-batch).
+
+    A sink must outlive its own run (the returned DataFrame reads it
+    lazily), so each run reaps the sink dirs of dead processes instead of
+    its own — without this, every fresh pid would leave one result-set
+    dir in /tmp forever (round-4 review finding)."""
+    prefix = os.path.join(tempfile.gettempdir(), "ps_ann_stream_sink_")
+    reap_dead(prefix)
+    sink = os.path.join(f"{prefix}{os.getpid()}", sink_tag)
     shutil.rmtree(sink, ignore_errors=True)
     run_replay(stream, make_probe_batch_writer(sink, probe_fn))
     return read_probe_sink(stream.sparkSession, sink, schema=schema, order_by=order_by)

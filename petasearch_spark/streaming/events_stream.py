@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petasearch_spark.session import apply_session_defaults
-from petasearch_spark.streaming.stateful import run_replay, source_fingerprint, staged_cache
+from petasearch_spark.storage import source_fingerprint, staged_cache
+from petasearch_spark.streaming.stateful import run_replay
 
 
 def events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:

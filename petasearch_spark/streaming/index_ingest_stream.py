@@ -61,7 +61,7 @@ def fold_batch_into_layout(spark: SparkSession, root: str, batch_seqs: DataFrame
 
 
 def _ingest_root(sf_dir: str) -> str:
-    from petasearch_spark.streaming.stateful import source_fingerprint
+    from petasearch_spark.storage import source_fingerprint
 
     fp = source_fingerprint(
         os.path.join(sf_dir, "documents.parquet"), "sharded-ingest-v1"
@@ -77,7 +77,6 @@ def _build_ingested_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> No
     from petasearch_spark.operators.doc_search import (
         _DELTA_SPLIT_MOD,
         _DELTA_SPLIT_REM,
-        SHARDED_NUM_SHARDS,
         derived_sequences,
         load_table,
     )
@@ -87,9 +86,7 @@ def _build_ingested_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> No
     docs = load_table(spark, "documents", sf_dir, widen_scan=True)
     seqs = derived_sequences(docs).drop("source")
     arrived = F.col("seq_id") % _DELTA_SPLIT_MOD == _DELTA_SPLIT_REM
-    write_sharded_layout(
-        seqs.filter(~arrived), out_dir, num_shards=SHARDED_NUM_SHARDS
-    )
+    write_sharded_layout(seqs.filter(~arrived), out_dir)
 
     staged = _stage_two_files(spark, os.path.join(sf_dir, "documents.parquet"), "doc_id")
 
@@ -122,7 +119,7 @@ def protein_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table,
         sharded_search_queries,
     )
-    from petasearch_spark.streaming.stateful import staged_cache
+    from petasearch_spark.storage import staged_cache
 
     root = staged_cache(
         _ingest_root(sf_dir),

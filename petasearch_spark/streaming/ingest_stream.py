@@ -42,7 +42,7 @@ def _stage_jsonl_two_files(spark: SparkSession, sf_dir: str) -> str:
     them, so editing BREAK_MOD/BREAK_AT/_TRUNC_LEN must invalidate the
     cache — and publication is atomic (staged_cache), so concurrent
     processes never see a half-built dir (round-4 review findings)."""
-    from petasearch_spark.streaming.stateful import source_fingerprint, staged_cache
+    from petasearch_spark.storage import source_fingerprint, staged_cache
 
     key = source_fingerprint(
         os.path.join(sf_dir, "documents.parquet"),

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from petasearch_spark.functions.localframe import literal_df
 
 from petasearch_spark.streaming.ann_stream import _run_foreach_stream
-from petasearch_spark.streaming.stateful import _stage_two_files, source_fingerprint
+from petasearch_spark.storage import source_fingerprint
+from petasearch_spark.streaming.stateful import _stage_two_files
 
 #: protein_search's output contract — ONE copy, shared with the batch
 #: registry entries (round-10 review finding: three hand-kept lists)

@@ -206,7 +206,11 @@ def bench_child(tree: str, sf_dir: str, keys: list[str]) -> None:
     bench.py times them, and print one JSON line."""
     sys.path.insert(0, tree)
     import bench
+    from petasearch_spark import session
 
+    # release each entry's cut_lineage checkpoints, as bench.run_entry
+    # does (a tree older than the helper keeps them)
+    release = getattr(session, "release_lineage_cuts", lambda _df: None)
     spark = bench.get_spark("petasearch_bench")
     spark.range(1_000_000).selectExpr("sum(cast(id as decimal(18,4))) as s", "count(1) as c").collect()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
@@ -222,7 +226,9 @@ def bench_child(tree: str, sf_dir: str, keys: list[str]) -> None:
     warmup_failed = 0
     for name in bench.WARMUP_QUERIES:
         try:
-            entry(name)(spark, bench.WARMUP_SF_DIR).write.format("noop").mode("overwrite").save()
+            df = entry(name)(spark, bench.WARMUP_SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            release(df)
         except Exception as exc:  # noqa: BLE001
             warmup_failed += 1
             print(f"ab: warm-up {name} failed: {exc!r}", file=sys.stderr)
@@ -232,8 +238,10 @@ def bench_child(tree: str, sf_dir: str, keys: list[str]) -> None:
     for key in sorted(keys, key=lambda k: int(k[1:])):  # bench.py's order
         t0 = time.perf_counter()
         try:
-            entry(bench.BENCH_QUERIES[int(key[1:])])(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = entry(bench.BENCH_QUERIES[int(key[1:])])(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
             timings[key] = round(time.perf_counter() - t0, 2)
+            release(df)
         except Exception as exc:  # noqa: BLE001
             print(f"ab: {key} failed: {exc!r}", file=sys.stderr)
             failed.append(key)

@@ -10,6 +10,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 import bench
 
 REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
@@ -155,6 +157,7 @@ def test_bench_survives_a_failing_entry(monkeypatch, capsys):
     monkeypatch.setattr(bench, "REGISTRY", fakes)
     monkeypatch.setattr(bench, "BENCH_ONLY", {})
     monkeypatch.setattr(bench, "get_spark", lambda *_a, **_k: _FakeSpark())
+    monkeypatch.setattr(bench, "release_lineage_cuts", lambda _df: None)  # a fake frame has no plan
     bench.main()
     out = capsys.readouterr()
     line = out.out.strip().splitlines()[-1]
@@ -276,3 +279,19 @@ def test_committed_bands_carry_centers():
     for k, c in doc["centers"].items():
         lo, hi = doc["bands"][k]
         assert lo <= c <= hi, (k, lo, c, hi)
+
+
+@pytest.mark.parametrize("name", ["gopher_quality", "dedup_clusters"])
+def test_run_entry_releases_lineage_cuts(spark, name):
+    """Both entries cut lineage with checkpoints, whose blocks clearCache()
+    cannot release: gopher_quality returns a frame over its cut, and
+    dedup_clusters also cuts every propagation round. Run through
+    run_entry, each leaves the session's persisted RDDs as it found them."""
+    from tests.conftest import SF_SMOKE
+
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    before = jsc.getPersistentRDDs().size()
+    assert bench.run_entry(spark, name, SF_SMOKE) > 0
+    spark.catalog.clearCache()
+    assert jsc.getPersistentRDDs().size() == before

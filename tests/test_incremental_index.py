@@ -355,7 +355,7 @@ class TestIvfRecluster:
             for d in glob.glob(os.path.join(path, "bucket=*"))
         }
         assert buckets == {c for c, _ in new_cent}
-        assert glob.glob(f"{path}.recluster*") == [] and glob.glob(f"{path}.old*") == []
+        assert glob.glob(f"{path}.build*") == [] and glob.glob(f"{path}.old*") == []
 
         # payload survived: label is queryable and the filtered probe works
         assert "label" in spark.read.parquet(path).columns
@@ -454,7 +454,7 @@ class TestIvfRecluster:
             ivf.recluster_ivf_index(spark, path, iters=1)
         # no pid-unique build debris survives, and the live index is
         # untouched (swap never started)
-        assert glob.glob(f"{path}.recluster*") == []
+        assert glob.glob(f"{path}.build*") == []
         assert spark.read.parquet(path).count() == n
 
     def test_recluster_recovers_interrupted_swap(self, spark, tmp_path):
@@ -462,19 +462,19 @@ class TestIvfRecluster:
         import os
         import shutil
 
-        from petasearch_spark.deadpid import recover_swap
+        from petasearch_spark.storage import recover
 
         _emb, _cent0, path = self._labeled_index(spark, tmp_path)
         n = spark.read.parquet(path).count()
         # simulate a kill between the two renames by a DEAD pid: the live
-        # index sits only at .old<pid>, plus stale .recluster debris
+        # index sits only at .old<pid>, plus stale .build debris
         dead = 999_999_999
         os.rename(path, f"{path}.old{dead}")
-        os.makedirs(f"{path}.recluster{dead}")
-        recover_swap(path, "recluster")
+        os.makedirs(f"{path}.build{dead}")
+        recover(path)
         assert spark.read.parquet(path).count() == n
         assert glob.glob(f"{path}.old*") == []
-        assert glob.glob(f"{path}.recluster*") == []
+        assert glob.glob(f"{path}.build*") == []
         shutil.rmtree(path, ignore_errors=True)
 
     def test_recluster_recovery_tolerates_losing_the_restore_race(self, tmp_path, monkeypatch):
@@ -484,7 +484,7 @@ class TestIvfRecluster:
         import glob
         import os
 
-        from petasearch_spark.deadpid import recover_swap
+        from petasearch_spark.storage import recover
 
         path = str(tmp_path / "ivf_idx")
         os.makedirs(f"{path}.old999999999")
@@ -496,7 +496,7 @@ class TestIvfRecluster:
             real_rename(src, dst)  # ours: the source is gone
 
         monkeypatch.setattr(os, "rename", rival_restores_first)
-        recover_swap(path, "recluster")
+        recover(path)
         assert os.path.isdir(path)
         assert glob.glob(f"{path}.old*") == []
 

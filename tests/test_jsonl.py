@@ -107,7 +107,7 @@ def test_csv_ingest_staging_is_content_cached(spark, monkeypatch):
     """A repeat call must NOT rebuild: pin the build-invocation count
     across the staged_cache boundary (path equality alone is vacuous —
     the path is derived from the content key either way)."""
-    import petasearch_spark.streaming.stateful as st
+    import petasearch_spark.storage as st
     from petasearch_spark.sources.csv_events import _stage_events_csv
 
     calls = []

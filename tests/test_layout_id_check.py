@@ -125,7 +125,7 @@ def test_a_repeated_id_is_refused_in_a_delta_and_in_a_base(spark, tmp_path):
         append_sharded_layout(spark, root, twice)
     assert not isinstance(exc.value, SeqIdCollision)
     assert list_layout_generations(root) == gens
-    assert not glob.glob(root + "/.delta_build*")
+    assert not glob.glob(root + "/.delta.build*")
     fetched, residues = read_layout_store_pruned(spark, root, [5000, 77])
     assert fetched.count() == 0 and residues == 6 * 60
 
@@ -133,7 +133,7 @@ def test_a_repeated_id_is_refused_in_a_delta_and_in_a_base(spark, tmp_path):
     with pytest.raises(ValueError, match="seq_id 5000 appears 2 times"):
         write_sharded_layout(twice, other, num_shards=8, k=_K, alphabet=_ALPHA)
     assert not os.path.exists(other)
-    assert not [n for n in os.listdir(tmp_path) if ".compact" in n]
+    assert not [n for n in os.listdir(tmp_path) if ".build" in n]
 
 
 def test_rewriting_a_root_supersedes_its_generations(spark, tmp_path):
@@ -147,7 +147,7 @@ def test_rewriting_a_root_supersedes_its_generations(spark, tmp_path):
             _seqs(spark, range(50, 56), 33), root, num_shards=8, k=_K, alphabet=_ALPHA
         )
     assert list_layout_generations(grown) == [grown]
-    assert not [n for n in os.listdir(tmp_path) if ".compact" in n or ".old" in n]
+    assert not [n for n in os.listdir(tmp_path) if ".build" in n or ".old" in n]
 
     probe = extract_query_kmers(_seqs(spark, range(40, 56), 0), k=_K, alphabet=_ALPHA)
     got, want = (

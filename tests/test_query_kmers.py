@@ -165,7 +165,10 @@ def test_shard_lists_cover_every_modulus_in_one_collect(spark, tmp_path, monkeyp
     root = str(tmp_path / "layout")
     write_sharded_layout(seqs(range(8)), root, num_shards=16, k=k, alphabet=alpha)
     append_sharded_layout(spark, root, seqs([100, 101]))  # auto-sized: 1 shard
-    append_sharded_layout(spark, root, seqs([200, 201]), num_shards=4)
+    # a generation at a third modulus, as a bulk delta could carry
+    bulk = str(tmp_path / "bulk")
+    write_sharded_layout(seqs([200, 201]), bulk, num_shards=4, k=k, alphabet=alpha)
+    os.rename(bulk, os.path.join(root, "delta_00002"))
     moduli = sorted(
         int(read_kmer_index_meta(spark, os.path.join(g, "index"))["num_shards"])
         for g in kmer_index.list_layout_generations(root)

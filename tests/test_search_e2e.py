@@ -244,3 +244,27 @@ def test_multi_target_rejects_unknown_kwargs(fn, args, kw):
     every entry point, before any Spark work (the inputs here are None)."""
     with pytest.raises(TypeError, match=next(iter(kw))):
         fn(*args, **kw)
+
+
+def test_searchindex_refuses_a_range_index_built_with_another_k(spark, tmp_path):
+    """A range index built with --k 7 and searched with the default k=9
+    joined on incompatible k-mer codes: 0 rows and exit 0. Its sidecar
+    now records k and the search refuses, as for a sharded layout; the
+    same k searches it, and an index without a sidecar reads unchecked."""
+    import os
+    import shutil
+
+    from petasearch_spark.cli import main
+
+    data = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+    queries = os.path.join(data, "golden_queries.fa")
+    targets = os.path.join(data, "golden_targets.fa")
+    idx = str(tmp_path / "idx7")
+    assert main(["createindex", targets, idx, "--k", "7"]) == 0
+    with pytest.raises(ValueError, match="k=7"):
+        main(["searchindex", queries, idx, targets, str(tmp_path / "out9")])
+    assert main(["searchindex", queries, idx, targets, str(tmp_path / "out7"), "--k", "7"]) == 0
+    assert spark.read.csv(str(tmp_path / "out7"), sep="\t").count() > 0
+
+    shutil.rmtree(os.path.join(idx, "_ps_meta"))
+    assert main(["searchindex", queries, idx, targets, str(tmp_path / "bare")]) == 0

@@ -158,8 +158,8 @@ def test_append_claims_next_slot_and_empty_is_noop(spark, tmp_path):
     # empty delta: no generation written, None returned
     assert append_sharded_layout(spark, root, _seqs(spark, []).filter("seq_id > 0")) is None
     assert list_layout_generations(root) == [root, g1, g2]
-    # no .delta_build staging debris either way
-    assert not [n for n in os.listdir(root) if n.startswith(".delta_build")]
+    # no .delta.build staging debris either way
+    assert not [n for n in os.listdir(root) if n.startswith(".delta.build")]
 
 
 def test_append_refuses_duplicate_seq_ids(spark, tmp_path):
@@ -177,7 +177,7 @@ def test_append_refuses_duplicate_seq_ids(spark, tmp_path):
         append_sharded_layout(spark, root, _seqs(spark, _rand_rows(13, [200, 201, 3])))
     # a failed append leaves no generation and no staging debris
     assert [os.path.basename(g) for g in list_layout_generations(root)[1:]] == ["delta_00001"]
-    assert not [n for n in os.listdir(root) if n.startswith(".delta_build")]
+    assert not [n for n in os.listdir(root) if n.startswith(".delta.build")]
 
 
 def test_append_refuses_metaless_legacy_layout(spark, tmp_path):
@@ -221,7 +221,7 @@ def test_compaction_folds_and_preserves_answers(spark, tmp_path):
     assert compact_sharded_layout(spark, root) == 0
     # no swap debris
     parent = os.path.dirname(root)
-    assert not [n for n in os.listdir(parent) if ".compact" in n or ".old" in n]
+    assert not [n for n in os.listdir(parent) if ".build" in n or ".old" in n]
 
 
 def test_swap_crash_recovery_restores_layout(spark, tmp_path):
@@ -304,7 +304,7 @@ def test_compaction_adopts_concurrently_published_generation(spark, tmp_path, mo
         # after compaction finishes building its sibling's store (the
         # last fold step before the swap), a rival appender publishes —
         # exactly the window whose data the old cleanup destroyed
-        if ".compact" in path and not state["fired"]:
+        if f"{root}.build" in path and not state["fired"]:
             state["fired"] = True
             monkeypatch.setattr(ki, "write_sequence_store_sharded", real_write)
             append_sharded_layout(spark, root, _seqs(spark, late_rows))
@@ -318,7 +318,7 @@ def test_compaction_adopts_concurrently_published_generation(spark, tmp_path, mo
     assert {r["seq_id"] for r in fetched.collect()} == {40, 41}
     # no swap debris
     parent = os.path.dirname(root)
-    assert not [n for n in os.listdir(parent) if ".compact" in n or ".old" in n]
+    assert not [n for n in os.listdir(parent) if ".build" in n or ".old" in n]
 
 
 def test_append_rival_collision_higher_slot_aborts(spark, tmp_path, monkeypatch):
@@ -354,14 +354,14 @@ def test_append_rival_collision_higher_slot_aborts(spark, tmp_path, monkeypatch)
 
 
 def test_dead_pid_delta_build_debris_is_swept(spark, tmp_path):
-    """A SIGKILLed append's half-written .delta_build<pid> staging used
+    """A SIGKILLed append's half-written .delta.build<pid> staging used
     to leak forever (invisible to readers, never reaped). The recovery
     sweep now removes dead-pid staging on any listing."""
     root = str(tmp_path / "root")
     write_sharded_layout(_seqs(spark, _rand_rows(66, range(3))), root, num_shards=8, k=_K, alphabet=_ALPHA)
-    debris = os.path.join(root, ".delta_build2000000000")
+    debris = os.path.join(root, ".delta.build2000000000")
     os.makedirs(os.path.join(debris, "index"))
-    live = os.path.join(root, f".delta_build{os.getpid()}")
+    live = os.path.join(root, f".delta.build{os.getpid()}")
     os.makedirs(live)  # own-pid staging must NOT be swept
     assert list_layout_generations(root) == [root]
     assert not os.path.exists(debris)
@@ -461,10 +461,3 @@ def test_append_auto_sizes_generation_fanout(spark, tmp_path):
         map(tuple, _probe_all(spark, rebuilt, probe, only_probe_kmers=True).collect())
     )
     assert got == want and len(got) > 0
-    # an explicit override wins
-    gen2 = append_sharded_layout(
-        spark, grown, _seqs(spark, _rand_rows(32, [200, 201])), num_shards=4
-    )
-    assert (
-        int(read_kmer_index_meta(spark, os.path.join(gen2, "index"))["num_shards"]) == 4
-    )

@@ -11,7 +11,7 @@ import time
 
 
 def _worker(root: str, q) -> None:
-    from petasearch_spark.streaming.stateful import staged_cache
+    from petasearch_spark.storage import staged_cache
 
     def build(tmp: str) -> None:
         # two files written with a sleep between them: a process that
@@ -51,7 +51,7 @@ def test_concurrent_processes_both_get_complete_dir(tmp_path):
 
 
 def test_existing_dir_is_trusted_without_rebuild(tmp_path):
-    from petasearch_spark.streaming.stateful import staged_cache
+    from petasearch_spark.storage import staged_cache
 
     root = str(tmp_path / "key")
     calls = []
@@ -73,7 +73,7 @@ def test_ttl_sweep_removes_stale_sibling_keys(tmp_path):
     prefixes, and reap .build debris of dead pids regardless of age."""
     import time
 
-    from petasearch_spark.streaming.stateful import STAGING_TTL_DAYS, staged_cache
+    from petasearch_spark.storage import STAGING_TTL_DAYS, staged_cache
 
     old = time.time() - (STAGING_TTL_DAYS + 1) * 86400
     stale = tmp_path / "ps_stage2b_aaaaaaaaaaaa"
@@ -101,7 +101,7 @@ def test_ttl_sweep_refreshes_mtime_on_reclaim(tmp_path):
     horizon: every cache-hit claim refreshes the published dir's mtime."""
     import time
 
-    from petasearch_spark.streaming.stateful import STAGING_TTL_DAYS, staged_cache
+    from petasearch_spark.storage import STAGING_TTL_DAYS, staged_cache
 
     root = str(tmp_path / "ps_stage2b_ffffffffffff")
     staged_cache(root, lambda tmp: open(os.path.join(tmp, "y"), "w").close())
@@ -122,7 +122,7 @@ def test_sweep_reaps_dead_pid_debris_of_the_current_key(tmp_path):
     same-key guard fired before the pid check, and cache hits return
     early) — it must be reaped like any other dead-pid debris. Only the
     live ROOT of the key is exempt."""
-    from petasearch_spark.streaming.stateful import staged_cache
+    from petasearch_spark.storage import staged_cache
 
     root = str(tmp_path / "ps_stage2b_abcdefabcdef")
     staged_cache(root, lambda tmp: open(os.path.join(tmp, "y"), "w").close())
