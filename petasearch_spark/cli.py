@@ -424,6 +424,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from petasearch_spark.sources.m8 import write_m8
     from petasearch_spark.sources.targetlist import load_target
+    from petasearch_spark.storage import recover, swap_in
 
     if args.cmd == "createdb":
         # the reference's convert2sradb: ingest once, scan many times.
@@ -434,7 +435,10 @@ def main(argv: list[str] | None = None) -> int:
             seqs = read_fastq_paired(spark, args.input_fasta, args.paired)
         else:
             seqs = load_target(spark, args.input_fasta)
-        seqs.write.mode("overwrite").option("compression", "zstd").parquet(args.db_dir)
+        swap_in(
+            args.db_dir,
+            lambda tmp: seqs.write.mode("overwrite").option("compression", "zstd").parquet(tmp),
+        )
         print(json.dumps({"db": args.db_dir, "n_sequences": spark.read.parquet(args.db_dir).count()}))
         return 0
 
@@ -459,9 +463,12 @@ def main(argv: list[str] | None = None) -> int:
                 alphabet=alpha,
             )
         else:
-            write_kmer_index(
-                build_kmer_index(seqs, k=args.k, alphabet=alpha), args.index_dir,
-                k=args.k, alphabet=alpha,
+            # staged and swapped in: a failed rebuild leaves the old
+            # index and its k/alphabet sidecar as they were
+            index = build_kmer_index(seqs, k=args.k, alphabet=alpha)
+            swap_in(
+                args.index_dir,
+                lambda tmp: write_kmer_index(index, tmp, k=args.k, alphabet=alpha),
             )
         print(json.dumps({"index": args.index_dir, "k": args.k, "layout": args.layout}))
         return 0
@@ -521,6 +528,7 @@ def main(argv: list[str] | None = None) -> int:
         from petasearch_spark.operators.kmer_index import is_sharded_layout, read_kmer_index_meta
         from petasearch_spark.plans.search import SearchKnobs, check_index_params
 
+        recover(args.index_dir)  # a createindex killed between its two renames
         if is_sharded_layout(args.index_dir):
             # interactive layout: index scan AND sequence fetch pruned to
             # the query; e-values from the store's corpus-total sidecar

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petasearch_spark.functions.localframe import literal_df
@@ -171,6 +171,12 @@ def derived_sequences(docs: DataFrame) -> DataFrame:
     )
 
 
+def _protein_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived sequences of ``sf_dir``'s documents, without ``source``:
+    the corpus every protein entry searches."""
+    return derived_sequences(load_table(spark, "documents", sf_dir, widen_scan=True)).drop("source")
+
+
 DERIVED_SEQ_SQL = f"""
     seqs AS (
         SELECT doc_id AS seq_id,
@@ -223,8 +229,7 @@ def _protein_prefilter_inputs(spark: SparkSession, sf_dir: str):
     (build_kmer_index). Returns (queries, query k-mers, index)."""
     from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     return queries, extract_query_kmers(queries), build_kmer_index(seqs)
 
@@ -380,8 +385,7 @@ def protein_prefilter_bucketed_build(spark: SparkSession, sf_dir: str) -> DataFr
         write_query_kmers_bucketed,
     )
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     write_kmer_index_bucketed(build_kmer_index(seqs), "ps_bench_index_b")
     write_query_kmers_bucketed(extract_query_kmers(queries), "ps_bench_qk_b")
@@ -438,23 +442,17 @@ def _sharded_index_path(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"ps_sharded_idx_{fp}")
 
 
-def _build_sharded_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Write the interactive layout (kmer_index.write_sharded_layout)
-    over the derived-sequences corpus."""
-    from petasearch_spark.operators.kmer_index import write_sharded_layout
-
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    write_sharded_layout(derived_sequences(docs).drop("source"), out_dir)
-
-
 def _ensure_sharded_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Return the published layout root, building it first if absent —
-    via :func:`storage.staged_cache`, so a reader can never observe a
-    half-written layout (ADVICE r9: the old bare isdir admission raced a
-    concurrent mode=overwrite build)."""
+    """Return the published layout root, building it first if absent:
+    kmer_index.write_sharded_base writes the derived-sequences corpus
+    into :func:`storage.staged_cache`'s staging directory, so a reader
+    can never observe a half-written layout (ADVICE r9: the old bare
+    isdir admission raced a concurrent mode=overwrite build)."""
+    from petasearch_spark.operators.kmer_index import write_sharded_base
+
     return staged_cache(
         _sharded_index_path(sf_dir),
-        lambda tmp: _build_sharded_layout(spark, sf_dir, tmp),
+        lambda tmp: write_sharded_base(_protein_corpus(spark, sf_dir), tmp),
     )
 
 
@@ -468,12 +466,15 @@ def protein_prefilter_sharded_build(spark: SparkSession, sf_dir: str) -> DataFra
     sharded = I/O proportional to the QUERY for small/interactive ones
     (the reference's own headline use-case — a few proteins against a
     huge SRA index, README.md:1-3). As a bench entry (k125) this ALWAYS
-    performs the full write — staged_cache(force_build=True), published
-    only if no complete layout is live, so the timing stays honest and
+    performs the full write — kmer_index.write_sharded_base into
+    staged_cache(force_build=True)'s staging directory, published only
+    if no complete layout is live, so the timing stays honest and
     concurrent readers never see a torn overwrite (ADVICE r9)."""
+    from petasearch_spark.operators.kmer_index import write_sharded_base
+
     root = staged_cache(
         _sharded_index_path(sf_dir),
-        lambda tmp: _build_sharded_layout(spark, sf_dir, tmp),
+        lambda tmp: write_sharded_base(_protein_corpus(spark, sf_dir), tmp),
         force_build=True,
     )
     return literal_df(spark, [(root,)], "path string")
@@ -512,8 +513,7 @@ def protein_prefilter_sharded_query(spark: SparkSession, sf_dir: str) -> DataFra
     from petasearch_spark.operators.kmer_index import extract_query_kmers
 
     root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _protein_corpus(spark, sf_dir)
     qk = extract_query_kmers(seqs.filter(F.col("seq_id") % 20 == 0))
     return _sharded_pruned_pairs(spark, root, qk).orderBy("query_id", "target_id")
 
@@ -526,8 +526,7 @@ def protein_prefilter_sharded_probe1(spark: SparkSession, sf_dir: str) -> DataFr
     from petasearch_spark.operators.kmer_index import extract_query_kmers
 
     root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _protein_corpus(spark, sf_dir)
     qk = extract_query_kmers(seqs.filter(F.col("seq_id") == 0))
     return _sharded_pruned_pairs(spark, root, qk).orderBy("query_id", "target_id")
 
@@ -560,8 +559,7 @@ def _sharded_search(spark: SparkSession, sf_dir: str, query_pred) -> DataFrame:
     Output schema + ordering match protein_search (the batch flagship),
     whose oracle the registry entry shares."""
     root = _ensure_sharded_layout(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _protein_corpus(spark, sf_dir)
     # the query side IS the user's input in the interactive case — tiny
     # by definition; here it is carved out of the corpus so the result
     # is comparable to the batch flagship
@@ -608,12 +606,6 @@ def protein_search_sharded_probe1(spark: SparkSession, sf_dir: str) -> DataFrame
     return _sharded_search(spark, sf_dir, F.col("seq_id") == 0)
 
 
-#: the delta twin's corpus split: base = seq_id % 5 != 4 (~80%), one
-#: appended generation carries the rest — together exactly the full
-#: corpus, so the probe must reproduce protein_search verbatim
-_DELTA_SPLIT_MOD, _DELTA_SPLIT_REM = 5, 4
-
-
 def _sharded_delta_root(sf_dir: str) -> str:
     """Content-keyed staging root for the GROWN layout (base + one
     appended delta generation) — its own key, so the no-delta layout the
@@ -625,19 +617,30 @@ def _sharded_delta_root(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"ps_sharded_delta_{fp}")
 
 
-def _build_sharded_delta_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """base layout over ~80% of the corpus, then ONE append folds in the
-    remaining ~20% as a delta generation — the grown-corpus lifecycle
-    (write -> append) exercised end to end at build time."""
-    from petasearch_spark.operators.kmer_index import (
-        append_sharded_layout,
-        write_sharded_layout,
-    )
+def _write_grown_base(
+    spark: SparkSession, sf_dir: str, out_dir: str
+) -> tuple[DataFrame, Column]:
+    """Write the base of a layout grown by arrivals into ``out_dir``
+    (kmer_index.write_sharded_base): the derived-sequences corpus minus
+    the ~20% with ``seq_id % 5 == 4``, which arrive later. Returns the
+    corpus and that arrival predicate for the caller's appends: base and
+    arrivals are together exactly the corpus, so a probe of the grown
+    layout must reproduce protein_search verbatim."""
+    from petasearch_spark.operators.kmer_index import write_sharded_base
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
-    arrived = F.col("seq_id") % _DELTA_SPLIT_MOD == _DELTA_SPLIT_REM
-    write_sharded_layout(seqs.filter(~arrived), out_dir)
+    seqs = _protein_corpus(spark, sf_dir)
+    arrived = F.col("seq_id") % 5 == 4
+    write_sharded_base(seqs.filter(~arrived), out_dir)
+    return seqs, arrived
+
+
+def _build_sharded_delta_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+    """The grown base (:func:`_write_grown_base`), then ONE append folds in
+    the remaining ~20% as a delta generation — the grown-corpus
+    lifecycle (write -> append) exercised end to end at build time."""
+    from petasearch_spark.operators.kmer_index import append_sharded_layout
+
+    seqs, arrived = _write_grown_base(spark, sf_dir, out_dir)
     append_sharded_layout(spark, out_dir, seqs.filter(arrived))
 
 
@@ -658,8 +661,7 @@ def protein_search_sharded_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sharded_delta_root(sf_dir),
         lambda tmp: _build_sharded_delta_layout(spark, sf_dir, tmp),
     )
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _protein_corpus(spark, sf_dir)
     return sharded_search_queries(
         spark, sf_dir, seqs.filter(F.col("seq_id") % 20 == 0), root=root
     )
@@ -681,8 +683,7 @@ def _expanded_prefilter(spark: SparkSession, sf_dir: str, compo_bias: bool) -> D
     from petasearch_spark.operators.prefilter import prefilter_counts
     from petasearch_spark.plans.search import SearchKnobs, build_query_kmers
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     eqk = build_query_kmers(
         seqs.filter(F.col("seq_id") % 100 == 0),
         SearchKnobs(expand_similar=True, compo_bias=compo_bias),
@@ -773,8 +774,7 @@ def protein_ungapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.operators.kmer_index import build_kmer_index, extract_query_kmers
     from petasearch_spark.operators.prefilter import prefilter_grouped
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     # fused grouped form (round 11): the rescore kernel consumes per-pair
     # k-mer lists and sorts diagonals internally — no window sort upstream;
@@ -916,12 +916,11 @@ def protein_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SW."""
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
     # the sequences table feeds index build, query k-mer extraction, both
     # alignment fetch joins AND the db-residue count — persist so the
     # regexp derivation runs once (at real scale this table is a parquet
     # ingest artifact, persisted by definition)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     res = search(queries, seqs)
     # drop the self-hit-dominated float columns that are stable but bulky
@@ -955,8 +954,7 @@ def protein_search_masked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.operators.align import DEFAULT_XDROP
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     res = search(queries, seqs, mask=True, xdrop=DEFAULT_XDROP)
     return res.select(*SEARCH_INT_COLS)
@@ -1040,8 +1038,7 @@ def protein_search_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is independently verified by protein_expand_prefilter."""
     from petasearch_spark.plans.search import search
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 100 == 0)
     res = search(queries, seqs, expand_similar=True)
     return res.select(*SEARCH_INT_COLS)
@@ -1079,8 +1076,7 @@ def _ensure_search_index(spark: SparkSession, sf_dir: str, force_build: bool = F
         write_kmer_index,
     )
     def build(tmp: str) -> None:
-        docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-        write_kmer_index(build_kmer_index(derived_sequences(docs).drop("source")), tmp)
+        write_kmer_index(build_kmer_index(_protein_corpus(spark, sf_dir)), tmp)
 
     return staged_cache(_search_index_path(sf_dir), build, force_build=force_build)
 
@@ -1106,8 +1102,7 @@ def protein_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petasearch_spark.plans.search import search
 
     path = _ensure_search_index(spark, sf_dir)
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 20 == 0)
     res = search(queries, seqs, target_index=spark.read.parquet(path))
     return res.select(*SEARCH_INT_COLS)
@@ -1127,8 +1122,7 @@ def protein_search_multi_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 100th doc, matching protein_search_expanded."""
     from petasearch_spark.plans.search import search_multi_target
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 100 == 0)
     targets = [seqs.filter(F.col("seq_id") % 3 == i) for i in range(3)]
     res = search_multi_target(queries, targets, expand_similar=True)
@@ -1145,8 +1139,7 @@ def protein_search_multi_target_maxseqs(spark: SparkSession, sf_dir: str) -> Dat
     tests/test_search_e2e.py."""
     from petasearch_spark.plans.search import search_multi_target
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source").persist()
+    seqs = _protein_corpus(spark, sf_dir).persist()
     queries = seqs.filter(F.col("seq_id") % 100 == 0)
     targets = [seqs.filter(F.col("seq_id") % 3 == i) for i in range(3)]
     res = search_multi_target(queries, targets, expand_similar=True, max_seqs=5)

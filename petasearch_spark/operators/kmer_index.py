@@ -412,8 +412,8 @@ def write_sequence_store_sharded(
     (reference keeps it in the DB header); computing it at query time
     from a pruned fetch would skew e-values, and from the full store
     would defeat the prune — and ``max_seq_id``, so an APPEND can
-    auto-offset fresh ids in O(generations) sidecar reads. The caller
-    passes both (:func:`_admit`, or compaction's generation sidecars)."""
+    auto-offset fresh ids in O(generations) sidecar reads. Both come
+    from :func:`_write_generation`'s ``admit``."""
     spark = seqs.sparkSession
     (
         seqs.withColumn("sshard", F.pmod(F.col("seq_id"), F.lit(num_shards)).cast("int"))
@@ -436,20 +436,30 @@ def write_sharded_layout(
     seqs: DataFrame, root: str, num_shards: int = DEFAULT_NUM_SHARDS, k: int = DEFAULT_K,
     alphabet: str = AMINO_ALPHABET,
 ) -> None:
-    """Write ``seqs`` as a fresh interactive layout at ``root``: the
-    kmer-sharded index (``index/``) and the seq_id-sharded sequence
+    """Write ``seqs`` as a fresh interactive layout (:func:`write_sharded_base`)
+    and publish it at ``root`` by :func:`storage.swap_in`: the whole root
+    is replaced, so an old layout's delta generations are superseded with
+    it."""
+    swap_in(root, lambda tmp: write_sharded_base(seqs, tmp, num_shards, k, alphabet))
+
+
+def write_sharded_base(
+    seqs: DataFrame, out_dir: str, num_shards: int = DEFAULT_NUM_SHARDS, k: int = DEFAULT_K,
+    alphabet: str = AMINO_ALPHABET,
+) -> None:
+    """Write ``seqs`` as a base layout into the empty directory ``out_dir``:
+    the kmer-sharded index (``index/``) and the seq_id-sharded sequence
     store (``seqs/``, round 10 — carries db_residues for e-value parity
     with the full-scan path). One persisted pass over ``seqs`` feeds the
-    admission (:func:`_admit`) and both halves. The whole root is
-    replaced (:func:`storage.swap_in`): an old layout's delta generations
-    are superseded with it."""
+    admission (:func:`_admit`) and both halves. Nothing is published:
+    the caller hands in a staging directory and picks the verb
+    (:mod:`petasearch_spark.storage`)."""
     seqs = seqs.persist()
     try:
-        admitted = _admit(seqs)
-        swap_in(root, lambda tmp: _write_generation(
-            tmp, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
-            num_shards, num_shards, k, alphabet, admitted,
-        ))
+        _write_generation(
+            out_dir, build_kmer_index(seqs, k=k, alphabet=alphabet), seqs,
+            num_shards, num_shards, k, alphabet, lambda: _admit(seqs),
+        )
     finally:
         seqs.unpersist()
 
@@ -481,30 +491,30 @@ def _admit(seqs: DataFrame, moduli=()) -> Row:
 
 def _write_generation(
     root: str, index: DataFrame, seqs: DataFrame, idx_shards: int,
-    seq_shards: int, k: int | None, alphabet: str | None, stats: Row,
+    seq_shards: int, k: int | None, alphabet: str | None, admit,
 ) -> None:
-    """Write one generation of the interactive layout under ``root`` — a base
-    (write_sharded_layout, compact_sharded_layout) or a delta
-    (append_sharded_layout): ``index`` as the kmer-sharded ``index/`` and
-    ``seqs`` as the seq_id-sharded store ``seqs/``, each with its sidecar
-    (``stats`` gives the store's ``residues`` and ``max_seq_id``). The two
-    writes are INDEPENDENT jobs; submitted from a 2-thread pool they overlap
-    (guide §2.6 — the store write's tasks back-fill executors freed by the
-    index job's shuffle tail instead of waiting for it to drain). Job
-    descriptions are thread-local, so each stays labelled. Both outcomes
-    surface, and only after the pool has drained, so no half-running write
-    is abandoned behind a propagating exception."""
+    """Write one generation of the interactive layout into the directory
+    ``root`` and publish nothing — a base (write_sharded_base,
+    compact_sharded_layout) or a delta (append_sharded_layout): ``index``
+    as the kmer-sharded ``index/`` and ``seqs`` as the seq_id-sharded
+    store ``seqs/``, each with its sidecar. The two writes are
+    INDEPENDENT jobs submitted from a 2-thread pool, so they overlap
+    (guide §2.6). ``admit()`` returns the store's ``residues`` and
+    ``max_seq_id`` or raises to refuse ``seqs``; it runs beside the index
+    write, and only the store write waits for it. Job descriptions are
+    thread-local, so each stays labelled. Every outcome surfaces only
+    after the pool has drained, so no half-running write is abandoned
+    behind a propagating exception."""
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [
-            pool.submit(
-                write_kmer_index_sharded, index, os.path.join(root, "index"),
-                num_shards=idx_shards, k=k, alphabet=alphabet,
-            ),
-            pool.submit(
-                write_sequence_store_sharded, seqs, os.path.join(root, "seqs"),
-                seq_shards, stats["residues"], stats["max_seq_id"],
-            ),
-        ]
+        futures = [pool.submit(
+            write_kmer_index_sharded, index, os.path.join(root, "index"),
+            num_shards=idx_shards, k=k, alphabet=alphabet,
+        )]
+        stats = admit()
+        futures.append(pool.submit(
+            write_sequence_store_sharded, seqs, os.path.join(root, "seqs"),
+            seq_shards, stats["residues"], stats["max_seq_id"],
+        ))
     for f in futures:
         f.result()
 
@@ -925,7 +935,7 @@ def append_sharded_layout(
         k, alphabet = idx_meta["k"], idx_meta["alphabet"]
         tmp = build_staged(os.path.join(root, _DELTA_STAGE), lambda tmp: _write_generation(
             tmp, build_kmer_index(new_seqs, k=k, alphabet=alphabet), new_seqs,
-            idx_shards, seq_shards, k, alphabet, admitted,
+            idx_shards, seq_shards, k, alphabet, lambda: admitted,
         ))
         try:
             target = _claim_slot(tmp, root, max(map(_slot_number, gens[1:]), default=0) + 1)
@@ -1006,7 +1016,7 @@ def compact_sharded_layout(spark, root: str) -> int:
     swap_in(root, lambda tmp: _write_generation(
         tmp, aggregate_kmer_index(_read_generations(spark, gens, "index")),
         _read_generations(spark, gens, "seqs"), idx_meta["num_shards"],
-        store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"], stats,
+        store_meta["num_shards"], idx_meta["k"], idx_meta["alphabet"], lambda: stats,
     ), adopt=adopt)
     return len(gens) - 1
 

@@ -7,9 +7,12 @@ into the sibling ``<path>.build<pid>`` (:func:`build_staged`), which is
 removed if the build raises, and then published by ``os.rename``, so a
 reader sees a complete directory or none. The pid in the name makes the
 staging private to its builder, and tells a later process whether the
-builder is gone (:func:`pid_is_dead`).
+builder is gone (:func:`pid_is_dead`). A staging directory is never
+staged again: no reaper recognises a nested ``.build<pid>.build<pid>``
+name, so :func:`build_staged` refuses one.
 
-Two publish verbs over that one build:
+Builders write into the directory they are handed and never publish;
+the caller picks one of the two publish verbs over that one build:
 
 * :func:`staged_cache` claims ``path`` only if it is absent: the first
   complete build wins and a later one is discarded. Content-keyed caches
@@ -18,7 +21,8 @@ Two publish verbs over that one build:
 * :func:`swap_in` replaces whatever is at ``path`` with two renames:
   ``path`` -> ``path.old<pid>``, then the staging -> ``path``; then the
   old copy is deleted. Rebuilds use it (a sharded layout's write and
-  compaction, the IVF recluster).
+  compaction, the IVF recluster, the CLI's ``createdb`` and range
+  ``createindex``).
 
 Recovery. A process killed between the two renames of :func:`swap_in`
 leaves the live copy only at ``path.old<pid>``. :func:`recover`, run by
@@ -79,9 +83,16 @@ def reap_staging(path: str) -> None:
     reap_dead(f"{path}.build")
 
 
+_STAGING_RE = re.compile(r"\.build\d+$")
+
+
 def build_staged(path: str, build) -> str:
     """Run ``build(tmp)`` on a fresh, empty ``<path>.build<pid>`` and
-    return it; the staging is removed if ``build`` raises."""
+    return it; the staging is removed if ``build`` raises. A ``path``
+    that is itself a staging directory raises ValueError before anything
+    is created."""
+    if _STAGING_RE.search(os.path.basename(os.path.normpath(path))):
+        raise ValueError(f"{path} is a staging directory: build into it, do not stage it again")
     tmp = f"{path}.build{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)

@@ -33,6 +33,12 @@ auto-sized to the batch (LSM L0), and an id check that reads only the
 rescans the corpus; compaction (compact_sharded_layout) is the
 scheduled maintenance job that bounds generation count, like the IVF
 recluster loop (operators/ivf.py).
+
+Publication: the registered twin runs the whole lifecycle (base write,
+then every batch's append) inside the one staging directory that
+storage.staged_cache hands its build, and nothing in it publishes by
+itself, so the grown layout appears under its cache key whole or not at
+all, and a killed build leaves only debris the cache's reaper knows.
 """
 
 from __future__ import annotations
@@ -70,30 +76,19 @@ def _ingest_root(sf_dir: str) -> str:
 
 
 def _build_ingested_layout(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """The ingest lifecycle, run end to end: base layout over the ~80%
-    already-indexed corpus, then the remaining ~20% arrives as a real
-    2-file parquet stream (maxFilesPerTrigger=1 -> >=2 micro-batches)
-    folded by foreachBatch appends."""
-    from petasearch_spark.operators.doc_search import (
-        _DELTA_SPLIT_MOD,
-        _DELTA_SPLIT_REM,
-        derived_sequences,
-        load_table,
-    )
-    from petasearch_spark.operators.kmer_index import write_sharded_layout
+    """The ingest lifecycle, run end to end in ``out_dir``: the grown base
+    (doc_search._write_grown_base, ~80% of the corpus), then the
+    remaining ~20% arrives as a real 2-file parquet stream
+    (maxFilesPerTrigger=1 -> >=2 micro-batches) folded by foreachBatch
+    appends."""
+    from petasearch_spark.operators.doc_search import _write_grown_base, derived_sequences
     from petasearch_spark.streaming.stateful import _stage_two_files, run_replay
 
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
-    arrived = F.col("seq_id") % _DELTA_SPLIT_MOD == _DELTA_SPLIT_REM
-    write_sharded_layout(seqs.filter(~arrived), out_dir)
-
+    _, arrived = _write_grown_base(spark, sf_dir, out_dir)
     staged = _stage_two_files(spark, os.path.join(sf_dir, "documents.parquet"), "doc_id")
 
     def fold(batch_docs: DataFrame, _batch_id: int) -> None:
-        batch = (
-            derived_sequences(batch_docs).drop("source").filter(arrived)
-        )
+        batch = derived_sequences(batch_docs).drop("source").filter(arrived)
         fold_batch_into_layout(spark, out_dir, batch)
 
     stream = (
@@ -114,19 +109,14 @@ def protein_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging build (the _ensure_sharded_layout convention), so repeated
     gate/bench runs probe the published artifact instead of re-growing
     it."""
-    from petasearch_spark.operators.doc_search import (
-        derived_sequences,
-        load_table,
-        sharded_search_queries,
-    )
+    from petasearch_spark.operators.doc_search import _protein_corpus, sharded_search_queries
     from petasearch_spark.storage import staged_cache
 
     root = staged_cache(
         _ingest_root(sf_dir),
         lambda tmp: _build_ingested_layout(spark, sf_dir, tmp),
     )
-    docs = load_table(spark, "documents", sf_dir, widen_scan=True)
-    seqs = derived_sequences(docs).drop("source")
+    seqs = _protein_corpus(spark, sf_dir)
     return sharded_search_queries(
         spark, sf_dir, seqs.filter(F.col("seq_id") % 20 == 0), root=root
     )

@@ -1,11 +1,11 @@
-"""The sharded layout's admission laws on the fast tier (the full
-tests/test_sharded_delta.py suite is ``slow``): an append whose ids
+"""The sharded layout's admission and staging laws: an append whose ids
 already live in the layout is refused, naming the generation that holds
 them, whether the clash is with the base, with a delta, or one id among
 more than 2,000 new ones; a delta or a base that repeats an id is
 refused; a rebuilt root keeps none of its old generations; the store
-files stay ``seq_id``-sorted and the index files ``kmer``-sorted; and neither an append's admission nor a probe's
-index read costs more Spark work as generations accumulate."""
+files stay ``seq_id``-sorted and the index files ``kmer``-sorted; neither an append's admission nor a probe's
+index read costs more Spark work as generations accumulate; and a bench
+cache's layout is built inside one reapable staging directory."""
 
 from __future__ import annotations
 
@@ -196,3 +196,32 @@ def test_index_files_are_kmer_sorted(spark, tmp_path):
         _seqs(spark, ids, 44).repartition(3), root, num_shards=16, k=_K, alphabet=_ALPHA
     )
     _assert_files_sorted(os.path.join(root, "index", "kshard=*"), "kmer", 16)
+
+
+def test_cache_builder_writes_inside_one_reapable_staging_dir(spark, tmp_path, monkeypatch):
+    """A bench cache's layout is written straight into the staging
+    directory ``staged_cache`` hands its build, ``<root>.build<pid>``,
+    never into a second staging nested inside that name; so the debris
+    of a builder killed mid-write is reaped by the next claim."""
+    from petasearch_spark.operators import doc_search, kmer_index
+
+    root = str(tmp_path / "ps_sharded_idx_0123456789ab")
+    monkeypatch.setattr(doc_search, "_sharded_index_path", lambda sf: root)
+    handed = []
+    real = kmer_index.write_kmer_index_sharded
+
+    def recording(index, path, *args, **kwargs):
+        handed.append(path)
+        return real(index, path, *args, **kwargs)
+
+    monkeypatch.setattr(kmer_index, "write_kmer_index_sharded", recording)
+    assert doc_search._ensure_sharded_layout(spark, "/root/testdata/sf0.001") == root
+    [path] = handed
+    top = os.path.dirname(path)
+    assert top == f"{root}.build{os.getpid()}", top
+
+    dead = top.removesuffix(str(os.getpid())) + "2000000000"  # beyond pid_max
+    os.makedirs(os.path.join(dead, "index"))
+    assert doc_search._ensure_sharded_layout(spark, "/root/testdata/sf0.001") == root
+    assert len(handed) == 1  # a cache hit: no rebuild
+    assert sorted(os.listdir(tmp_path)) == [os.path.basename(root)]

@@ -268,3 +268,37 @@ def test_searchindex_refuses_a_range_index_built_with_another_k(spark, tmp_path)
 
     shutil.rmtree(os.path.join(idx, "_ps_meta"))
     assert main(["searchindex", queries, idx, targets, str(tmp_path / "bare")]) == 0
+
+
+def test_a_failed_range_createindex_keeps_the_old_index(spark, tmp_path, monkeypatch):
+    """A range createindex rebuild that dies after writing its data but
+    before its sidecar used to leave, in place of the old index, a
+    sidecar-less one that searchindex read unchecked with exit 0. The
+    rebuild is staged and swapped in, so the old index and its k=7
+    sidecar survive, and a k=9 search is still refused."""
+    import os
+
+    from petasearch_spark.cli import main
+    from petasearch_spark.operators import kmer_index
+
+    data = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+    queries = os.path.join(data, "golden_queries.fa")
+    targets = os.path.join(data, "golden_targets.fa")
+    idx = str(tmp_path / "idx7")
+    assert main(["createindex", targets, idx, "--k", "7"]) == 0
+    sidecar = os.path.join(idx, "_ps_meta", "part-00000.parquet")
+    with open(sidecar, "rb") as fh:
+        before = fh.read()
+
+    def write_data_then_die(index, path, *args, **kwargs):
+        index.write.mode("overwrite").parquet(path)
+        raise RuntimeError("killed before the sidecar")
+
+    monkeypatch.setattr(kmer_index, "write_kmer_index", write_data_then_die)
+    with pytest.raises(RuntimeError, match="killed before the sidecar"):
+        main(["createindex", targets, idx])
+    with open(sidecar, "rb") as fh:
+        assert fh.read() == before
+    assert sorted(os.listdir(tmp_path)) == ["idx7"]
+    with pytest.raises(ValueError, match="k=7"):
+        main(["searchindex", queries, idx, targets, str(tmp_path / "out9")])

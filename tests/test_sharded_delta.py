@@ -17,8 +17,6 @@ from __future__ import annotations
 import os
 
 import pytest
-# round 11: whole-module slow tier — see pyproject [tool.pytest.ini_options]
-pytestmark = pytest.mark.slow
 
 from pyspark.sql import functions as F
 

@@ -156,3 +156,23 @@ def test_search_index_path_honors_tmpdir_and_corpus(tmp_path, monkeypatch):
     assert os.path.dirname(first) == str(tmp)
     docs.write_bytes(b"rewritten")
     assert _search_index_path(str(sf)) != first
+
+
+def test_build_staged_refuses_a_staging_directory(tmp_path):
+    """A staging directory staged again gets a nested
+    ``.build<pid>.build<pid>`` name that neither the TTL sweep nor a
+    dead-pid reaper matches, so a killed build would leak it forever:
+    ``build_staged`` refuses such a path before it creates anything."""
+    import pytest
+
+    from petasearch_spark.storage import build_staged
+
+    calls = []
+    for path in (tmp_path / "x.build123", tmp_path / "ps_idx_0123456789ab.build7"):
+        with pytest.raises(ValueError, match="staging directory"):
+            build_staged(str(path), calls.append)
+    assert calls == [] and os.listdir(tmp_path) == []
+    # a name that merely contains ".build" is not staging
+    assert build_staged(str(tmp_path / "x.build123.v2"), calls.append).endswith(
+        f"x.build123.v2.build{os.getpid()}"
+    )
