@@ -426,6 +426,9 @@ def main(argv: list[str] | None = None) -> int:
     from petasearch_spark.sources.targetlist import load_target
     from petasearch_spark.storage import recover, swap_in
 
+    if args.cmd in ("appendindex", "compactindex", "searchindex"):
+        recover(args.index_dir)  # undo a (re)build killed between its two renames
+
     if args.cmd == "createdb":
         # the reference's convert2sradb: ingest once, scan many times.
         # Parquet + ZSTD replaces the 5-bit packed SRA codec (SURVEY §1.4).
@@ -528,7 +531,6 @@ def main(argv: list[str] | None = None) -> int:
         from petasearch_spark.operators.kmer_index import is_sharded_layout, read_kmer_index_meta
         from petasearch_spark.plans.search import SearchKnobs, check_index_params
 
-        recover(args.index_dir)  # a createindex killed between its two renames
         if is_sharded_layout(args.index_dir):
             # interactive layout: index scan AND sequence fetch pruned to
             # the query; e-values from the store's corpus-total sidecar

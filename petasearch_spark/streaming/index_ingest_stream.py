@@ -35,10 +35,11 @@ scheduled maintenance job that bounds generation count, like the IVF
 recluster loop (operators/ivf.py).
 
 Publication: the registered twin runs the whole lifecycle (base write,
-then every batch's append) inside the one staging directory that
-storage.staged_cache hands its build, and nothing in it publishes by
-itself, so the grown layout appears under its cache key whole or not at
-all, and a killed build leaves only debris the cache's reaper knows.
+then every batch's append) inside the staging directory that
+storage.staged_cache hands its build. The base write publishes nothing
+of its own, so the grown layout appears under its cache key whole or
+not at all, and a killed build leaves only ``<key>.build<pid>``, which
+the next claim reaps.
 """
 
 from __future__ import annotations

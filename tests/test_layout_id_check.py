@@ -3,9 +3,10 @@ already live in the layout is refused, naming the generation that holds
 them, whether the clash is with the base, with a delta, or one id among
 more than 2,000 new ones; a delta or a base that repeats an id is
 refused; a rebuilt root keeps none of its old generations; the store
-files stay ``seq_id``-sorted and the index files ``kmer``-sorted; neither an append's admission nor a probe's
-index read costs more Spark work as generations accumulate; and a bench
-cache's layout is built inside one reapable staging directory."""
+files stay ``seq_id``-sorted and the index files ``kmer``-sorted;
+neither an append's admission nor a probe's index read costs more Spark
+work as generations accumulate; and a bench cache's layout is built
+inside one reapable staging directory."""
 
 from __future__ import annotations
 

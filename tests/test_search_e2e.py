@@ -275,7 +275,8 @@ def test_a_failed_range_createindex_keeps_the_old_index(spark, tmp_path, monkeyp
     before its sidecar used to leave, in place of the old index, a
     sidecar-less one that searchindex read unchecked with exit 0. The
     rebuild is staged and swapped in, so the old index and its k=7
-    sidecar survive, and a k=9 search is still refused."""
+    sidecar survive, and a k=9 search is still refused; a rebuild killed
+    between its two renames is undone by the next search."""
     import os
 
     from petasearch_spark.cli import main
@@ -302,3 +303,9 @@ def test_a_failed_range_createindex_keeps_the_old_index(spark, tmp_path, monkeyp
     assert sorted(os.listdir(tmp_path)) == ["idx7"]
     with pytest.raises(ValueError, match="k=7"):
         main(["searchindex", queries, idx, targets, str(tmp_path / "out9")])
+
+    # a rebuild killed between its two renames left the index only at
+    # idx7.old<pid>: the next searchindex restores it first
+    os.rename(idx, f"{idx}.old2000000000")  # a pid beyond pid_max
+    assert main(["searchindex", queries, idx, targets, str(tmp_path / "out7"), "--k", "7"]) == 0
+    assert sorted(os.listdir(tmp_path)) == ["idx7", "out7"]
